@@ -6,7 +6,9 @@ src/main/kotlin/app/batch/Validator.kt:34-70.
 Spark-first: the schemaless JSON work (decrypt -> businessAudit lift ->
 recursive date wrap -> id normalisation) cannot be expressed with typed
 column functions, so it runs as ONE pandas UDF — a single Python/Arrow
-round-trip per batch instead of four chained UDFs. The data-key cache is
+round-trip per batch instead of four chained UDFs. The batch export job
+runs the same kernel (_process_batch) inside its one-pass export stage
+(sinks.snapshot.export_envelopes) instead of this UDF. The data-key cache is
 per executor (functions/crypto.py), mirroring HttpKeyService's
 decryptedKeyCache so key-service traffic is O(distinct keks).
 Failures don't fail the job: the struct carries an `error` field and the

@@ -482,12 +482,14 @@ def _batched_leaf_purge(
     # pushes down into the parquet scan (recovery's cost is scheduling
     # round-trips, not bytes — guide §6). Exact anti-join semantics:
     # a NULL store key never matches the join and must survive the
-    # filter too. Large (delta-sized) purges keep the broadcast
-    # anti-join — a million-term isin would bloat the plan, the
-    # opposite trade.
+    # filter too, and a NULL purge key matches nothing — it is dropped
+    # from the list, since `k NOT IN (.., NULL)` is NULL for every k
+    # and would purge every non-NULL row. Large (delta-sized) purges
+    # keep the broadcast anti-join — a million-term isin would bloat
+    # the plan, the opposite trade.
     purge_vals = purge.select(key).distinct().limit(_ISIN_PURGE_MAX + 1).collect()
     if len(purge_vals) <= _ISIN_PURGE_MAX:
-        vals = [r[0] for r in purge_vals]
+        vals = [r[0] for r in purge_vals if r[0] is not None]
         cleaned = store.filter(
             F.col(key).isNull() | ~F.col(key).isin(vals)
         )

@@ -140,24 +140,27 @@ def run_topic_export(
     blocked_topics: tuple[str, ...] = (),
     export_date: str = "",
 ) -> RunReport:
-    """One topic end-to-end: pipeline -> encrypted snapshot + manifest
-    sinks -> status increments -> terminal status -> message payloads.
+    """One topic end-to-end: envelope scan -> one export pass writing the
+    encrypted snapshots + manifests -> status increments -> terminal
+    status -> message payloads.
 
-    The §3.1 lifecycle as driver code around ONE DataFrame action: the
-    sink write is the only job, and the read/valid/failed counters ride
-    it via observe() (no second scan — at 100 TB a metrics-only pass
+    The §3.1 lifecycle as driver code around ONE DataFrame action and
+    two Python stages at most (a Python source's read, then the export
+    pass): pipeline.scan_envelopes builds scan -> envelope parse ->
+    observe(records_read, records_valid) -> valid filter, and
+    sinks.snapshot.export_envelopes runs decrypt -> normalise ->
+    sanitise -> transform -> rolling encrypted writer per partition,
+    the reference's chunk loop. records_read/records_valid ride the
+    action via observe(); records_failed/bytes_normalised come back
+    with the file rows (no second scan — at 100 TB a metrics-only pass
     would cost as much as the export). Blocked topics short-circuit
     before any job, exactly like the reference's pre-flight gate."""
-    from .pipeline import BlockedTopicError, export_topic
-    from .sinks.snapshot import write_encrypted_snapshots
+    from .pipeline import BlockedTopicError, scan_envelopes
+    from .sinks.snapshot import export_envelopes
 
     try:
-        res = export_topic(
-            cells,
-            topic,
-            snapshot_type=snapshot_type,
-            scan_time_range=scan_time_range,
-            blocked_topics=blocked_topics,
+        valid, _, observation = scan_envelopes(
+            cells, topic, scan_time_range=scan_time_range, blocked_topics=blocked_topics
         )
     except BlockedTopicError:
         status_service.set_status(topic, CollectionStatus.BLOCKED_TOPIC)
@@ -175,16 +178,14 @@ def run_topic_export(
         )
 
     try:
-        files = write_encrypted_snapshots(res.extra["sink_frame"], sink_cfg)
+        files, counters = export_envelopes(valid, topic, sink_cfg)
     except Exception:
         status_service.set_status(topic, CollectionStatus.EXPORT_FAILED)
         raise
     status_service.increment_exported_count(topic, len(files))
     status_service.set_status(topic, CollectionStatus.EXPORTED)
 
-    obs = res.extra["observations"]
-    metrics = {**obs["parsed"].get, **obs["normalised"].get}
-    metrics["files_exported"] = len(files)
+    metrics = {**observation.get, **counters, "files_exported": len(files)}
 
     messages = [
         snapshot_sender_message(

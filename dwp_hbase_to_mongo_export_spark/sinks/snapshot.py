@@ -10,17 +10,26 @@ metadata (iv, ciphertext of data key, kek id); object key
 {prefix}/{topic}-{start:03d}-{stop:03d}-{seq:06d}.txt.{ext}.enc and a
 matching manifest CSV per file (DomainClasses.kt:83-88).
 
-Two writers:
+Writers:
 - write_snapshot_text: the pure-Spark path (codegen'd, no Python) for
   when byte-exact rolling and envelope encryption are not required —
   this is what you'd run at 100 TB with sizes controlled by
   maxRecordsPerFile, letting the committer handle naming/atomicity.
-- write_encrypted_snapshots: faithful reference semantics via
-  mapPartitions — each partition streams its records through
+- write_encrypted_snapshots: faithful reference semantics over an
+  already-normalised record frame (pipeline.export_topic's sink_frame)
+  via mapInPandas — each partition streams its records through
   compress+encrypt with byte-exact rolls; returns per-file metadata
-  rows to the driver (for status counts / notifications). The data key
-  is fetched ONCE on the driver and broadcast (the "single datakey per
-  collection" invariant, UberTestSpec.kt:144-154).
+  rows to the driver (for status counts / notifications).
+- export_envelopes: the batch export job's stage (run_topic_export) —
+  the same writer fed straight from the decrypt -> normalise ->
+  sanitise -> transform work, in ONE Python pass per partition over
+  the valid envelope frame, so the records never go back to the JVM
+  between normalising and writing.
+Both encrypted stages share one per-partition _RollingWriter (roll,
+compress, encrypt, manifest lines, sidecars) and write identical bytes
+for the same records and partitioning. The data key is fetched ONCE on
+the driver and shipped with the task closure (the "single datakey per
+collection" invariant, UberTestSpec.kt:144-154).
 """
 
 from __future__ import annotations
@@ -28,8 +37,10 @@ from __future__ import annotations
 import base64
 import bz2 as _bz2
 import gzip as _gzip
+import hashlib
 import json
 import os
+import secrets
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
@@ -73,7 +84,9 @@ from ..functions import lz4block as _lz4block_py
 
 _COMPRESSORS = {
     "bz2": (lambda b: _bz2.compress(b), "bz2"),
-    "gz": (lambda b: _gzip.compress(b), "gz"),
+    # mtime=0, like commons-compress's GzipParameters default: the
+    # header carries no wall clock, so the same records give the same bytes
+    "gz": (lambda b: _gzip.compress(b, mtime=0), "gz"),
     "lz4": ((lambda b: _lz4.compress(b)) if HAVE_LZ4 else None, "lz4"),
     "lz4_block": (
         (lambda b: _lz4_block.compress(b, store_size=False))
@@ -153,6 +166,108 @@ def _csv_escape(v: str) -> str:
     return v
 
 
+FILE_META_ROW = Row(*(f.name for f in FILE_META_SCHEMA))
+
+
+class _RollingWriter:
+    """One partition's size-rolled snapshot stream: the roll -> compress
+    -> AES-CTR -> write loop, its manifest lines and its metadata
+    sidecars. Both sink stages (write_encrypted_snapshots and
+    export_envelopes) feed records into it, one instance per task;
+    files are named after the task's partition."""
+
+    def __init__(self, cfg: SnapshotSinkConfig):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        self.cfg = cfg
+        self.pid = pid
+        self.compress, ext = _COMPRESSORS[cfg.compression]
+        self.suffix = f".txt.{ext}.enc" if cfg.data_key_b64 else f".txt.{ext}"
+        self.start, self.stop = (cfg.partition_ranges or {}).get(pid, (pid, pid))
+        self.seq = 0
+        self.lines: list[bytes] = []
+        self.manifest_lines: list[str] = []
+        self.nbytes = 0
+        self.metas: list[tuple] = []
+
+    def add(self, db_object: str, manifest_fields) -> None:
+        """One record: its db_object line and its MANIFEST_COLUMNS values."""
+        # UTF-8 BYTE length, not char count — the reference sizes
+        # batches on the encoded record (S3StreamingWriter.kt:78-80)
+        line = (db_object + "\n").encode("utf-8")
+        # roll BEFORE writing when the next record would overflow
+        if self.lines and self.nbytes + len(line) > self.cfg.max_batch_bytes:
+            self._flush()
+        self.lines.append(line)
+        self.nbytes += len(line)
+        self.manifest_lines.append(
+            "|".join(_csv_escape(str(v) if v is not None else "") for v in manifest_fields) + "\n"
+        )
+
+    def close(self) -> list[tuple]:
+        """Flush the open file; the FILE_META_SCHEMA tuples of every file."""
+        if self.lines:
+            self._flush()
+        return self.metas
+
+    def _flush(self) -> None:
+        cfg = self.cfg
+        stem = f"{cfg.topic}-{self.start:03d}-{self.stop:03d}-{self.seq:06d}"
+        object_key, manifest_key = stem + self.suffix, stem + ".csv"
+        comp = self.compress(b"".join(self.lines))
+        iv_b64 = ""
+        if cfg.data_key_b64:
+            iv = (
+                hashlib.sha256(f"{cfg.topic}:{self.pid}:{self.seq}".encode()).digest()[:16]
+                if cfg.deterministic_iv
+                else secrets.token_bytes(16)
+            )
+            payload = base64.b64decode(aes_ctr_encrypt(cfg.data_key_b64, iv, comp))
+            iv_b64 = base64.b64encode(iv).decode("ascii")
+        else:
+            payload = comp
+        with open(os.path.join(cfg.output_dir, object_key), "wb") as f:
+            f.write(payload)
+        with open(os.path.join(cfg.output_dir, manifest_key), "w", encoding="utf-8") as f:
+            f.write("".join(self.manifest_lines))
+        with open(os.path.join(cfg.output_dir, object_key + ".metadata.json"), "w") as f:
+            # iv/ciphertext/kek mirror the reference's S3 user metadata
+            # (S3ObjectServiceImpl.kt:24-47); batch_size_bytes is the
+            # UNCOMPRESSED batch size — the raw-block-LZ4 reader needs it
+            # as its decompress size hint (no size header in that format)
+            json.dump(
+                {
+                    "iv": iv_b64,
+                    "ciphertext": cfg.encrypted_data_key_b64,
+                    "dataKeyEncryptionKeyId": cfg.kek_id,
+                    "batch_size_bytes": self.nbytes,
+                },
+                f,
+            )
+        self.metas.append(
+            (
+                object_key,
+                manifest_key,
+                len(self.lines),
+                self.nbytes,
+                len(payload),
+                iv_b64,
+                cfg.encrypted_data_key_b64,
+                cfg.kek_id,
+            )
+        )
+        self.seq += 1
+        self.lines, self.manifest_lines, self.nbytes = [], [], 0
+
+
+def _open_sink(cfg: SnapshotSinkConfig) -> None:
+    """Driver-side checks before any task writes."""
+    if _COMPRESSORS[cfg.compression][0] is None:
+        raise ValueError(f"compression codec {cfg.compression} unavailable")
+    os.makedirs(cfg.output_dir, exist_ok=True)
+
+
 def write_encrypted_snapshots(records: DataFrame, cfg: SnapshotSinkConfig) -> list[Row]:
     """records must carry db_object + the manifest columns
     (id/timestamp/db/collection/source/externalOuterSource/originalId/
@@ -163,77 +278,7 @@ def write_encrypted_snapshots(records: DataFrame, cfg: SnapshotSinkConfig) -> li
     cfg.output_dir; returns collected per-file metadata (driver-side
     bookkeeping — the incrementExportedCount / notifySnapshotSender hook).
     """
-    import hashlib
-    import secrets
-
-    compress, ext = _COMPRESSORS[cfg.compression][0], _COMPRESSORS[cfg.compression][1]
-    if compress is None:
-        raise ValueError(f"compression codec {cfg.compression} unavailable")
-    out_dir = cfg.output_dir
-    topic = cfg.topic
-    max_bytes = cfg.max_batch_bytes
-    data_key = cfg.data_key_b64
-    enc_key = cfg.encrypted_data_key_b64
-    kek = cfg.kek_id
-    det_iv = cfg.deterministic_iv
-    ranges = cfg.partition_ranges
-    suffix = f".txt.{ext}.enc" if data_key else f".txt.{ext}"
-
-    os.makedirs(out_dir, exist_ok=True)
-    mcols = MANIFEST_COLUMNS
-
-    def flush(pid: int, seq: int, lines: list[bytes], manifest_lines: list[str], nbytes: int):
-        body = b"".join(lines)
-        comp = compress(body)
-        start, stop = (ranges or {}).get(pid, (pid, pid))
-        meta = {
-            "object_key": f"{topic}-{start:03d}-{stop:03d}-{seq:06d}{suffix}",
-            "manifest_key": f"{topic}-{start:03d}-{stop:03d}-{seq:06d}.csv",
-            "records_in_batch": len(lines),
-            "batch_size_bytes": nbytes,
-            "iv": "",
-            "ciphertext_key": enc_key,
-            "kek_id": kek,
-        }
-        if data_key:
-            iv = (
-                hashlib.sha256(f"{topic}:{pid}:{seq}".encode()).digest()[:16]
-                if det_iv
-                else secrets.token_bytes(16)
-            )
-            payload = base64.b64decode(aes_ctr_encrypt(data_key, iv, comp))
-            meta["iv"] = base64.b64encode(iv).decode("ascii")
-        else:
-            payload = comp
-        meta["data_size_bytes"] = len(payload)
-        with open(os.path.join(out_dir, meta["object_key"]), "wb") as f:
-            f.write(payload)
-        with open(os.path.join(out_dir, meta["manifest_key"]), "w", encoding="utf-8") as f:
-            f.write("".join(manifest_lines))
-        with open(os.path.join(out_dir, meta["object_key"] + ".metadata.json"), "w") as f:
-            # iv/ciphertext/kek mirror the reference's S3 user metadata
-            # (S3ObjectServiceImpl.kt:24-47); batch_size_bytes is the
-            # UNCOMPRESSED batch size — the raw-block-LZ4 reader needs it
-            # as its decompress size hint (no size header in that format)
-            json.dump(
-                {
-                    "iv": meta["iv"],
-                    "ciphertext": enc_key,
-                    "dataKeyEncryptionKeyId": kek,
-                    "batch_size_bytes": meta["batch_size_bytes"],
-                },
-                f,
-            )
-        return Row(
-            object_key=meta["object_key"],
-            manifest_key=meta["manifest_key"],
-            records_in_batch=meta["records_in_batch"],
-            batch_size_bytes=meta["batch_size_bytes"],
-            data_size_bytes=meta["data_size_bytes"],
-            iv=meta["iv"],
-            ciphertext_key=enc_key,
-            kek_id=kek,
-        )
+    _open_sink(cfg)
 
     def write_partition(batches):
         # mapInPandas (not .rdd.mapPartitions): the write stays a DataFrame
@@ -241,37 +286,93 @@ def write_encrypted_snapshots(records: DataFrame, cfg: SnapshotSinkConfig) -> li
         # RDD action executes outside SQL-execution tracking and would leave
         # Observation.get blocked forever.
         import pandas as _pd
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        seq = 0
-        lines: list[bytes] = []
-        manifest_lines: list[str] = []
-        nbytes = 0
-        metas: list = []
+        writer = _RollingWriter(cfg)
         for pdf in batches:
-            for row in pdf.to_dict("records"):
-                # UTF-8 BYTE length, not char count — the reference sizes
-                # batches on the encoded record (S3StreamingWriter.kt:78-80)
-                line = (row["db_object"] + "\n").encode("utf-8")
-                # roll BEFORE writing when the next record would overflow
-                if lines and nbytes + len(line) > max_bytes:
-                    metas.append(flush(pid, seq, lines, manifest_lines, nbytes))
-                    seq += 1
-                    lines, manifest_lines, nbytes = [], [], 0
-                lines.append(line)
-                nbytes += len(line)
-                manifest_lines.append(
-                    "|".join(
-                        _csv_escape(str(row[c]) if row[c] is not None else "") for c in mcols
-                    )
-                    + "\n"
-                )
-        if lines:
-            metas.append(flush(pid, seq, lines, manifest_lines, nbytes))
-        yield _pd.DataFrame([m.asDict() for m in metas], columns=[f.name for f in FILE_META_SCHEMA])
+            for db_object, *fields in zip(pdf["db_object"], *(pdf[c] for c in MANIFEST_COLUMNS)):
+                writer.add(db_object, fields)
+        yield _pd.DataFrame(writer.close(), columns=list(FILE_META_ROW))
 
     return records.mapInPandas(write_partition, FILE_META_SCHEMA).collect()
+
+
+EXPORT_SCHEMA = T.StructType(
+    FILE_META_SCHEMA.fields
+    + [
+        T.StructField("records_failed", T.LongType()),
+        T.StructField("bytes_normalised", T.LongType()),
+    ]
+)
+
+
+def export_envelopes(
+    valid: DataFrame, topic: str, cfg: SnapshotSinkConfig
+) -> tuple[list[Row], dict]:
+    """The export's per-record work as ONE Python pass per partition —
+    the reference's chunk loop (CompositeItemProcessor -> S3StreamingWriter,
+    JobConfiguration.kt:49-76) as one mapInPandas over the VALID envelope
+    frame (operators.envelope.split_valid's first half): per Arrow batch,
+    decrypt + normalise (operators.decryption._process_batch), then
+    sanitise and the data.equality wrap (functions.record_norm), then
+    straight into the partition's rolling writer. Undecryptable and
+    invalid payloads are counted, not written.
+
+    Writes exactly what write_encrypted_snapshots writes for
+    pipeline.export_topic's sink frame over the same partitioning, with
+    one Python stage fewer. Returns (per-file metadata rows, {"records_failed",
+    "bytes_normalised"}): each partition ends with one counter row
+    (object_key NULL) and the driver sums the counters."""
+    from ..functions.record_norm import EQUALITY_TOPIC, equality_wrap, sanitise
+    from ..operators.decryption import _process_batch
+
+    _open_sink(cfg)
+    wrap = topic == EQUALITY_TOPIC
+
+    def export_partition(batches):
+        import pandas as _pd
+
+        writer = _RollingWriter(cfg)
+        failed = nbytes = 0
+        for pdf in batches:
+            norm = _process_batch(
+                pdf["db_object_enc"],
+                pdf["kek_id"],
+                pdf["iv"],
+                pdf["encrypted_key"],
+                pdf["row_key"],
+                pdf["db"],
+                pdf["collection"],
+                pdf["message_last_modified"],
+            )
+            for db_object, mid, orig_id, err, ts, db, coll, outer, inner in zip(
+                norm["db_object"],
+                norm["manifest_id"],
+                norm["manifest_original_id"],
+                norm["error"],
+                pdf["ts"],
+                pdf["db"],
+                pdf["collection"],
+                pdf["outer_type"],
+                pdf["inner_type"],
+            ):
+                if err is not None:
+                    failed += 1
+                    continue
+                nbytes += len(db_object)
+                line = sanitise(db_object, db, coll)
+                if wrap:
+                    line = equality_wrap(line, inner or "")
+                # MANIFEST_COLUMNS order (operators.manifest.manifest_records)
+                writer.add(line, (mid, ts, db, coll, "EXPORT", outer, orig_id, inner))
+        # integer columns stay NULL-free (a None would turn them float)
+        rows = [m + (0, 0) for m in writer.close()]
+        rows.append((None, None, 0, 0, 0, None, None, None, failed, nbytes))
+        yield _pd.DataFrame(rows, columns=EXPORT_SCHEMA.fieldNames())
+
+    rows = valid.mapInPandas(export_partition, EXPORT_SCHEMA).collect()
+    files = [FILE_META_ROW(*r[: len(FILE_META_ROW)]) for r in rows if r.object_key is not None]
+    counters = {c: sum(r[c] for r in rows) for c in ("records_failed", "bytes_normalised")}
+    return files, counters
 
 
 def read_encrypted_snapshots(

@@ -367,3 +367,24 @@ def test_pq_legacy_marker_without_ids_record_raises(spark, emb, tmp_path):
         f.write(json.dumps({"kind": "pq", "id_col": "vec_id"}))
     with pytest.raises(ValueError, match="ambiguous"):
         similarity.recover_pq_index_append(spark, path)
+
+
+@pytest.mark.parametrize("isin_max", [None, 0], ids=["not-in", "anti-join"])
+def test_batched_leaf_purge_null_purge_key(spark, tmp_path, monkeypatch, isin_max):
+    """A NULL in the purge list matches nothing: purging [1, NULL] from
+    store keys {1, 2, 3, NULL} keeps {2, 3, NULL} on both purge
+    branches — the inlined NOT-IN predicate (small lists) and the
+    broadcast anti-join (``_ISIN_PURGE_MAX = 0`` forces it)."""
+    if isin_max is not None:
+        monkeypatch.setattr(textindex, "_ISIN_PURGE_MAX", isin_max)
+    sdir = str(tmp_path / "store")
+    spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 0), (3, "c", 1), (None, "d", 1)],
+        "id long, v string, part int",
+    ).write.partitionBy("part").parquet(sdir)
+    purge = spark.createDataFrame([(1,), (None,)], "id long")
+    leaves = textindex._batched_leaf_purge(spark, sdir, "part=", purge, "id")
+    assert leaves == ["part=0", "part=1"]
+    kept = spark.read.parquet(sdir)
+    assert sorted(r.id for r in kept.collect() if r.id is not None) == [2, 3]
+    assert kept.filter(F.col("id").isNull()).count() == 1

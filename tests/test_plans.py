@@ -756,3 +756,47 @@ def test_scd2_fold_last_event_ts_maintains_the_guard_state(spark):
     b3 = ev([(1, "B", "2024-01-04 00:00:00", 4)])
     merged = scd2.merge_batch(changes, b3, validate=True, last_event_ts=state)
     assert merged.filter(F.col("is_current") == 1).count() == 1
+
+
+def test_run_topic_export_one_action_one_python_stage(spark, tmp_path, monkeypatch):
+    """run_topic_export runs ONE Spark job whose executed plan has
+    exactly one MapInPandas above the scan and no ArrowEvalPython /
+    BatchEvalPython: the decrypt -> normalise -> sanitise -> sink work
+    is one Python pass, and a second Python hop cannot creep back."""
+    from dwp_hbase_to_mongo_export_spark.orchestration import (
+        CollectionStatus,
+        ExportStatusService,
+        run_topic_export,
+    )
+    from dwp_hbase_to_mongo_export_spark.sinks.snapshot import SnapshotSinkConfig
+    from dwp_hbase_to_mongo_export_spark.sources.hbase_cells import DATA_KEY_B64, fixture_cells
+
+    topic = "db.database.collection"
+    cfg = SnapshotSinkConfig(
+        output_dir=str(tmp_path), topic=topic, compression="gz",
+        data_key_b64=DATA_KEY_B64, encrypted_data_key_b64="e", kek_id="k",
+    )
+    cells = fixture_cells(spark, n=20)
+    actions = []
+    frame_cls = type(cells)  # the session's concrete DataFrame class
+    collect = frame_cls.collect
+
+    def recording_collect(self):
+        actions.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    sc = spark.sparkContext
+    group = f"plan-guard-{id(cells)}"
+    sc.setJobGroup(group, "run_topic_export plan guard")
+    try:
+        report = run_topic_export(cells, topic, cfg, ExportStatusService("plan-guard"))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert report.status == CollectionStatus.EXPORTED and report.metrics["records_valid"] == 20
+    assert len(actions) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = actions[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

@@ -25,7 +25,10 @@ from dwp_hbase_to_mongo_export_spark.functions.jsonfns import (
     sort_json_by_key,
     strip_key_hash,
 )
-from dwp_hbase_to_mongo_export_spark.functions.record_norm import sanitise
+from dwp_hbase_to_mongo_export_spark.functions.record_norm import (
+    SANITISE_SCOPED_COLLECTIONS,
+    sanitise,
+)
 
 
 _dt = st.datetimes(
@@ -150,6 +153,45 @@ def test_sanitise_invariants(s):
     assert "$" not in out
     assert "\\u0000" not in out
     assert "_archivedDateTime" not in out and "_archived" not in out
+
+
+# Pieces a serialised payload can put next to each other: raw and
+# escaped CR/LF/pipe, escaped backslashes, the literal \u0000 text and a
+# real NUL, '$', the archived names, quotes and non-ASCII text.
+_SANITISE_PIECES = [
+    "\r", "\n", "\\r", "\\n", "\\|", "\\\\r", "\\\\n", "\\", "|", "r", "n",
+    "$", "$oid", "\\u0000", "\u0000", "_archived", "_archivedDateTime", "_removed",
+    '"', "'", '\\"', ":", ",", "{", "}", "a", " ", "é", "日本", "\U0001F600",
+]
+_SANITISE_DB_COLLS = sorted(SANITISE_SCOPED_COLLECTIONS) + [("db", "coll"), ("core", "claimant")]
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.lists(st.sampled_from(_SANITISE_PIECES), max_size=12).map("".join),
+            st.sampled_from(_SANITISE_DB_COLLS),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+@settings(max_examples=25, deadline=None)
+def test_sanitise_python_equals_jvm(spark, cases):
+    """record_norm.sanitise (the export pass's Python sanitise) equals
+    operators.sanitisation.sanitise_column (the JVM expression the
+    DataFrame path uses), for scoped and unscoped (db, collection)."""
+    from pyspark.sql import functions as F
+
+    from dwp_hbase_to_mongo_export_spark.operators.sanitisation import sanitise_column
+
+    df = spark.createDataFrame(
+        [(i, s, db, coll) for i, (s, (db, coll)) in enumerate(cases)],
+        "i int, s string, db string, coll string",
+    )
+    out = df.select("i", sanitise_column(F.col("s"), F.col("db"), F.col("coll")).alias("out"))
+    jvm = {r.i: r.out for r in out.collect()}
+    assert jvm == {i: sanitise(s, db, coll) for i, (s, (db, coll)) in enumerate(cases)}
 
 
 # --- wrap -> sanitise -> unwrap identity -----------------------------------

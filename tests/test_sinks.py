@@ -891,3 +891,117 @@ def test_snapshot_sink_bench_surface_roundtrip_aligns(spark, sf_dir):
     n_orders = load_table(spark, sf_dir, "orders").count()
     assert row["n_records"] == n_orders
     assert row["n_files"] == row["n_files_written"] > 1  # rolling happened
+
+
+# --- the fused export pass against the DataFrame path ----------------------
+
+
+def _mixed_payload(i: int) -> tuple[str, str, str]:
+    """(db, collection, payload) cycling through a plain record, a
+    businessAudit record, a scoped-sanitise record and a payload that
+    decrypts but is not JSON."""
+    kind = i % 4
+    if kind == 0:
+        return "core", "claimant", json.dumps(
+            {
+                "_id": {"record_id": f"{i:05d}"},
+                "createdDateTime": "2015-03-20T12:23:25.183Z",
+                "_lastModifiedDateTime": "2018-12-14T15:01:02.000+0000",
+                "_archivedDateTime": "2016-01-01T00:00:00.000Z",
+                "_removedDateTime": "2017-01-01T00:00:00.000Z",
+                "note": f"cost $5, \"q\" a\r\nb \u0000 é 日本 {i}",
+            }
+        )
+    if kind == 1:
+        return "data", "businessAudit", json.dumps(
+            {"auditType": "AUDIT", "context": {"note": f"line\nbreak ${i}", "_archived": "x"}}
+        )
+    if kind == 2:
+        return "core", "healthAndDisabilityDeclaration", json.dumps(
+            {"_id": f"{i:05d}", "text": "a\r\nb\\rc|d", "nested": [{"x": "y\n"}]}
+        )
+    return "core", "claimant", "not json"
+
+
+def _mixed_cells(spark, topic: str, n: int = 64, quarantine_all: bool = False):
+    """Cells over 3 input partitions: every 10th envelope from the 4th
+    lacks dbObject (quarantined), every 10th from the 8th carries a
+    5-byte IV (undecryptable)."""
+    from dwp_hbase_to_mongo_export_spark.schemas import CELLS_SCHEMA
+    from dwp_hbase_to_mongo_export_spark.sources.hbase_cells import envelope
+
+    rows = []
+    for i in range(n):
+        key, value = envelope(i, *_mixed_payload(i))
+        env = json.loads(value)
+        if quarantine_all or i % 10 == 3:
+            del env["message"]["dbObject"]
+        elif i % 10 == 7:
+            env["message"]["encryption"]["initialisationVector"] = base64.b64encode(b"short").decode()
+        rows.append((topic, key, 1000 + i, json.dumps(env)))
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), CELLS_SCHEMA)
+
+
+def _sink_cfg(out_dir, topic: str) -> SnapshotSinkConfig:
+    return SnapshotSinkConfig(
+        output_dir=str(out_dir), topic=topic, max_batch_bytes=700, compression="gz",
+        data_key_b64=DATA_KEY_B64, encrypted_data_key_b64="enc-key-b64",
+        kek_id="local-kek-1", deterministic_iv=True,
+    )
+
+
+def _dir_bytes(d) -> dict:
+    return {p.name: p.read_bytes() for p in sorted(d.iterdir())}
+
+
+@pytest.mark.parametrize("topic", ["db.core.healthAndDisabilityDeclaration", "data.equality"])
+def test_run_topic_export_matches_dataframe_path(spark, tmp_path, topic):
+    """run_topic_export's one-pass export writes byte-identical object
+    files, manifests and .metadata.json sidecars to
+    write_encrypted_snapshots over export_topic's sink frame (same input
+    partitioning, deterministic IVs), and reports the same counters."""
+    from dwp_hbase_to_mongo_export_spark.orchestration import run_topic_export
+
+    cells = _mixed_cells(spark, topic)
+    res = export_topic(cells, topic)
+    metas = write_encrypted_snapshots(res.extra["sink_frame"], _sink_cfg(tmp_path / "df", topic))
+    obs = res.extra["observations"]
+    want = {**obs["parsed"].get, **obs["normalised"].get, "files_exported": len(metas)}
+
+    report = run_topic_export(cells, topic, _sink_cfg(tmp_path / "fused", topic), ExportStatusService("parity"))
+    assert report.status == CS.EXPORTED
+    assert report.metrics == want
+    assert sorted(report.files) == sorted(metas)
+    assert _dir_bytes(tmp_path / "fused") == _dir_bytes(tmp_path / "df")
+
+    # the fixture exercises every branch it is meant to
+    assert want["records_read"] == 64 and want["records_valid"] == 57
+    assert want["records_failed"] == 6 + 9  # 5-byte IVs + the other non-JSON payloads
+    assert len({m.object_key.split("-")[-2] for m in metas}) == 3  # files from 3 partitions
+    assert len(metas) > 3  # the 700-byte bound rolled
+    rows = res.extra["sink_frame"].collect()
+    lines = [r.db_object for r in rows]
+    assert any("AUDIT_EVENT" in line for line in lines)
+    assert not any("$" in line or "_archived" in line for line in lines)
+    scoped = [r.db_object for r in rows if r.collection == "healthAndDisabilityDeclaration"]
+    assert scoped and all('"text":"ab' in line for line in scoped)  # CR/LF escapes stripped
+    assert any("\\r" in line for line in lines)  # unscoped collections keep it
+    assert all(line.startswith('{"message":') for line in lines) == (topic == "data.equality")
+
+
+def test_run_topic_export_all_quarantined(spark, tmp_path):
+    """A topic whose every envelope is quarantined exports zero files,
+    reports counters of 0 (not None) and sends the no-files message."""
+    from dwp_hbase_to_mongo_export_spark.orchestration import run_topic_export
+
+    topic = "db.core.claimant"
+    report = run_topic_export(
+        _mixed_cells(spark, topic, quarantine_all=True), topic, _sink_cfg(tmp_path, topic),
+        ExportStatusService("all-quarantined"),
+    )
+    assert report.status == CS.EXPORTED and report.files == [] and os.listdir(tmp_path) == []
+    assert report.metrics == {
+        "records_read": 64, "records_valid": 0, "records_failed": 0,
+        "bytes_normalised": 0, "files_exported": 0,
+    }
+    assert [json.loads(m)["files_exported"] for m in report.messages if '"files_exported"' in m] == [0]

@@ -428,86 +428,113 @@ _register_extra_modules()
 # the documented code-changed overrides pulled ahead of staleness order
 # (tests/test_catalog_lint.py exempts exactly these from the
 # no-fresher-than-a-staler-outsider rule).
-DRIVER_WINDOW_ROUND = 12
+DRIVER_WINDOW_ROUND = 13
 DRIVER_WINDOW_CHANGED = [
-    # rewritten in round 11 (a8478b0: span-family shared helpers;
-    # 8e008bb: spread_scan'd validation/reference queries and the
-    # date chain's get_json_object->from_json parse) — their last
-    # driver-green rows predate the rewrite, so they lead the r12
-    # window per the round-11 verdict #2.
+    # rewritten in round 12 (winnowing fp-keyed regroup, PageRank's
+    # persisted src-partitioned edges, dedup's cached candidate relation)
+    "dedup_incremental_indexed",
+    "pagerank_entities",
+    "winnowing_overlap",
+    # call pipeline.export_topic, which the one-pass export change
+    # reworked (shared scan_envelopes front half); no gated query reaches
+    # sinks.snapshot.write_encrypted_snapshots or
+    # textindex._batched_leaf_purge
+    "export_pipeline_e2e",
+    "export_unwrap_roundtrip",
+    "streaming_export_pipeline",
+    # run Python stages (pandas/Arrow UDFs, mapIn*, Python UDTF, the
+    # hbase_cells_fixture Python DataSource): every Python task now
+    # starts from worker_daemon instead of pyspark.daemon
+    "ann_recall_filtered",
+    "ann_recall_report",
     "business_audit_lift",
-    "conditional_field_drop",
-    "date_fallback_chain",
-    "db_collection_fallback",
-    "dedup_spans_apply",
-    "dedup_spans_incremental",
-    "dedup_spans_keep_first",
-    "duplicate_spans",
+    "cluster_prototypes",
+    "dedup_embedding_cosine",
+    "dedup_embedding_cosine_lsh",
+    "dedup_embedding_incremental",
+    "dedup_jaccard_prefix",
+    "dedup_minhash_lsh",
+    "distinct_users_kmv",
+    "distinct_users_kmv_by_day",
+    "embedding_covariance",
     "equality_wrap",
+    "hbase_source_scan",
     "id_reverse_engineer",
-    "sanitise_strings",
-    "span_dedup_report",
-    "validation_quarantine",
-]
-
-# Round-12 window (tools/rotate_window.py --changed <the 13 above>):
-# no never-checked queries remain (every gated query has at least one
-# all-true driver row), so the window is the 13 code-changed rewrites
-# first, then fill to 50 from the r8 cohort (the stalest evidence —
-# nothing older remains). Staleness floor after this round: r8.
-DRIVER_WINDOW = [
-    # code changed in round 11 (see DRIVER_WINDOW_CHANGED)
-    "business_audit_lift",
-    "conditional_field_drop",
-    "date_fallback_chain",
-    "db_collection_fallback",
-    "dedup_spans_apply",
-    "dedup_spans_incremental",
-    "dedup_spans_keep_first",
-    "duplicate_spans",
-    "equality_wrap",
-    "id_reverse_engineer",
-    "sanitise_strings",
-    "span_dedup_report",
-    "validation_quarantine",
-    # staleness fill: last all-true at the driver in round 8
-    "dedup_simhash",
-    "dedup_simhash_near",
-    "embedding_norms",
     "kmeans_clusters",
     "kmeans_purity",
-    "latest_per_key",
-    "manifest_projection",
-    "moving_avg_and_gaps",
-    "multimodal_audio_segments",
-    "multimodal_frame_sample",
+    "kmv_jaccard_sets",
+    "kmv_sketch_merge",
     "multimodal_meta",
-    "pivot_event_counts",
-    "q10_returned_items",
-    "q13_order_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "q22_idle_customers",
-    "q7_nation_volume",
-    "q9_profit_by_nation_year",
-    "quantiles_by_type_hist",
-    "range_join_click_to_purchase",
-    "scd2_incremental",
     "semantic_dedup",
-    "session_windows",
-    "similarity_topk_bruteforce",
+    "similarity_topk_ivf",
+    "similarity_topk_ivf_filtered",
+    "similarity_topk_ivf_indexed",
+    "similarity_topk_ivf_trained",
     "similarity_topk_lsh",
-    "streaming_kmeans_assign",
-    "streaming_word_freq_cms",
-    "text_fingerprint",
-    "text_langid",
-    "text_pii_redact",
-    "text_quality",
-    "text_repetition",
+    "similarity_topk_pq",
+    "similarity_topk_pq_indexed",
+    "streaming_hbase_source_scan",
+    "udtf_split_sentences",
+]
+
+# Round-13 window (tools/rotate_window.py --changed <the 36 above>):
+# the code-changed queries first, oldest evidence first, then fill to 50
+# from the r8 cohort and then the r9 cohort (the stalest evidence).
+# Staleness floor after this round: r9.
+DRIVER_WINDOW = [
+    # code changed (see DRIVER_WINDOW_CHANGED), oldest evidence first
+    "ann_recall_report",
+    "dedup_incremental_indexed",
+    "distinct_users_kmv",
+    "distinct_users_kmv_by_day",
+    "embedding_covariance",
+    "export_pipeline_e2e",
+    "hbase_source_scan",
+    "kmv_jaccard_sets",
+    "kmv_sketch_merge",
+    "pagerank_entities",
+    "similarity_topk_ivf",
+    "similarity_topk_ivf_indexed",
+    "similarity_topk_ivf_trained",
+    "similarity_topk_pq",
+    "dedup_embedding_cosine",
+    "dedup_minhash_lsh",
+    "export_unwrap_roundtrip",
+    "similarity_topk_pq_indexed",
+    "streaming_export_pipeline",
+    "streaming_hbase_source_scan",
+    "winnowing_overlap",
+    "ann_recall_filtered",
+    "cluster_prototypes",
+    "dedup_embedding_cosine_lsh",
+    "dedup_embedding_incremental",
+    "dedup_jaccard_prefix",
+    "similarity_topk_ivf_filtered",
+    "udtf_split_sentences",
+    "business_audit_lift",
+    "equality_wrap",
+    "id_reverse_engineer",
+    "kmeans_clusters",
+    "kmeans_purity",
+    "multimodal_meta",
+    "semantic_dedup",
+    "similarity_topk_lsh",
+    # staleness fill: last all-true at the driver in round 8
+    "time_range_scan",
+    "token_counts",
+    "user_days_click_and_purchase",
+    "weighted_sample_aes",
+    # staleness fill: last all-true at the driver in round 9
+    "bm25_indexed",
+    "bpe_merges",
+    "bpe_token_counts",
+    "cdc_apply_changelog",
+    "date_canonicalise",
+    "dedup_exact",
+    "envelope_extract",
+    "grouping_sets_revenue",
+    "heavy_hitters_screened",
+    "key_range_partition_stats",
 ]
 
 

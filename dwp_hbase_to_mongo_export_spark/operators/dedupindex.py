@@ -39,55 +39,34 @@ existing DuckDB oracle arithmetic carries over unchanged.
 Append contract: delta ids are NEW. A re-appended id double-writes its
 set/band rows; ``dedup_index_governance`` detects exactly that (plus
 signature/band drift) from bounded samples, mirroring
-``textindex.text_index_governance``.
+``textindex.text_index_governance``. Crash-safety and exactly-once
+appends are the shared store protocol (operators/storeprotocol.py);
+the marker records the whole pre-append meta row.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import minhash_sets_and_sigs
-from .textindex import (
+from .storeprotocol import (
+    Batch,
+    StoreSpec,
     _batched_leaf_purge,
-    _BUILD_PENDING,
-    _LAST_APPEND,
-    _PENDING,
-    _UNKNOWN,
-    _append_lock,
-    _clear_stale_ids_record,
-    _recover_swap,
-    _restore_last_append,
-    _swap_write,
-    _write_last_append,
-    read_last_append,
+    append,
+    open_for_read,
+    opt_str,
+    read_last_append,  # noqa: F401 — public: the store's idempotence record
+    rebuild_bracket,
+    recover,
+    recover_leaves,
 )
+from .storeprotocol import stored_fingerprint as _stored_fingerprint
 
 N_SET_BUCKETS = 64
-_PENDING_IDS = "_pending-ids"
-
-
-def _check_markers(path: str) -> None:
-    """Reader-side refusal for a marked artifact, advising the action
-    that is actually SAFE per marker (a crashed append may already have
-    landed band/set rows, so 'retry the append' without recovery would
-    double-write them — round-8 advice, shared with textindex)."""
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — bands/sets/meta may "
-            "mix two generations; rebuild the index from the corpus"
-        )
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — the "
-            "band and set relations may disagree (delta rows may "
-            "already be stored); run recover_dedup_index_append and "
-            "re-append the delta, or rebuild the index"
-        )
 
 
 def _bucket_of(id_col: str):
@@ -170,92 +149,112 @@ def build_dedup_index(
     as absent. An in-place REBUILD over an existing artifact cannot
     rely on that (old meta stays readable while bands→sets→meta
     overwrites land), so it is bracketed by a ``_build-pending`` marker
-    every reader refuses (round-8 advice, shared with textindex)."""
-    os.makedirs(path, exist_ok=True)
-    # rebuilds are mutations like appends: hold the store's exclusive
-    # lock so a rebuild never interleaves with a live append's writes
-    with _append_lock(path):
-        return _build_dedup_index_locked(
-            corpus, path, text_col, id_col, n_perm, rows_per_band, k,
-            max_chars, fingerprint,
+    every reader refuses (storeprotocol.rebuild_bracket)."""
+    with rebuild_bracket(SPEC, path, fingerprint):
+        bands, sets = _sig_relations(
+            corpus, text_col, id_col, n_perm, rows_per_band, k, max_chars
         )
+        bands.write.mode("overwrite").partitionBy("band").parquet(
+            os.path.join(path, "bands")
+        )
+        sets.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(path, "sets")
+        )
+        spark = corpus.sparkSession
+        n_docs = spark.read.parquet(os.path.join(path, "sets")).count()
+        _meta_frame(
+            spark,
+            {
+                "n_docs": n_docs,
+                "n_perm": n_perm,
+                "rows_per_band": rows_per_band,
+                "k": k,
+                "max_chars": max_chars,
+                "id_col": id_col,
+                "fingerprint": fingerprint or "",
+            },
+        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
 
-def _build_dedup_index_locked(
-    corpus: DataFrame,
-    path: str,
-    text_col: str,
-    id_col: str,
-    n_perm: int,
-    rows_per_band: int,
-    k: int,
-    max_chars: int,
-    fingerprint: str | None,
-) -> None:
-    rebuild_over_existing = os.path.isdir(
-        os.path.join(path, "meta")
-    ) or os.path.isdir(os.path.join(path, "bands"))
-    build_marker = os.path.join(path, _BUILD_PENDING)
-    if rebuild_over_existing:
-        with open(build_marker, "w", encoding="utf-8") as f:
-            f.write(fingerprint or "")
-    pending = os.path.join(path, _PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)  # full rebuild supersedes any torn append
-    pids = os.path.join(path, _PENDING_IDS)
-    if os.path.isdir(pids):
-        shutil.rmtree(pids)
-    last = os.path.join(path, _LAST_APPEND)
-    if os.path.exists(last):
-        # batch ids committed against the OLD artifact must not no-op
-        # appends to the rebuilt one
-        os.remove(last)
-    bands, sets = _sig_relations(
-        corpus, text_col, id_col, n_perm, rows_per_band, k, max_chars
-    )
-    bands.write.mode("overwrite").partitionBy("band").parquet(
-        os.path.join(path, "bands")
-    )
-    sets.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "sets")
-    )
-    spark = corpus.sparkSession
-    n_docs = spark.read.parquet(os.path.join(path, "sets")).count()
-    meta = spark.createDataFrame(
-        [(n_docs, n_perm, rows_per_band, k, max_chars, id_col, fingerprint or "")],
+def _meta_frame(spark: SparkSession, s: dict) -> DataFrame:
+    return spark.createDataFrame(
+        [
+            (
+                s["n_docs"],
+                s["n_perm"],
+                s["rows_per_band"],
+                s["k"],
+                s["max_chars"],
+                s["id_col"],
+                s["fingerprint"],
+            )
+        ],
         "n_docs bigint, n_perm int, rows_per_band int, k int, "
         "max_chars int, id_col string, fingerprint string",
     )
-    meta.write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    if os.path.exists(build_marker):
-        os.remove(build_marker)
 
 
 def _read_meta(spark: SparkSession, path: str):
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    return spark.read.parquet(meta_dir).head()
+    return spark.read.parquet(os.path.join(path, "meta")).head()
+
+
+def _purge(spark: SparkSession, path: str, ids: DataFrame, scalars: dict) -> dict:
+    """Anti-join the recorded ids out of every band leaf (every doc
+    writes one row per band, so all leaves are touched) and out of the
+    ids' set buckets (computed from the ids — the other buckets cannot
+    hold them): ONE batched job per relation. Purged band leaves are
+    re-sorted by id so the governance min-max skipping property
+    survives recovery. Zero signature recomputation."""
+    id_col = scalars["id_col"]
+    ids = ids.select(F.col("id").alias(id_col)).distinct()
+    buckets = sorted(
+        r["bucket"]
+        for r in ids.withColumn("bucket", _bucket_of(id_col))
+        .select("bucket")
+        .distinct()
+        .collect()
+    )
+    bands = _batched_leaf_purge(
+        spark,
+        os.path.join(path, "bands"),
+        "band=",
+        ids,
+        id_col,
+        columns=[id_col, "band_key"],
+        sort_within=[id_col],
+    )
+    sets = _batched_leaf_purge(
+        spark,
+        os.path.join(path, "sets"),
+        "bucket=",
+        ids,
+        id_col,
+        columns=[id_col, "hs"],
+        leaf_values=buckets,
+    )
+    return {"band_leaves_purged": len(bands), "set_leaves_purged": len(sets)}
+
+
+SPEC = StoreSpec(
+    store="dedup index",
+    recover_fn="recover_dedup_index_append",
+    relations=(("bands", "band="), ("sets", "bucket="), ("meta", None)),
+    marker={
+        "n_docs": int,
+        "n_perm": int,
+        "rows_per_band": int,
+        "k": int,
+        "max_chars": int,
+        "id_col": str,
+        "fingerprint": opt_str,
+    },
+    purge=_purge,
+    untouched={"band_leaves_purged": 0, "set_leaves_purged": 0},
+    meta=_meta_frame,
+)
 
 
 def append_to_dedup_index(
-    delta: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint: str | None = None,
-    batch_id: str | None = None,
-) -> dict:
-    """Serialization shell — mutators hold the store's exclusive
-    ``_append.lock`` (textindex._append_lock) so concurrent appends
-    queue instead of purging each other's in-flight rows; the protocol
-    itself is documented on ``_append_to_dedup_index_impl``."""
-    with _append_lock(path):
-        return _append_to_dedup_index_impl(
-            delta, path, text_col, id_col, fingerprint, batch_id
-        )
-
-
-def _append_to_dedup_index_impl(
     delta: DataFrame,
     path: str,
     text_col: str = "text",
@@ -269,37 +268,25 @@ def _append_to_dedup_index_impl(
     parameters come from the stored meta, so an append can never mix
     permutation constants with the build's. For disjoint id sets the
     merged artifact is row-identical to a full rebuild over old ∪ delta
-    (pinned in tests/test_extensions.py). Crash-safety: the
-    ``_append-pending`` marker brackets the append and query/governance
-    refuse a marked index; the meta rewrite goes through the staged
-    swap.
+    (pinned in tests/test_extensions.py). Crash-safety and exactly-once
+    under ``batch_id``: storeprotocol.append."""
+    return append(
+        SPEC,
+        path,
+        delta,
+        batch_id,
+        lambda spark: _plan_append(spark, path, delta, text_col, id_col, fingerprint),
+    )
 
-    RETRY protocol (round-8 advice — a crashed append may already have
-    landed band/set rows, so blind re-append would double-write them):
-    the marker records the pre-append (n_docs, fingerprint) and
-    ``_pending-ids`` records the delta's ids BEFORE any store write;
-    entry-time ``recover_dedup_index_append`` (called here
-    automatically) purges those ids and restores the recorded meta,
-    returning the artifact to its exact pre-append state — after which
-    this append (including a re-run of a crashed one) is safe."""
-    spark = delta.sparkSession
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — rebuild the index "
-            "before appending"
-        )
-    _recover_dedup_index_append_impl(spark, path)
-    # Idempotence gate (round-10, see textindex.read_last_append): a
-    # retry of an already-committed batch id no-ops instead of
-    # double-writing band/set rows.
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if delta.isEmpty():
-        # empty micro-batches would only fragment the store; still
-        # consume the batch id (atomic sidecar write)
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
+
+def _plan_append(
+    spark: SparkSession,
+    path: str,
+    delta: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    fingerprint: str | None = None,
+) -> Batch:
     m = _read_meta(spark, path)
     stored_id_col = m.asDict().get("id_col")
     if stored_id_col and stored_id_col != id_col:
@@ -308,214 +295,54 @@ def _append_to_dedup_index_impl(
             f"append called with id_col={id_col!r} — mixed id columns "
             "would corrupt the band/set relations"
         )
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "protocol": 2,
-                    "n_docs": int(m["n_docs"]),
-                    "fingerprint": m["fingerprint"],
-                    "last_append": read_last_append(path),
-                }
-            )
-        )
-    delta.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _PENDING_IDS))
+    old = {
+        "n_docs": int(m["n_docs"]),
+        "n_perm": int(m["n_perm"]),
+        "rows_per_band": int(m["rows_per_band"]),
+        "k": int(m["k"]),
+        "max_chars": int(m["max_chars"]),
+        "id_col": stored_id_col or id_col,
+        "fingerprint": m["fingerprint"],
+    }
     bands, sets = _sig_relations(
         delta,
         text_col,
         id_col,
-        m["n_perm"],
-        m["rows_per_band"],
-        m["k"],
-        m["max_chars"],
+        old["n_perm"],
+        old["rows_per_band"],
+        old["k"],
+        old["max_chars"],
     )
-    bands.write.mode("append").partitionBy("band").parquet(
-        os.path.join(path, "bands")
+
+    def insert() -> None:
+        bands.write.mode("append").partitionBy("band").parquet(
+            os.path.join(path, "bands")
+        )
+        sets.write.mode("append").partitionBy("bucket").parquet(
+            os.path.join(path, "sets")
+        )
+
+    def derive() -> tuple[list, dict]:
+        n_new = delta.select(F.count(F.lit(1))).head()[0]
+        new = {**old, "n_docs": old["n_docs"] + int(n_new), "fingerprint": fingerprint or ""}
+        return [("meta", _meta_frame(spark, new), None)], {}
+
+    return Batch(
+        marker=old,
+        ids=delta.select(F.col(id_col).alias("id")).distinct(),
+        insert=insert,
+        derive=derive,
     )
-    sets.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(path, "sets")
-    )
-    n_new = delta.select(F.count(F.lit(1))).head()[0]
-    meta = spark.createDataFrame(
-        [
-            (
-                int(m["n_docs"]) + int(n_new),
-                int(m["n_perm"]),
-                int(m["rows_per_band"]),
-                int(m["k"]),
-                int(m["max_chars"]),
-                stored_id_col or id_col,
-                fingerprint or "",
-            )
-        ],
-        "n_docs bigint, n_perm int, rows_per_band int, k int, "
-        "max_chars int, id_col string, fingerprint string",
-    )
-    _swap_write(meta, os.path.join(path, "meta"))
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # Commit point (round-9 advice): marker removal IS the commit
-    # record, so it precedes the ids-record delete — a crash between
-    # the two leaves a marker-less stale ids dir (inert: recovery
-    # no-ops without a marker, the next append overwrites it), never a
-    # live marker whose purge record is gone.
-    os.remove(pending)
-    shutil.rmtree(os.path.join(path, _PENDING_IDS))
-    return {"committed": True, "skipped_duplicate_batch": False}
 
 
 def recover_dedup_index_append(spark: SparkSession, path: str) -> dict:
-    """Locked entry point for standalone recovery — holds the store's
-    ``_append.lock`` so a recovery never races a live append (whose
-    marker it would mis-read as torn). Protocol documented on
-    ``_recover_dedup_index_append_impl``."""
-    with _append_lock(path):
-        return _recover_dedup_index_append_impl(spark, path)
-
-
-def _recover_dedup_index_append_impl(spark: SparkSession, path: str) -> dict:
-    """Return a torn-append artifact to its EXACT pre-append state so
-    the same delta can be re-appended safely (round-8 advice: band/set
-    rows may already be stored when the marker is found, so a blind
-    retry double-writes them — after which collisions report duplicate
-    pairs and verification picks an arbitrary hs set).
-
-    Everything needed is recorded BEFORE the first store write, so
-    recovery never needs the delta itself: the ``_pending-ids`` ids are
-    anti-joined out of every band leaf (every doc writes one row per
-    band, so all leaves are touched) and out of the ids' set buckets
-    (computed from the ids — the other buckets cannot hold them); meta
-    is restored from the marker's recorded (n_docs, fingerprint) with
-    the invariant signature params re-read from the live meta. Purged
-    band leaves are re-sorted by id so the governance min-max skipping
-    property survives recovery. Cost: leaf-sized I/O with zero
-    signature recomputation, paid only on the rare recovery path.
-    No-op without a marker; raises on a pre-protocol (unparseable)
-    marker — that state predates the recorded scalars and only a
-    rebuild is safe. Round-9 advice hardening: a protocol-2 marker
-    without a committed ``_pending-ids`` record proves no store write
-    happened (cleanup + ``store_untouched``); the same state under a
-    pre-v2 marker is ambiguous and raises, advising rebuild."""
-    pending = os.path.join(path, _PENDING)
-    _recover_swap(os.path.join(path, "meta"))
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        old_n_docs = int(state["n_docs"])
-        old_fp = str(state.get("fingerprint") or "")
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "pre-protocol or corrupt state cannot be auto-recovered; "
-            "rebuild the index from the corpus"
-        ) from None
-    m = _read_meta(spark, path)
-    id_col = m.asDict().get("id_col") or "doc_id"
-    bands_purged = sets_purged = 0
-    pids_dir = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids_dir, "_SUCCESS")):
-        # Round-9 advice: under protocol 2 the ids record precedes every
-        # store write and the marker's removal is the commit record, so
-        # marker-present-without-a-committed-ids-record PROVES no band/
-        # set/meta write happened — clean up, leave the store alone. A
-        # pre-v2 marker in this state is ambiguous ('nothing written' vs
-        # 'fully committed' under the old delete-ids-first ordering);
-        # restoring meta could silently revert n_docs/fingerprint under
-        # committed rows, so refuse loudly.
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — for a "
-                "pre-protocol-2 marker this is ambiguous between "
-                "'nothing written' and 'fully committed' and cannot be "
-                "auto-recovered; rebuild the index from the corpus"
-            )
-        if os.path.isdir(pids_dir):
-            shutil.rmtree(pids_dir)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {
-            "recovered": True,
-            "band_leaves_purged": 0,
-            "set_leaves_purged": 0,
-            "store_untouched": True,
-        }
-    ids = (
-        spark.read.parquet(pids_dir)
-        .select(F.col("id").alias(id_col))
-        .distinct()
-    )
-    bands_dir = os.path.join(path, "bands")
-    # ONE batched job per relation instead of one per leaf (the
-    # textindex._batched_leaf_purge discipline): band leaves keep their
-    # within-file id sort (min-max pruning), and the sets purge is
-    # partition-pruned to the buckets the purged ids actually land in.
-    buckets = sorted(
-        r["bucket"]
-        for r in ids.withColumn("bucket", _bucket_of(id_col))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    bands_purged = len(
-        _batched_leaf_purge(
-            spark,
-            bands_dir,
-            "band=",
-            ids,
-            id_col,
-            columns=[id_col, "band_key"],
-            sort_within=[id_col],
-        )
-    )
-    sets_purged = len(
-        _batched_leaf_purge(
-            spark,
-            os.path.join(path, "sets"),
-            "bucket=",
-            ids,
-            id_col,
-            columns=[id_col, "hs"],
-            leaf_values=buckets,
-        )
-    )
-    meta = spark.createDataFrame(
-        [
-            (
-                old_n_docs,
-                int(m["n_perm"]),
-                int(m["rows_per_band"]),
-                int(m["k"]),
-                int(m["max_chars"]),
-                id_col,
-                old_fp,
-            )
-        ],
-        "n_docs bigint, n_perm int, rows_per_band int, k int, "
-        "max_chars int, id_col string, fingerprint string",
-    )
-    _swap_write(meta, os.path.join(path, "meta"))
-    # The idempotence sidecar is pre-append state too (a crash may land
-    # after the new batch id was stamped; leaving it would wrongly
-    # no-op the legitimate re-append of the purged batch).
-    _restore_last_append(path, old_last)
-    # Same commit discipline as the append: marker removal commits the
-    # recovery; the ids record outliving the marker is inert.
-    os.remove(pending)
-    shutil.rmtree(pids_dir)
-    return {
-        "recovered": True,
-        "band_leaves_purged": bands_purged,
-        "set_leaves_purged": sets_purged,
-    }
+    """Return a torn-append index to its EXACT pre-append state so the
+    same delta can be re-appended safely (band/set rows may already be
+    stored, so a blind retry double-writes them — after which
+    collisions report duplicate pairs and verification picks an
+    arbitrary hs set): purge the recorded ids from the band and set
+    leaves, restore the recorded meta. Protocol: storeprotocol.recover."""
+    return recover(SPEC, spark, path)
 
 
 def compact_dedup_index(
@@ -528,6 +355,7 @@ def compact_dedup_index(
     swap protocol."""
     from ..sinks.compaction import compact_partitioned_dir
 
+    recover_leaves(SPEC, path)
     return {
         "bands": compact_partitioned_dir(
             spark, os.path.join(path, "bands"), target_bytes=target_bytes
@@ -540,22 +368,10 @@ def compact_dedup_index(
 
 def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
     """The source fingerprint stamped into meta; None when the artifact
-    is absent or torn (pending append OR crashed-rebuild marker) —
+    is absent, torn or unreadable (storeprotocol.stored_fingerprint) —
     every case a fingerprint-checking consumer must treat as
     'rebuild'."""
-    if os.path.exists(os.path.join(path, _PENDING)) or os.path.exists(
-        os.path.join(path, _BUILD_PENDING)
-    ):
-        return None
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    if not os.path.isdir(meta_dir):
-        return None
-    try:
-        row = spark.read.parquet(meta_dir).select("fingerprint").head()
-    except Exception:
-        return None
-    return row["fingerprint"] if row else None
+    return _stored_fingerprint(SPEC, spark, path)
 
 
 def query_dedup_index(
@@ -585,7 +401,7 @@ def query_dedup_index(
     landed, and a candidate without its verify set would be silently
     dropped; the error advises the safe fix (recover_dedup_index_append
     for an append, rebuild for a rebuild)."""
-    _check_markers(path)
+    open_for_read(SPEC, path)
     from ._cache import swap_cache
 
     m = _read_meta(spark, path)
@@ -685,7 +501,7 @@ def dedup_index_governance(
 
     from .dedup import MINHASH_MOD, minhash_perm_constants
 
-    _check_markers(path)
+    open_for_read(SPEC, path)
     ids = sorted(set(sample_ids))[:max_ids]
     if not ids:
         raise ValueError(

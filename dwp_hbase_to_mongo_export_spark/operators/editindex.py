@@ -49,42 +49,35 @@ Artifact layout at ``path/``:
 Append contract: delta ids are NEW (the doc-keyed contract of
 dedupindex, NOT gramindex's overlap-tolerant one — prefix and doc rows
 are per-document, so a re-appended id double-writes; governance
-detects exactly that). Crash-safety is the shared store protocol
-(textindex.py primitives): ``_append-pending`` marker + ``_pending-ids``
-purge record (the delta's doc ids) written before any store write,
-marker removal as the commit record, ``_last-append`` batch-id sidecar
-for exactly-once under retries, all mutations under the store's
-``_append.lock`` flock, readers refusing marked artifacts.
+detects exactly that). Crash-safety and exactly-once appends are the
+shared store protocol (operators/storeprotocol.py); the ids record
+holds the delta's doc ids.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .editdist import _banded_distance, _hist_band, _prefix_emit, _staged
-from .textindex import (
+from .storeprotocol import (
+    Batch,
+    StoreSpec,
     _batched_leaf_purge,
-    _BUILD_PENDING,
-    _LAST_APPEND,
-    _PENDING,
-    _UNKNOWN,
-    _append_lock,
-    _clear_stale_ids_record,
-    _recover_swap,
-    _restore_last_append,
-    _swap_write,
-    _write_last_append,
-    read_last_append,
+    append,
+    open_for_read,
+    opt_str,
+    read_last_append,  # noqa: F401 — public: the store's idempotence record
+    rebuild_bracket,
+    recover,
+    recover_leaves,
 )
+from .storeprotocol import stored_fingerprint as _stored_fingerprint
 
 N_GRAM_BUCKETS = 64
 N_DOC_BUCKETS = 64
-_PENDING_IDS = "_pending-ids"
 
 
 def _gbucket(g) -> F.Column:
@@ -95,20 +88,6 @@ def _gbucket(g) -> F.Column:
 
 def _dbucket(i) -> F.Column:
     return F.pmod(F.xxhash64(i), F.lit(N_DOC_BUCKETS)).cast("int")
-
-
-def _check_markers(path: str) -> None:
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — prefix/docs/meta may "
-            "mix two generations; rebuild the edit index from the corpus"
-        )
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — rows may "
-            "already be stored; run recover_edit_index_append and "
-            "re-append the delta, or rebuild the index"
-        )
 
 
 def _emit_rows(
@@ -149,25 +128,11 @@ def _emit_rows(
     return emit, doc_rows
 
 
-def _write_meta(
-    spark: SparkSession,
-    path: str,
-    n_docs: int,
-    k: int,
-    q: int,
-    fingerprint: str,
-    first: bool,
-    normalise: bool = False,
-) -> None:
-    meta = spark.createDataFrame(
-        [(n_docs, k, q, fingerprint, bool(normalise))],
+def _meta_frame(spark: SparkSession, s: dict) -> DataFrame:
+    return spark.createDataFrame(
+        [(s["n_docs"], s["k"], s["q"], s["fingerprint"], bool(s["normalise"]))],
         "n_docs bigint, k int, q int, fingerprint string, normalise boolean",
     )
-    target = os.path.join(path, "meta")
-    if first:
-        meta.write.mode("overwrite").parquet(target)
-    else:
-        _swap_write(meta, target)
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -196,61 +161,54 @@ def build_edit_index(
     with mismatched parameters; so is the matching policy
     (``normalise`` — editdist._staged's dial), so strict and
     normalised data can never mix in one store."""
-    os.makedirs(path, exist_ok=True)
-    with _append_lock(path):
-        _build_edit_index_locked(corpus, path, k, q, fingerprint, normalise)
+    with rebuild_bracket(SPEC, path, fingerprint):
+        spark = corpus.sparkSession
+        staged = _staged(corpus, "text", "doc_id", normalise=normalise, q=q)
+        grams = staged.select("_id", F.explode("_grams").alias("g"))
+        dfreq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("_df"))
+        dfreq.write.mode("overwrite").parquet(os.path.join(path, "df"))
+        frozen = spark.read.parquet(os.path.join(path, "df"))
+        emit, doc_rows = _emit_rows(corpus, frozen, k, q, normalise=normalise)
+        emit.withColumn("gbucket", _gbucket(F.col("g"))).write.mode(
+            "overwrite"
+        ).partitionBy("gbucket").parquet(os.path.join(path, "prefix"))
+        doc_rows.withColumn("bucket", _dbucket(F.col("id"))).write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(os.path.join(path, "docs"))
+        n_docs = spark.read.parquet(os.path.join(path, "docs")).count()
+        _meta_frame(
+            spark,
+            {
+                "n_docs": n_docs,
+                "k": k,
+                "q": q,
+                "fingerprint": fingerprint or "",
+                "normalise": normalise,
+            },
+        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
 
-def _build_edit_index_locked(
-    corpus: DataFrame,
-    path: str,
-    k: int,
-    q: int,
-    fingerprint: str | None,
-    normalise: bool = False,
-) -> None:
-    spark = corpus.sparkSession
-    rebuild = any(
-        os.path.isdir(os.path.join(path, d)) for d in ("meta", "prefix", "docs")
-    )
-    build_marker = os.path.join(path, _BUILD_PENDING)
-    if rebuild:
-        with open(build_marker, "w", encoding="utf-8") as f:
-            f.write(fingerprint or "")
-    pending = os.path.join(path, _PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)  # full rebuild supersedes any torn append
-    pids = os.path.join(path, _PENDING_IDS)
-    if os.path.isdir(pids):
-        shutil.rmtree(pids)
-    last = os.path.join(path, _LAST_APPEND)
-    if os.path.exists(last):
-        os.remove(last)
-    staged = _staged(corpus, "text", "doc_id", normalise=normalise, q=q)
-    grams = staged.select("_id", F.explode("_grams").alias("g"))
-    dfreq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("_df"))
-    dfreq.write.mode("overwrite").parquet(os.path.join(path, "df"))
-    frozen = spark.read.parquet(os.path.join(path, "df"))
-    emit, doc_rows = _emit_rows(corpus, frozen, k, q, normalise=normalise)
-    emit.withColumn("gbucket", _gbucket(F.col("g"))).write.mode(
-        "overwrite"
-    ).partitionBy("gbucket").parquet(os.path.join(path, "prefix"))
-    doc_rows.withColumn("bucket", _dbucket(F.col("id"))).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(os.path.join(path, "docs"))
-    n_docs = spark.read.parquet(os.path.join(path, "docs")).count()
-    _write_meta(
-        spark,
-        path,
-        n_docs,
-        k,
-        q,
-        fingerprint or "",
-        first=True,
-        normalise=normalise,
-    )
-    if os.path.exists(build_marker):
-        os.remove(build_marker)
+def _purge(spark: SparkSession, path: str, ids: DataFrame, scalars: dict) -> dict:
+    """Purge the recorded doc ids from both partitioned stores' leaves,
+    ONE batched job per relation."""
+    purge = ids.select("id")
+    leaves_purged = 0
+    for store, part in (("prefix", "gbucket="), ("docs", "bucket=")):
+        leaves_purged += len(
+            _batched_leaf_purge(spark, os.path.join(path, store), part, purge, "id")
+        )
+    return {"leaves_purged": leaves_purged}
+
+
+SPEC = StoreSpec(
+    store="edit index",
+    recover_fn="recover_edit_index_append",
+    relations=(("prefix", "gbucket="), ("docs", "bucket="), ("meta", None)),
+    marker={"n_docs": int, "k": int, "q": int, "normalise": bool, "fingerprint": opt_str},
+    purge=_purge,
+    untouched={"leaves_purged": 0},
+    meta=_meta_frame,
+)
 
 
 def append_to_edit_index(
@@ -259,166 +217,73 @@ def append_to_edit_index(
     fingerprint: str | None = None,
     batch_id: str | None = None,
 ) -> dict:
-    """Serialization shell; protocol on ``_append_to_edit_index_impl``."""
-    with _append_lock(path):
-        return _append_to_edit_index_impl(delta, path, fingerprint, batch_id)
-
-
-def _append_to_edit_index_impl(
-    delta: DataFrame,
-    path: str,
-    fingerprint: str | None,
-    batch_id: str | None,
-) -> dict:
     """Add an ACCEPTED batch (ids NEW): delta-sized gram work under the
     FROZEN order, prefix and doc rows appended into their static
     buckets, meta n_docs merged by addition. ``df/`` is deliberately
     NOT updated (module docstring — the order freeze IS the
-    correctness contract).
+    correctness contract). Crash-safety and exactly-once under
+    ``batch_id``: storeprotocol.append."""
+    return append(
+        SPEC,
+        path,
+        delta,
+        batch_id,
+        lambda spark: _plan_append(spark, path, delta, fingerprint),
+    )
 
-    Crash/retry protocol: pre-append meta scalars + the last-append
-    slot go into the ``_append-pending`` marker and the delta's doc ids
-    into ``_pending-ids`` (its _SUCCESS is the proof-of-record) BEFORE
-    any store write. Marker removal commits. ``batch_id`` gives
-    exactly-once under ingest retries."""
-    spark = delta.sparkSession
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — rebuild the edit "
-            "index before appending"
-        )
-    _recover_edit_index_append_impl(spark, path)
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if delta.isEmpty():
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
-    _recover_swap(os.path.join(path, "meta"))
+
+def _plan_append(
+    spark: SparkSession,
+    path: str,
+    delta: DataFrame,
+    fingerprint: str | None = None,
+) -> Batch:
     old = _read_meta(spark, path)
     k, q = int(old["k"]), int(old["q"])
     normalise = _meta_normalise(old)
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "protocol": 2,
-                    "n_docs": int(old["n_docs"]),
-                    "k": k,
-                    "q": q,
-                    "normalise": normalise,
-                    "fingerprint": old["fingerprint"],
-                    "last_append": read_last_append(path),
-                }
-            )
-        )
-    pids = os.path.join(path, _PENDING_IDS)
-    delta.select(F.col("doc_id").alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(pids)
     frozen = spark.read.parquet(os.path.join(path, "df"))
     emit, doc_rows = _emit_rows(delta, frozen, k, q, normalise=normalise)
-    emit.withColumn("gbucket", _gbucket(F.col("g"))).write.mode(
-        "append"
-    ).partitionBy("gbucket").parquet(os.path.join(path, "prefix"))
-    doc_rows.withColumn("bucket", _dbucket(F.col("id"))).write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(os.path.join(path, "docs"))
-    n_batch = spark.read.parquet(pids).count()
-    _write_meta(
-        spark,
-        path,
-        int(old["n_docs"]) + n_batch,
-        k,
-        q,
-        fingerprint or str(old["fingerprint"]),
-        first=False,
-        normalise=normalise,
-    )
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # commit point: marker removal precedes the ids-record delete (a
-    # marker-less stale ids dir is inert junk; the reverse order would
-    # let recovery restore meta under committed rows)
-    os.remove(pending)
-    shutil.rmtree(pids)
-    return {
-        "committed": True,
-        "skipped_duplicate_batch": False,
-        "docs_appended": int(n_batch),
+    scalars = {
+        "n_docs": int(old["n_docs"]),
+        "k": k,
+        "q": q,
+        "normalise": normalise,
+        "fingerprint": old["fingerprint"],
     }
+
+    def insert() -> None:
+        emit.withColumn("gbucket", _gbucket(F.col("g"))).write.mode(
+            "append"
+        ).partitionBy("gbucket").parquet(os.path.join(path, "prefix"))
+        doc_rows.withColumn("bucket", _dbucket(F.col("id"))).write.mode(
+            "append"
+        ).partitionBy("bucket").parquet(os.path.join(path, "docs"))
+
+    def derive() -> tuple[list, dict]:
+        n_batch = spark.read.parquet(os.path.join(path, SPEC.ids_record)).count()
+        meta = {
+            **scalars,
+            "n_docs": scalars["n_docs"] + n_batch,
+            "fingerprint": fingerprint or str(old["fingerprint"]),
+        }
+        return [("meta", _meta_frame(spark, meta), None)], {
+            "docs_appended": int(n_batch)
+        }
+
+    return Batch(
+        marker=scalars,
+        ids=delta.select(F.col("doc_id").alias("id")).distinct(),
+        insert=insert,
+        derive=derive,
+    )
 
 
 def recover_edit_index_append(spark: SparkSession, path: str) -> dict:
-    """Locked standalone recovery (see _recover_edit_index_append_impl)."""
-    with _append_lock(path):
-        return _recover_edit_index_append_impl(spark, path)
-
-
-def _recover_edit_index_append_impl(spark: SparkSession, path: str) -> dict:
     """Return a torn-append store to its exact pre-append state: purge
     the recorded delta doc ids from both partitioned stores' leaves,
-    restore the recorded meta scalars and last-append slot. Protocol-2
-    marker without a committed ids record proves the store is untouched
-    (the record precedes every store write)."""
-    pending = os.path.join(path, _PENDING)
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        old = {
-            "n_docs": int(state["n_docs"]),
-            "k": int(state["k"]),
-            "q": int(state["q"]),
-            "normalise": bool(state.get("normalise", False)),
-            "fingerprint": str(state.get("fingerprint") or ""),
-        }
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "cannot be auto-recovered; rebuild the edit index"
-        ) from None
-    pids = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids, "_SUCCESS")):
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — "
-                "ambiguous pre-protocol-2 state; rebuild the edit index"
-            )
-        if os.path.isdir(pids):
-            shutil.rmtree(pids)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {"recovered": True, "leaves_purged": 0, "store_untouched": True}
-    purge = spark.read.parquet(pids).select("id")
-    leaves_purged = 0
-    # ONE batched job per relation (the textindex._batched_leaf_purge
-    # discipline — per-leaf jobs paid a scheduling round-trip each)
-    for store, part in (("prefix", "gbucket="), ("docs", "bucket=")):
-        sdir = os.path.join(path, store)
-        leaves_purged += len(
-            _batched_leaf_purge(spark, sdir, part, purge, "id")
-        )
-    _write_meta(
-        spark,
-        path,
-        old["n_docs"],
-        old["k"],
-        old["q"],
-        old["fingerprint"],
-        first=not os.path.isdir(os.path.join(path, "meta")),
-        normalise=old["normalise"],
-    )
-    _restore_last_append(path, old_last)
-    os.remove(pending)
-    shutil.rmtree(pids)
-    return {"recovered": True, "leaves_purged": leaves_purged}
+    restore the recorded meta scalars and last-append slot
+    (storeprotocol.recover)."""
+    return recover(SPEC, spark, path)
 
 
 def query_edit_index(
@@ -441,7 +306,7 @@ def query_edit_index(
     length buckets. Verification reads candidate corpus texts from the
     id-bucketed docs/ store behind a broadcast candidate list, the
     dedupindex sets/ DPP discipline."""
-    _check_markers(path)
+    open_for_read(SPEC, path)
     meta = _read_meta(spark, path)
     k, q = int(meta["k"]), int(meta["q"])
     normalise = _meta_normalise(meta)
@@ -542,6 +407,7 @@ def compact_edit_index(
     via the shared compactor."""
     from ..sinks.compaction import compact_partitioned_dir
 
+    recover_leaves(SPEC, path)
     out = {}
     for store in ("prefix", "docs"):
         out[store] = compact_partitioned_dir(
@@ -551,13 +417,10 @@ def compact_edit_index(
 
 
 def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
-    """Fingerprint stamped into meta, or None for a missing/unreadable
-    artifact (callers rebuild on mismatch — the indexcache contract)."""
-    try:
-        _check_markers(path)
-        return str(_read_meta(spark, path)["fingerprint"])
-    except Exception:
-        return None
+    """Fingerprint stamped into meta, or None for a missing, torn or
+    unreadable artifact (callers rebuild on mismatch — the indexcache
+    contract)."""
+    return _stored_fingerprint(SPEC, spark, path)
 
 
 def edit_index_governance(
@@ -575,7 +438,7 @@ def edit_index_governance(
     docs that the build corpus never saw): high drift means the frozen
     order is pruning poorly for recent data and a rebuild would help —
     and the fragmentation verdicts for both partitioned stores."""
-    _check_markers(path)
+    open_for_read(SPEC, path)
     from ..sinks.compaction import fragmentation_report
 
     dup_rows = 0

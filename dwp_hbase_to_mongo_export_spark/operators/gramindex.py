@@ -34,19 +34,14 @@ Artifact layout at ``path/``:
               distinct doc count must track it in the corpus table,
               not this sidecar.
 
-Crash-safety is the shared store protocol (textindex.py primitives):
-``_append-pending`` marker recording the pre-append meta scalars +
-``_pending-ids`` purge record written before any store write; marker
-removal is the commit record; ``_last-append`` batch-id sidecar makes
-retries of a committed batch an explicit no-op; all mutations hold the
-store's ``_append.lock`` flock; readers refuse marked artifacts.
+Crash-safety and exactly-once appends are the shared store protocol
+(operators/storeprotocol.py); the ids record holds the exact gram set
+an append inserts.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,24 +53,22 @@ from .spandedup import (
     _staged_grams,
     strip_covered,
 )
-from .textindex import (
+from .storeprotocol import (
+    Batch,
+    StoreSpec,
     _batched_leaf_purge,
-    _BUILD_PENDING,
-    _LAST_APPEND,
-    _PENDING,
-    _UNKNOWN,
-    _append_lock,
-    _clear_stale_ids_record,
-    _recover_swap,
     _recovered_leaves,
-    _restore_last_append,
-    _swap_write,
-    _write_last_append,
-    read_last_append,
+    append,
+    open_for_read,
+    opt_str,
+    read_last_append,  # noqa: F401 — public: the store's idempotence record
+    rebuild_bracket,
+    recover,
+    recover_leaves,
 )
+from .storeprotocol import stored_fingerprint as _stored_fingerprint
 
 N_GRAM_BUCKETS = 64
-_PENDING_IDS = "_pending-ids"
 
 
 def gram_bucket(gh) -> F.Column:
@@ -83,20 +76,6 @@ def gram_bucket(gh) -> F.Column:
     int, pmod 64. A pure function of gh — equal grams always land in
     the same leaf."""
     return F.pmod(F.conv(F.substring(gh, 1, 4), 16, 10).cast("int"), F.lit(N_GRAM_BUCKETS))
-
-
-def _check_markers(path: str) -> None:
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — grams/meta may mix "
-            "two generations; rebuild the gram index from the corpus"
-        )
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — gram "
-            "rows may already be stored; run recover_gram_index_append "
-            "and re-append the delta, or rebuild the index"
-        )
 
 
 def _gram_relation(
@@ -111,26 +90,12 @@ def _gram_relation(
     return g.withColumn("bucket", gram_bucket(F.col("gh")))
 
 
-def _write_meta(
-    spark: SparkSession,
-    path: str,
-    n_docs: int,
-    n_grams: int,
-    n: int,
-    fingerprint: str,
-    first: bool,
-    normalise: bool = False,
-) -> None:
-    meta = spark.createDataFrame(
-        [(n_docs, n_grams, n, fingerprint, bool(normalise))],
+def _meta_frame(spark: SparkSession, s: dict) -> DataFrame:
+    return spark.createDataFrame(
+        [(s["n_docs"], s["n_grams"], s["n"], s["fingerprint"], bool(s["normalise"]))],
         "n_docs bigint, n_grams bigint, n int, fingerprint string, "
         "normalise boolean",
     )
-    target = os.path.join(path, "meta")
-    if first:
-        meta.write.mode("overwrite").parquet(target)
-    else:
-        _swap_write(meta, target)
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -161,59 +126,55 @@ def build_gram_index(
     punctuation strip, spandedup._norm_word) — the policy is stamped
     into meta, and appends/probes read it from there, so a caller can
     never mix strict and normalised hashes in one store."""
-    os.makedirs(path, exist_ok=True)
-    with _append_lock(path):
-        _build_gram_index_locked(
-            corpus, path, text_col, id_col, n, fingerprint, normalise
+    with rebuild_bracket(SPEC, path, fingerprint):
+        spark = corpus.sparkSession
+        grams = _gram_relation(corpus, text_col, id_col, n, normalise)
+        grams.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(path, "grams")
         )
+        n_grams = spark.read.parquet(os.path.join(path, "grams")).count()
+        n_docs = corpus.select(id_col).distinct().count()
+        _meta_frame(
+            spark,
+            {
+                "n_docs": n_docs,
+                "n_grams": n_grams,
+                "n": n,
+                "fingerprint": fingerprint or "",
+                "normalise": normalise,
+            },
+        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
 
-def _build_gram_index_locked(
-    corpus: DataFrame,
-    path: str,
-    text_col: str,
-    id_col: str,
-    n: int,
-    fingerprint: str | None,
-    normalise: bool = False,
-) -> None:
-    spark = corpus.sparkSession
-    rebuild = os.path.isdir(os.path.join(path, "meta")) or os.path.isdir(
-        os.path.join(path, "grams")
-    )
-    build_marker = os.path.join(path, _BUILD_PENDING)
-    if rebuild:
-        with open(build_marker, "w", encoding="utf-8") as f:
-            f.write(fingerprint or "")
-    pending = os.path.join(path, _PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)  # full rebuild supersedes any torn append
-    pids = os.path.join(path, _PENDING_IDS)
-    if os.path.isdir(pids):
-        shutil.rmtree(pids)
-    last = os.path.join(path, _LAST_APPEND)
-    if os.path.exists(last):
-        # batch ids committed against the OLD artifact must not no-op
-        # appends to the rebuilt one
-        os.remove(last)
-    grams = _gram_relation(corpus, text_col, id_col, n, normalise)
-    grams.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "grams")
-    )
-    n_grams = spark.read.parquet(os.path.join(path, "grams")).count()
-    n_docs = corpus.select(id_col).distinct().count()
-    _write_meta(
+def _purge(spark: SparkSession, path: str, ids: DataFrame, scalars: dict) -> dict:
+    """Purge the recorded hashes (equal to the inserted set by
+    construction) from every bucket leaf in ONE batched job."""
+    leaves = _batched_leaf_purge(
         spark,
-        path,
-        n_docs,
-        n_grams,
-        n,
-        fingerprint or "",
-        first=True,
-        normalise=normalise,
+        os.path.join(path, "grams"),
+        "bucket=",
+        ids.select("gh"),
+        "gh",
+        columns=["gh"],
     )
-    if os.path.exists(build_marker):
-        os.remove(build_marker)
+    return {"leaves_purged": len(leaves)}
+
+
+SPEC = StoreSpec(
+    store="gram index",
+    recover_fn="recover_gram_index_append",
+    relations=(("grams", "bucket="), ("meta", None)),
+    marker={
+        "n_docs": int,
+        "n_grams": int,
+        "n": int,
+        "normalise": bool,
+        "fingerprint": opt_str,
+    },
+    purge=_purge,
+    untouched={"leaves_purged": 0},
+    meta=_meta_frame,
+)
 
 
 def append_to_gram_index(
@@ -224,21 +185,6 @@ def append_to_gram_index(
     fingerprint: str | None = None,
     batch_id: str | None = None,
 ) -> dict:
-    """Serialization shell; protocol on ``_append_to_gram_index_impl``."""
-    with _append_lock(path):
-        return _append_to_gram_index_impl(
-            delta, path, text_col, id_col, fingerprint, batch_id
-        )
-
-
-def _append_to_gram_index_impl(
-    delta: DataFrame,
-    path: str,
-    text_col: str,
-    id_col: str,
-    fingerprint: str | None,
-    batch_id: str | None,
-) -> dict:
     """Add an ACCEPTED batch's grams: delta-sized gram work, one
     anti-join against the store (only genuinely new hashes are
     written — so unlike the doc-keyed stores the delta may freely
@@ -248,28 +194,27 @@ def _append_to_gram_index_impl(
     observed" — re-ingesting the same doc ids adds them again
     (``n_grams`` stays exact; see the module docstring).
 
-    Crash/retry protocol (the shared store discipline): pre-append meta
-    scalars + the last-append slot go into the ``_append-pending``
-    marker and the exact to-insert gh set into ``_pending-ids`` (with
-    its _SUCCESS as the proof-of-record) BEFORE any store write; the
-    inserted rows are then READ BACK from the ids record so the purge
-    set provably equals the inserted set. Marker removal commits.
-    ``batch_id`` gives exactly-once under ingest retries
-    (textindex.read_last_append)."""
-    spark = delta.sparkSession
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — rebuild the gram "
-            "index before appending"
-        )
-    _recover_gram_index_append_impl(spark, path)
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if delta.isEmpty():
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
-    _recover_swap(os.path.join(path, "meta"))
+    The ids record holds the exact to-insert gh set, and the inserted
+    rows are READ BACK from it so the purge set provably equals the
+    inserted set. Crash-safety and exactly-once under ``batch_id``:
+    storeprotocol.append."""
+    return append(
+        SPEC,
+        path,
+        delta,
+        batch_id,
+        lambda spark: _plan_append(spark, path, delta, text_col, id_col, fingerprint),
+    )
+
+
+def _plan_append(
+    spark: SparkSession,
+    path: str,
+    delta: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    fingerprint: str | None = None,
+) -> Batch:
     old = _read_meta(spark, path)
     n = int(old["n"])
     normalise = _meta_normalise(old)
@@ -279,124 +224,41 @@ def _append_to_gram_index_impl(
         .join(store, "gh", "left_anti")
         .select("gh", "bucket")
     )
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "protocol": 2,
-                    "n_docs": int(old["n_docs"]),
-                    "n_grams": int(old["n_grams"]),
-                    "n": n,
-                    "normalise": normalise,
-                    "fingerprint": old["fingerprint"],
-                    "last_append": read_last_append(path),
-                }
-            )
-        )
-    pids = os.path.join(path, _PENDING_IDS)
-    new_ghs.write.mode("overwrite").parquet(pids)
-    # read the ids record back as the insert set: one evaluation, and
-    # the recorded purge set is exactly what lands in the store
-    to_insert = spark.read.parquet(pids)
-    to_insert.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(path, "grams")
-    )
-    n_inserted = to_insert.count()
-    n_batch_docs = delta.select(id_col).distinct().count()
-    _write_meta(
-        spark,
-        path,
-        int(old["n_docs"]) + n_batch_docs,
-        int(old["n_grams"]) + n_inserted,
-        n,
-        fingerprint or str(old["fingerprint"]),
-        first=False,
-        normalise=normalise,
-    )
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # commit point: marker removal precedes the ids-record delete (a
-    # marker-less stale ids dir is inert junk; the reverse order would
-    # let recovery restore meta under committed gram rows)
-    os.remove(pending)
-    shutil.rmtree(pids)
-    return {
-        "committed": True,
-        "skipped_duplicate_batch": False,
-        "grams_inserted": int(n_inserted),
+    scalars = {
+        "n_docs": int(old["n_docs"]),
+        "n_grams": int(old["n_grams"]),
+        "n": n,
+        "normalise": normalise,
+        "fingerprint": old["fingerprint"],
     }
+    ids_dir = os.path.join(path, SPEC.ids_record)
+
+    def insert() -> None:
+        spark.read.parquet(ids_dir).write.mode("append").partitionBy(
+            "bucket"
+        ).parquet(os.path.join(path, "grams"))
+
+    def derive() -> tuple[list, dict]:
+        n_inserted = spark.read.parquet(ids_dir).count()
+        n_batch_docs = delta.select(id_col).distinct().count()
+        meta = {
+            **scalars,
+            "n_docs": scalars["n_docs"] + n_batch_docs,
+            "n_grams": scalars["n_grams"] + n_inserted,
+            "fingerprint": fingerprint or str(old["fingerprint"]),
+        }
+        return [("meta", _meta_frame(spark, meta), None)], {
+            "grams_inserted": int(n_inserted)
+        }
+
+    return Batch(marker=scalars, ids=new_ghs, insert=insert, derive=derive)
 
 
 def recover_gram_index_append(spark: SparkSession, path: str) -> dict:
-    """Locked standalone recovery (see _recover_gram_index_append_impl)."""
-    with _append_lock(path):
-        return _recover_gram_index_append_impl(spark, path)
-
-
-def _recover_gram_index_append_impl(spark: SparkSession, path: str) -> dict:
     """Return a torn-append store to its exact pre-append state: purge
-    the recorded ``_pending-ids`` hashes from their bucket leaves
-    (equal to the inserted set by construction), restore the recorded
-    meta scalars and last-append slot. Protocol-2 marker without a
-    committed ids record proves the store is untouched (the record
-    precedes every store write); pre-v2 ambiguity raises."""
-    pending = os.path.join(path, _PENDING)
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        old = {
-            "n_docs": int(state["n_docs"]),
-            "n_grams": int(state["n_grams"]),
-            "n": int(state["n"]),
-            "normalise": bool(state.get("normalise", False)),
-            "fingerprint": str(state.get("fingerprint") or ""),
-        }
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "cannot be auto-recovered; rebuild the gram index"
-        ) from None
-    pids = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids, "_SUCCESS")):
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — "
-                "ambiguous pre-protocol-2 state; rebuild the gram index"
-            )
-        if os.path.isdir(pids):
-            shutil.rmtree(pids)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {"recovered": True, "leaves_purged": 0, "store_untouched": True}
-    purge = spark.read.parquet(pids).select("gh")
-    grams_dir = os.path.join(path, "grams")
-    # ONE batched job purges every bucket leaf (the
-    # textindex._batched_leaf_purge discipline — per-leaf jobs paid a
-    # scheduling round-trip per bucket)
-    leaves = _batched_leaf_purge(
-        spark, grams_dir, "bucket=", purge, "gh", columns=["gh"]
-    )
-    _write_meta(
-        spark,
-        path,
-        old["n_docs"],
-        old["n_grams"],
-        old["n"],
-        old["fingerprint"],
-        first=not os.path.isdir(os.path.join(path, "meta")),
-        normalise=old["normalise"],
-    )
-    _restore_last_append(path, old_last)
-    os.remove(pending)
-    shutil.rmtree(pids)
-    return {"recovered": True, "leaves_purged": len(leaves)}
+    the recorded hashes from their bucket leaves, restore the recorded
+    meta scalars and last-append slot (storeprotocol.recover)."""
+    return recover(SPEC, spark, path)
 
 
 def strip_spans_with_index(
@@ -422,7 +284,7 @@ def strip_spans_with_index(
     the gram set actually fits (the common case); above that it stays a
     shuffle semi-join on 16-byte hashes — the same AQE-decided
     discipline as the family's other joins."""
-    _check_markers(path)
+    open_for_read(SPEC, path)
     meta = _read_meta(spark, path)
     n = int(meta["n"])
     normalise = _meta_normalise(meta)
@@ -446,6 +308,7 @@ def compact_gram_index(
     crash-safe per-leaf swap via the shared compactor."""
     from ..sinks.compaction import compact_partitioned_dir
 
+    recover_leaves(SPEC, path)
     return compact_partitioned_dir(
         spark, os.path.join(path, "grams"), target_bytes=target_bytes
     )
@@ -464,7 +327,7 @@ def gram_index_governance(
     duplicate check for the sampled share of the hash space (no
     cross-leaf case exists to miss). Fragmentation (when to compact)
     mirrors the other stores' round-10 verdict."""
-    _check_markers(path)
+    open_for_read(SPEC, path)
     grams_dir = os.path.join(path, "grams")
     leaves = _recovered_leaves(grams_dir, "bucket=")
     sampled = leaves[: max(1, sample_buckets)]
@@ -501,15 +364,4 @@ def gram_index_governance(
 def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
     """Meta fingerprint, or None when absent/torn/unreadable — every
     case a fingerprint-gated consumer treats as 'rebuild'."""
-    if os.path.exists(os.path.join(path, _PENDING)) or os.path.exists(
-        os.path.join(path, _BUILD_PENDING)
-    ):
-        return None
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    if not os.path.isdir(meta_dir):
-        return None
-    try:
-        return str(_read_meta(spark, path)["fingerprint"])
-    except Exception:
-        return None
+    return _stored_fingerprint(SPEC, spark, path)

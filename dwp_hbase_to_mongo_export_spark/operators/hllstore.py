@@ -1,15 +1,15 @@
 """Durable HLL register store — the SIXTH persisted artifact, and the
 one that deliberately needs almost none of the shared store protocol.
 
-The five row-stores (text postings, dedup signatures, IVF postings, PQ
-codes, gram hashes) carry a full crash bracket — pending markers,
+The six row stores (text postings, dedup signatures, edit prefixes,
+gram hashes, IVF postings, PQ codes) carry a full crash bracket — pending markers,
 batch-id exactly-once sidecars, flock, leaf recovery — because their
 append is ADDITIVE: replaying a crashed or retried append double-writes
 rows, and duplicated rows silently corrupt downstream answers. An HLL
 register relation composes by register-wise MAX, which is IDEMPOTENT:
 merging the same delta twice, or a torn half of it, yields the same
 registers as merging it once. So the entire durability story collapses
-to one primitive — write-to-staging + atomic swap (textindex's
+to one primitive — write-to-staging + atomic swap (storeprotocol's
 _swap_write, recover-on-entry) — and a retried append is simply safe.
 This module exists as much to DOCUMENT that contrast as to provide the
 store: choose merge algebras whose replays are no-ops and the
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sketches import HLL_M, HLL_W
-from .textindex import _append_lock, _recover_swap, _swap_write
+from .storeprotocol import _append_lock, _recover_swap, _swap_write
 
 _REGISTERS = "registers"
 _META = "meta.json"
@@ -84,7 +84,7 @@ def append_to_hll_registers(delta: DataFrame, path: str) -> None:
     MAX of (stored ∪ delta), swapped in atomically. Safe to RETRY
     verbatim after any crash — max-merge is idempotent, so no batch-id
     sidecar or pending marker is needed (the module docstring's
-    contrast with the five row stores). The merge reads the store and
+    contrast with the six row stores). The merge reads the store and
     writes its replacement; _swap_write stages first, so a crash at any
     point leaves either the old or the new registers, both valid."""
     _check_meta(path)

@@ -9,14 +9,15 @@
   path — join queries to candidates within a bucket (plus multiprobe
   neighbours), then exact-rank the survivors. Buckets are md5-derived so
   runs are reproducible across engines.
+- durable IVF postings and PQ codes stores: save / load / append /
+  recover / compact / govern; appends and recovery are the shared store
+  protocol (operators/storeprotocol.py).
 """
 
 from __future__ import annotations
 
-import json
 import logging
 import os
-import shutil
 import threading
 
 import numpy as np
@@ -262,34 +263,78 @@ def build_ivf_index(
     return index, cents
 
 
-# Durable-store crash protocol (round-9, shared with textindex/
-# dedupindex): an append records its batch ids under an
-# ``_append-pending`` marker BEFORE any store write, loaders refuse a
-# marked artifact, and recover_*_index_append purges the recorded ids —
-# a crashed append may already have landed rows, so a blind retry would
+# Durable-store crash protocol (operators/storeprotocol.py): an append
+# records its batch ids BEFORE any store write, loaders refuse a marked
+# artifact, and recover_*_index_append purges the recorded ids — a
+# crashed append may already have landed rows, so a blind retry would
 # double-write them (duplicate posting/code rows distort top-k and are
 # invisible to recall governance, which compares against the index's
 # own corpus).
-from .textindex import _PENDING, _UNKNOWN  # noqa: E402
-from .textindex import _recover_swap, _recovered_leaves, _swap_write  # noqa: E402
-from .textindex import (  # noqa: E402
-    _append_lock,
-    _clear_stale_ids_record,
-    _restore_last_append,
-    _write_last_append,
-    read_last_append,
+from .storeprotocol import (  # noqa: E402
+    Batch,
+    StoreSpec,
+    _batched_leaf_purge,
+    _swap_write,
+    append,
+    open_for_read,
+    read_last_append,  # noqa: F401 — public: the store's idempotence record
+    recover,
+    recover_leaves,
 )
 
-_PENDING_IDS = "_pending-ids"
+
+def _purge_ivf(spark, path: str, ids: DataFrame, scalars: dict) -> dict:
+    """Anti-join the recorded ids out of the recorded clusters' posting
+    leaves (the assignment is deterministic under the frozen quantiser,
+    so the recorded clusters are exactly where the crashed append's
+    rows can be) — ONE partition-pruned batched job. No stats or meta
+    to restore: posting rows are the IVF store's only mutable
+    relation."""
+    clusters = sorted(
+        int(r["cluster"]) for r in ids.select("cluster").distinct().collect()
+    )
+    leaves = _batched_leaf_purge(
+        spark,
+        os.path.join(path, "postings"),
+        "cluster=",
+        ids.select(F.col("id").alias("neighbor_id")).distinct(),
+        "neighbor_id",
+        columns=["neighbor_id", "cv"],
+        leaf_values=clusters,
+    )
+    return {"cluster_leaves_purged": len(leaves)}
 
 
-def _check_append_marker(path: str, recover_name: str) -> None:
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — batch "
-            "rows may already be stored; run "
-            f"{recover_name} and re-append the batch, or rebuild"
-        )
+def _purge_pq(spark, path: str, ids: DataFrame, scalars: dict) -> dict:
+    """Anti-join the recorded ids out of the flat codes store: one
+    store-sized swap rewrite — I/O only, no re-encoding."""
+    id_col = scalars["id_col"]
+    codes_dir = os.path.join(path, "codes")
+    codes = spark.read.parquet(codes_dir)
+    ids = ids.select(F.col("id").alias(id_col)).distinct()
+    _swap_write(
+        codes.join(F.broadcast(ids), id_col, "left_anti").select(*codes.columns),
+        codes_dir,
+    )
+    return {"codes_purged": True}
+
+
+IVF_SPEC = StoreSpec(
+    store="IVF index",
+    recover_fn="recover_ivf_index_append",
+    relations=(("postings", "cluster="),),
+    marker={},
+    purge=_purge_ivf,
+    untouched={"cluster_leaves_purged": 0},
+)
+PQ_SPEC = StoreSpec(
+    store="PQ index",
+    recover_fn="recover_pq_index_append",
+    relations=(("codes", None),),
+    marker={"id_col": str},
+    purge=_purge_pq,
+    untouched={"codes_purged": False},
+)
 
 
 def save_ivf_index(
@@ -328,23 +373,6 @@ def append_to_ivf_index(
     vec_col: str = "embedding",
     batch_id: str | None = None,
 ) -> dict:
-    """Serialization shell — mutators hold the store's exclusive
-    ``_append.lock`` (textindex._append_lock) so concurrent appends
-    queue instead of purging each other's in-flight rows; the protocol
-    itself is documented on ``_append_to_ivf_index_impl``."""
-    with _append_lock(path):
-        return _append_to_ivf_index_impl(
-            path, new_batch, id_col, vec_col, batch_id
-        )
-
-
-def _append_to_ivf_index_impl(
-    path: str,
-    new_batch: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: str | None = None,
-) -> dict:
     """Incrementally add a batch of vectors to a saved IVF index: the
     batch is assigned against the index's OWN stored centroids (the
     quantiser must not move, or existing posting lists silently become
@@ -356,156 +384,52 @@ def _append_to_ivf_index_impl(
     (HBaseReader.kt:131-150); here new vectors append behind the fixed
     coarse quantiser. Re-train + rebuild only when centroid drift
     (ann_recall_report's governance loop) says the quantiser went
-    stale."""
-    spark = new_batch.sparkSession
-    _recover_ivf_index_append_impl(spark, path)
-    # Idempotence gate (round-10, see textindex.read_last_append): a
-    # retry of an already-committed batch id no-ops instead of
-    # double-writing posting rows.
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if new_batch.isEmpty():
-        # a foreachBatch cadence can deliver empty micro-batches;
-        # writing them would add empty file-sets — pure fragmentation.
-        # Still consume the batch id (atomic sidecar write).
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
-    _, cents = load_ivf_index(spark, path)
-    batch_index = _nearest_centroids(new_batch, cents, 1, vec_col, "cluster").select(
-        "cluster",
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
+    stale. Crash-safety and exactly-once under ``batch_id``:
+    storeprotocol.append; the ids record holds each row's (id,
+    cluster)."""
+    return append(
+        IVF_SPEC,
+        path,
+        new_batch,
+        batch_id,
+        lambda spark: _plan_ivf_append(spark, path, new_batch, id_col, vec_col),
     )
-    # RETRY protocol (the textindex/dedupindex discipline): marker +
-    # the batch's (cluster, id) rows recorded BEFORE the store write,
-    # so a crashed append is purgeable instead of double-writable on
-    # retry. persist: the assignment feeds both the record and the
-    # append — one Arrow pass, and both writes see identical clusters.
-    batch_index = batch_index.persist()
-    try:
-        pending = os.path.join(path, _PENDING)
-        with open(pending, "w", encoding="utf-8") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "kind": "ivf",
-                        "protocol": 2,
-                        "last_append": read_last_append(path),
-                    }
-                )
-            )
-        batch_index.select(
-            F.col("neighbor_id").alias("id"), "cluster"
-        ).distinct().write.mode("overwrite").parquet(
-            os.path.join(path, _PENDING_IDS)
+
+
+def _plan_ivf_append(
+    spark, path: str, new_batch: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> Batch:
+    _, cents = load_ivf_index(spark, path)
+    # persisted: the assignment feeds both the ids record and the
+    # insert — one Arrow pass, and both writes see identical clusters
+    batch_index = (
+        _nearest_centroids(new_batch, cents, 1, vec_col, "cluster")
+        .select(
+            "cluster",
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("cv"),
         )
+        .persist()
+    )
+
+    def insert() -> None:
         batch_index.write.mode("append").partitionBy("cluster").parquet(
             os.path.join(path, "postings")
         )
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        # Commit point (round-9 advice): marker removal IS the commit
-        # record and precedes the ids-record delete — a crash between
-        # the two leaves an inert marker-less ids dir, never a live
-        # marker whose purge record is gone.
-        os.remove(pending)
-        shutil.rmtree(os.path.join(path, _PENDING_IDS))
-    finally:
-        batch_index.unpersist()
-    return {"committed": True, "skipped_duplicate_batch": False}
+
+    return Batch(
+        marker={},
+        ids=batch_index.select(F.col("neighbor_id").alias("id"), "cluster").distinct(),
+        insert=insert,
+        cached=(batch_index,),
+    )
 
 
 def recover_ivf_index_append(spark, path: str) -> dict:
-    """Locked entry point for standalone recovery — holds the store's
-    ``_append.lock`` so a recovery never races a live append (whose
-    marker it would mis-read as torn). Protocol documented on
-    ``_recover_ivf_index_append_impl``."""
-    with _append_lock(path):
-        return _recover_ivf_index_append_impl(spark, path)
-
-
-def _recover_ivf_index_append_impl(spark, path: str) -> dict:
     """Return a torn-append IVF artifact to its exact pre-append state
-    so the same batch can be re-appended safely: anti-join the recorded
-    ``_pending-ids`` out of the recorded clusters' posting leaves (the
-    assignment is deterministic under the frozen quantiser, so the
-    recorded clusters are exactly where the crashed append's rows can
-    be). Leaf listing goes through the swap-remnant pre-pass, so a
-    recovery that itself died mid-swap re-runs cleanly. No stats or
-    meta to restore — posting rows are the IVF store's only mutable
-    relation. No-op without a marker."""
-    pending = os.path.join(path, _PENDING)
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, AttributeError):
-        protocol = 1
-        old_last = _UNKNOWN
-    postings_dir = os.path.join(path, "postings")
-    _recovered_leaves(postings_dir, "cluster=")
-    purged = 0
-    pids_dir = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids_dir, "_SUCCESS")):
-        # Round-9 advice: a protocol-2 marker without a committed ids
-        # record proves the posting store is untouched (the record
-        # precedes the store write; marker removal is the commit
-        # record) — clean up and report so. Pre-v2 markers are
-        # ambiguous ('nothing written' vs 'fully committed' under the
-        # old delete-ids-first ordering): a caller told "recovered" by
-        # that state would re-append and double-write, so refuse.
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — for a "
-                "pre-protocol-2 marker this is ambiguous between "
-                "'nothing written' and 'fully committed' and cannot be "
-                "auto-recovered; rebuild the index from the corpus"
-            )
-        if os.path.isdir(pids_dir):
-            shutil.rmtree(pids_dir)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {
-            "recovered": True,
-            "cluster_leaves_purged": 0,
-            "store_untouched": True,
-        }
-    pids = spark.read.parquet(pids_dir)
-    clusters = sorted(
-        int(r["cluster"])
-        for r in pids.select("cluster").distinct().collect()
-    )
-    ids = pids.select(F.col("id").alias("neighbor_id")).distinct()
-
-    # ONE partition-pruned batched job over the recorded clusters (the
-    # textindex._batched_leaf_purge discipline — per-leaf jobs paid a
-    # scheduling round-trip per touched cluster); idempotent on partial
-    # failure via the marker.
-    from .textindex import _batched_leaf_purge
-
-    purged = len(
-        _batched_leaf_purge(
-            spark,
-            postings_dir,
-            "cluster=",
-            ids,
-            "neighbor_id",
-            columns=["neighbor_id", "cv"],
-            leaf_values=clusters,
-        )
-    )
-    # Sidecar is pre-append state too (see textindex recovery).
-    _restore_last_append(path, old_last)
-    # Marker removal commits the recovery; a surviving ids dir is inert.
-    os.remove(pending)
-    shutil.rmtree(pids_dir)
-    return {"recovered": True, "cluster_leaves_purged": purged}
+    so the same batch can be re-appended safely: purge the recorded ids
+    from the recorded clusters' posting leaves (storeprotocol.recover)."""
+    return recover(IVF_SPEC, spark, path)
 
 
 def compact_ivf_postings(
@@ -527,6 +451,7 @@ def compact_ivf_postings(
     are untouched — compaction moves bytes, never the quantiser."""
     from ..sinks.compaction import compact_partitioned_dir
 
+    recover_leaves(IVF_SPEC, path)
     return compact_partitioned_dir(
         spark, os.path.join(path, "postings"), target_bytes=target_bytes
     )
@@ -543,7 +468,7 @@ def load_ivf_index(spark, path: str, expect_fingerprint: str | None = None):
     a silently wrong answer, so path-keyed reuse must verify content."""
     from .clustering import rows_to_centroids
 
-    _check_append_marker(path, "recover_ivf_index_append")
+    open_for_read(IVF_SPEC, path)
     if expect_fingerprint is not None:
         meta_dir = os.path.join(path, "meta")
         stored = None
@@ -1026,7 +951,7 @@ def load_pq_index(spark, path: str):
     build_pq_index does, ready for query_pq — a fresh session queries
     the index without re-training or re-encoding anything. Refuses a
     torn artifact (append died mid-flight; see recover_pq_index_append)."""
-    _check_append_marker(path, "recover_pq_index_append")
+    open_for_read(PQ_SPEC, path)
     codes = spark.read.parquet(os.path.join(path, "codes"))
     rows = spark.read.parquet(os.path.join(path, "codebooks")).collect()
     by: dict[int, list] = {}
@@ -1048,23 +973,6 @@ def append_to_pq_index(
     vec_col: str = "embedding",
     batch_id: str | None = None,
 ) -> dict:
-    """Serialization shell — mutators hold the store's exclusive
-    ``_append.lock`` (textindex._append_lock) so concurrent appends
-    queue instead of purging each other's in-flight rows; the protocol
-    itself is documented on ``_append_to_pq_index_impl``."""
-    with _append_lock(path):
-        return _append_to_pq_index_impl(
-            path, new_batch, id_col, vec_col, batch_id
-        )
-
-
-def _append_to_pq_index_impl(
-    path: str,
-    new_batch: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: str | None = None,
-) -> dict:
     """Incrementally add a batch of vectors to a saved PQ index: the
     batch is encoded with the index's OWN stored codebooks (the
     quantiser must not move, or existing codes silently stop being
@@ -1076,117 +984,42 @@ def _append_to_pq_index_impl(
     same cadence the IVF postings store uses. Re-train + rebuild when
     recall governance says the codebooks went stale (the loaded index's
     results are pinned identical to in-session ones, so the in-session
-    ann_recall_report PQ row transfers verbatim to this artifact)."""
-    spark = new_batch.sparkSession
-    _recover_pq_index_append_impl(spark, path)
-    # Idempotence gate (round-10, see textindex.read_last_append)
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if new_batch.isEmpty():
-        # see append_to_ivf_index: empty micro-batches would only
-        # fragment; still consume the batch id
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
+    ann_recall_report PQ row transfers verbatim to this artifact).
+    Crash-safety and exactly-once under ``batch_id``:
+    storeprotocol.append; the marker records the id column name so
+    recovery can anti-join without the caller's arguments."""
+    return append(
+        PQ_SPEC,
+        path,
+        new_batch,
+        batch_id,
+        lambda spark: _plan_pq_append(spark, path, new_batch, id_col, vec_col),
+    )
+
+
+def _plan_pq_append(
+    spark, path: str, new_batch: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> Batch:
     _, books = load_pq_index(spark, path)
-    # RETRY protocol (see append_to_ivf_index): ids recorded before the
-    # store write; the marker records the id column name so recovery
-    # can anti-join without the caller's arguments.
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "kind": "pq",
-                    "id_col": id_col,
-                    "protocol": 2,
-                    "last_append": read_last_append(path),
-                }
-            )
-        )
-    new_batch.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _PENDING_IDS))
-    pq_encode(new_batch, books, id_col=id_col, vec_col=vec_col).write.mode(
-        "append"
-    ).parquet(os.path.join(path, "codes"))
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # Commit point (round-9 advice): marker removal IS the commit record
-    # and precedes the ids-record delete (see append_to_ivf_index).
-    os.remove(pending)
-    shutil.rmtree(os.path.join(path, _PENDING_IDS))
-    return {"committed": True, "skipped_duplicate_batch": False}
+
+    def insert() -> None:
+        pq_encode(new_batch, books, id_col=id_col, vec_col=vec_col).write.mode(
+            "append"
+        ).parquet(os.path.join(path, "codes"))
+
+    return Batch(
+        marker={"id_col": id_col},
+        ids=new_batch.select(F.col(id_col).alias("id")).distinct(),
+        insert=insert,
+    )
 
 
 def recover_pq_index_append(spark, path: str) -> dict:
-    """Locked entry point for standalone recovery — holds the store's
-    ``_append.lock`` so a recovery never races a live append (whose
-    marker it would mis-read as torn). Protocol documented on
-    ``_recover_pq_index_append_impl``."""
-    with _append_lock(path):
-        return _recover_pq_index_append_impl(spark, path)
-
-
-def _recover_pq_index_append_impl(spark, path: str) -> dict:
     """Return a torn-append PQ artifact to its exact pre-append state:
-    anti-join the recorded ``_pending-ids`` out of the flat codes store
-    (one store-sized swap rewrite — I/O only, no re-encoding; the rare
-    recovery path, vs the re-encode-everything rebuild that was
-    previously the only safe answer). No-op without a marker; raises on
-    a pre-protocol (unparseable) marker."""
-    pending = os.path.join(path, _PENDING)
-    codes_dir = os.path.join(path, "codes")
-    _recover_swap(codes_dir)
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        id_col = str(state["id_col"])
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "pre-protocol or corrupt state cannot be auto-recovered; "
-            "rebuild the index from the corpus"
-        ) from None
-    pids_dir = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids_dir, "_SUCCESS")):
-        # Round-9 advice: protocol-2 marker without a committed ids
-        # record → codes store provably untouched, clean up; pre-v2 →
-        # ambiguous, refuse (see recover_ivf_index_append).
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — for a "
-                "pre-protocol-2 marker this is ambiguous between "
-                "'nothing written' and 'fully committed' and cannot be "
-                "auto-recovered; rebuild the index from the corpus"
-            )
-        if os.path.isdir(pids_dir):
-            shutil.rmtree(pids_dir)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {"recovered": True, "codes_purged": False, "store_untouched": True}
-    ids = (
-        spark.read.parquet(pids_dir)
-        .select(F.col("id").alias(id_col))
-        .distinct()
-    )
-    codes = spark.read.parquet(codes_dir)
-    cleaned = codes.join(F.broadcast(ids), id_col, "left_anti").select(
-        *codes.columns
-    )
-    _swap_write(cleaned, codes_dir)
-    # Sidecar is pre-append state too (see textindex recovery).
-    _restore_last_append(path, old_last)
-    # Marker removal commits the recovery; a surviving ids dir is inert.
-    os.remove(pending)
-    shutil.rmtree(pids_dir)
-    return {"recovered": True, "codes_purged": True}
+    anti-join the recorded ids out of the flat codes store
+    (storeprotocol.recover) — the rare recovery path, vs the
+    re-encode-everything rebuild."""
+    return recover(PQ_SPEC, spark, path)
 
 
 def compact_pq_codes(
@@ -1200,6 +1033,7 @@ def compact_pq_codes(
     quantiser."""
     from ..sinks.compaction import compact_parquet_dir
 
+    recover_leaves(PQ_SPEC, path)
     return compact_parquet_dir(
         spark, os.path.join(path, "codes"), target_bytes=target_bytes
     )

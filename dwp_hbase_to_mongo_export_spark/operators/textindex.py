@@ -41,25 +41,12 @@ mode appends new cells behind a fixed artifact, HBaseReader.kt:131-150):
   posting store after many appends (sinks/compaction per-leaf
   crash-safe protocol; the Hive bucket layout and its static pruning
   survive).
-* Crash-safety: stats/meta rewrites go through a staging dir + swap
-  (recover-on-entry, same discipline as the compactor); an append in
-  flight drops an ``_append-pending`` marker that query_text_index
-  refuses to read through — a torn append (postings appended, stats
-  not yet merged) can therefore never serve silently-wrong scores.
-  Appends are NOT blindly retryable (the posting rows may already be
-  in the store when the marker is found); ``recover_text_index_append``
-  purges the recorded delta and restores the recorded pre-append
-  statistics, after which the SAME delta re-appends safely. Passing a
-  ``batch_id`` (the caller's correlation/run id — the reference keys
-  every run by one) additionally closes the crash-after-commit window:
-  the id is stamped into an atomic ``_last-append`` sidecar inside the
-  marker bracket, and a retry of an already-committed batch no-ops —
-  exactly-once appends under at-least-once retry (round 10; see
-  read_last_append). An
-  in-place REBUILD over an existing artifact is bracketed by its own
-  ``_build-pending`` marker (overwrites land postings→stats→meta, so a
-  mid-rebuild crash would otherwise leave new postings under old,
-  readable meta with no other trace).
+* Crash-safety is the shared store protocol (operators/storeprotocol.py):
+  the append's marker records the pre-append meta scalars and
+  ``_pending-docs`` the delta's doc ids; ``recover_text_index_append``
+  purges those postings, re-derives the purged buckets' df stats and
+  restores the recorded meta, so a torn append never serves
+  silently-wrong scores and the SAME delta re-appends safely.
 
 Query-time plan shape: pruned postings scan (|query terms| buckets)
 ⋈ broadcast stats ⋈ broadcast meta → TakeOrdered top-n. Zero Python,
@@ -75,152 +62,28 @@ the ANN indexes.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .storeprotocol import (
+    Batch,
+    StoreSpec,
+    _batched_leaf_purge,
+    append,
+    open_for_read,
+    opt_str,
+    read_last_append,  # noqa: F401 — public: the store's idempotence record
+    rebuild_bracket,
+    recover,
+    recover_leaves,
+)
+from .storeprotocol import stored_fingerprint as _stored_fingerprint
 from .textops import _doc_tokens
 
 N_TERM_BUCKETS = 64
-_PENDING = "_append-pending"
 _PENDING_DOCS = "_pending-docs"
-_BUILD_PENDING = "_build-pending"
-_LAST_APPEND = "_last-append"
-# recovery sentinel: a marker written before the batch-id protocol has
-# no "last_append" key — the sidecar must then be left alone (it may
-# hold a legitimately committed earlier batch id)
-_UNKNOWN = "__no-last-append-recorded__"
-
-
-def _append_lock(path: str):
-    """Exclusive per-store advisory lock serializing MUTATIONS (append,
-    recovery, in-place rebuild). Without it, two concurrent appends are
-    mutually destructive in a way no marker can fix: each one's
-    entry-time recovery reads the OTHER's live marker as a torn append
-    and purges its in-flight rows, and the second marker write
-    overwrites the first's recorded pre-append state. POSIX flock on a
-    file INSIDE the store (so the lock travels with the artifact),
-    released by the OS if the holder dies — a crashed append leaves its
-    marker, never a wedged lock. Readers stay lock-free: a live
-    append's marker already makes them refuse loudly, which is the
-    store's documented consistency model."""
-    import contextlib
-    import fcntl
-
-    @contextlib.contextmanager
-    def _ctx():
-        os.makedirs(path, exist_ok=True)
-        fd = os.open(
-            os.path.join(path, "_append.lock"), os.O_CREAT | os.O_RDWR, 0o600
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
-    return _ctx()
-
-
-def read_last_append(path: str) -> str | None:
-    """The batch id of the last COMMITTED append at ``path`` (None when
-    no batch-id-stamped append ever committed). This is the store's
-    idempotence record: a crash can always land between the commit
-    point (marker removal) and the CALLER learning of it, so ingest
-    retries are inevitable — and a retry of an already-committed batch
-    would double-write rows that recovery (correctly) refuses to touch.
-    The reference keys every run by a correlation id
-    (HBaseReader.kt/UberTestSpec.kt's correlationId); passing that id
-    as ``batch_id`` to the append makes the retry an explicit no-op:
-    exactly-once appends under at-least-once delivery.
-
-    SINGLE-SLOT by design: the sidecar records the LAST committed
-    batch only — a marker-bracketed store can have at most one append
-    in flight, and Structured Streaming replays at most the last
-    uncommitted epoch against a durable checkpoint
-    (streaming.index_stream_ingest and its per-store bindings), so the
-    retry that can
-    actually occur is always against the last slot. A full re-delivery
-    of older batches (fresh checkpoint, source rewind) is a rebuild
-    scenario, deliberately NOT absorbed."""
-    f = os.path.join(path, _LAST_APPEND)
-    if not os.path.exists(f):
-        return None
-    with open(f, encoding="utf-8") as fh:
-        try:
-            return json.loads(fh.read()).get("batch_id")
-        except ValueError:
-            return None
-
-
-def _write_last_append(path: str, batch_id: str) -> None:
-    """Atomic (write-temp + rename) sidecar update — written AFTER the
-    store/stats/meta writes and BEFORE the marker removal, so the
-    marker bracket protects it like every other mutation."""
-    f = os.path.join(path, _LAST_APPEND)
-    tmp = f + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(json.dumps({"batch_id": batch_id}))
-    os.replace(tmp, f)
-
-
-def _restore_last_append(path: str, old) -> None:
-    """Recovery-side sidecar restore from the marker's recorded value:
-    None -> remove (no batch had ever committed), a string -> rewrite,
-    the _UNKNOWN sentinel (pre-protocol marker) -> leave untouched."""
-    if old == _UNKNOWN:
-        return
-    f = os.path.join(path, _LAST_APPEND)
-    if old is None:
-        if os.path.exists(f):
-            os.remove(f)
-    else:
-        _write_last_append(path, old)
-
-
-def _clear_stale_ids_record(path: str, ids_name: str) -> dict:
-    """No-marker recovery tail, shared by all the durable stores: a
-    marker-LESS ids record is inert junk from a crash between the
-    commit point (marker removal) and the ids-record delete — but it
-    must not survive into the NEXT append, which writes its own marker
-    BEFORE Spark's overwrite replaces the ids dir. A crash inside that
-    window would pair the fresh marker with the PREVIOUS batch's
-    committed ids record, and recovery would then purge
-    already-committed store rows while restoring meta that still counts
-    them — silent corruption that even governance's distinct checks
-    cannot see (round-11 advice). Clearing the stale record here keeps
-    the invariant every recovery relies on: an ids record on disk
-    always belongs to the live marker. Every append runs entry-time
-    recovery first, so this executes before any new marker exists."""
-    stale = os.path.join(path, ids_name)
-    if os.path.isdir(stale):
-        shutil.rmtree(stale)
-        return {"recovered": False, "stale_ids_cleared": True}
-    return {"recovered": False}
-
-
-def _check_markers(path: str) -> None:
-    """Shared reader-side refusal: a marked artifact must never be
-    scored against — its relations may disagree. The messages advise
-    the action that is actually SAFE for each marker (a crashed append
-    may already have landed posting rows, so 'retry the append' without
-    recovery would double-write them — round-8 advice)."""
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — postings/stats/meta "
-            "may mix two generations; rebuild the index from the corpus"
-        )
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — the "
-            "postings and statistics may disagree (posting rows may "
-            "already be stored); run recover_text_index_append and "
-            "re-append the delta, or rebuild the index"
-        )
 
 
 def term_bucket(term: Column) -> Column:
@@ -282,6 +145,60 @@ def _with_avgdl(meta_counts: DataFrame) -> DataFrame:
     )
 
 
+def _df_stats(postings: DataFrame) -> DataFrame:
+    """Per-bucket per-term df from bucket-partitioned postings (df ==
+    posting rows per term — exact, bucket-local)."""
+    return (
+        postings.groupBy("bucket", "term")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+        .select("term", "df", "bucket")
+    )
+
+
+def _purge(spark: SparkSession, path: str, ids: DataFrame, scalars: dict) -> dict:
+    """Purge the recorded doc ids out of every posting bucket (delta ids
+    are NEW per the append contract, so the id purge removes exactly
+    the crashed append's rows) and re-derive the purged buckets' df
+    stats in the SAME pass: the purged frame is persisted
+    bucket-partitioned, so the per-bucket per-term df aggregate runs
+    exchange-free on the in-memory purge result instead of re-scanning
+    the whole store after the swap. Zero tokenisation — store-sized I/O
+    paid only on the rare recovery path."""
+    leaves = _batched_leaf_purge(
+        spark,
+        os.path.join(path, "postings"),
+        "bucket=",
+        ids.select("doc_id").distinct(),
+        "doc_id",
+        columns=["term", "doc_id", "tf", "dl"],
+        derived=(os.path.join(path, "stats"), _df_stats),
+    )
+    return {"buckets_purged": len(leaves)}
+
+
+def _meta(spark: SparkSession, scalars: dict) -> DataFrame:
+    """Meta from the marker's recorded scalars — n_docs counts
+    zero-token docs too, so it is NOT derivable from postings; hence
+    recorded, not recomputed."""
+    counts = spark.createDataFrame(
+        [(scalars["n_docs"], scalars["n_tok_docs"], scalars["sum_dl"])],
+        "n_docs bigint, n_tok_docs bigint, sum_dl bigint",
+    )
+    return _with_avgdl(counts).withColumn("fingerprint", F.lit(scalars["fingerprint"]))
+
+
+SPEC = StoreSpec(
+    store="text index",
+    recover_fn="recover_text_index_append",
+    relations=(("postings", "bucket="), ("stats", "bucket="), ("meta", None)),
+    marker={"n_docs": int, "n_tok_docs": int, "sum_dl": int, "fingerprint": opt_str},
+    purge=_purge,
+    untouched={"buckets_purged": 0},
+    meta=_meta,
+    ids_record=_PENDING_DOCS,
+)
+
+
 def build_text_index(
     corpus: DataFrame,
     path: str,
@@ -294,277 +211,24 @@ def build_text_index(
     df aggregation — the same work the live bm25_search pays per query,
     paid once. ``fingerprint`` (see functions/fingerprint) is stamped
     into meta so readers can reject the artifact when the source
-    changes under the same path.
-
-    Commit protocol: on a FIRST build meta is written LAST — the commit
-    record; a crashed first build leaves no meta and consumers treat
-    the artifact as absent. An in-place REBUILD over an existing
-    artifact cannot rely on that (the old meta stays readable while the
-    overwrites land postings→stats→meta), so it is bracketed by a
-    ``_build-pending`` marker that every reader refuses and
-    stored_fingerprint reports as 'rebuild' (round-8 advice)."""
-    os.makedirs(path, exist_ok=True)
-    # rebuilds are mutations like appends: hold the store's exclusive
-    # lock so a rebuild never interleaves with a live append's writes
-    with _append_lock(path):
-        return _build_text_index_locked(
-            corpus, path, text_col, id_col, fingerprint
+    changes under the same path. Meta is written last (the commit
+    record of a first build); an in-place rebuild is bracketed by
+    ``_build-pending`` (storeprotocol.rebuild_bracket)."""
+    with rebuild_bracket(SPEC, path, fingerprint):
+        postings, stats, meta_counts = _index_relations(corpus, text_col, id_col)
+        postings.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(path, "postings")
         )
-
-
-def _build_text_index_locked(
-    corpus: DataFrame,
-    path: str,
-    text_col: str,
-    id_col: str,
-    fingerprint: str | None,
-) -> None:
-    rebuild_over_existing = os.path.isdir(os.path.join(path, "meta")) or os.path.isdir(
-        os.path.join(path, "postings")
-    )
-    build_marker = os.path.join(path, _BUILD_PENDING)
-    if rebuild_over_existing:
-        with open(build_marker, "w", encoding="utf-8") as f:
-            f.write(fingerprint or "")
-    pending = os.path.join(path, _PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)  # full rebuild supersedes any torn append
-    pdocs = os.path.join(path, _PENDING_DOCS)
-    if os.path.isdir(pdocs):
-        shutil.rmtree(pdocs)
-    last = os.path.join(path, _LAST_APPEND)
-    if os.path.exists(last):
-        # batch ids committed against the OLD artifact must not no-op
-        # appends to the rebuilt one
-        os.remove(last)
-    postings, stats, meta_counts = _index_relations(corpus, text_col, id_col)
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "postings")
-    )
-    stats.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "stats")
-    )
-    meta = _with_avgdl(meta_counts).withColumn(
-        "fingerprint", F.lit(fingerprint or "")
-    )
-    meta.write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    if os.path.exists(build_marker):
-        os.remove(build_marker)
-
-
-def _recover_swap(target: str) -> None:
-    """Entry-time recovery for a _swap_write target (the compactor's
-    discipline): a crash between the two swap renames strands the live
-    table in ``.swap-old`` with no target — restore it; a backup
-    alongside a surviving target is a completed swap whose cleanup
-    died — drop it; staging remnants are always junk. Every reader and
-    writer of a swappable relation calls this BEFORE touching the
-    path — recovery inside the writer alone would leave a torn state
-    unreadable until the next write."""
-    staging = target.rstrip("/") + ".swap-staging"
-    backup = target.rstrip("/") + ".swap-old"
-    if os.path.isdir(backup):
-        if not os.path.isdir(target):
-            os.rename(backup, target)
-        else:
-            shutil.rmtree(backup)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-
-
-def _recovered_leaves(parent: str, prefix: str) -> list[str]:
-    """Leaf partition dirs of ``parent`` (``prefix``-style Hive names),
-    AFTER recovering any swap remnants a crashed leaf rewrite left
-    behind. The pre-pass matters: a leaf stranded mid-swap exists only
-    as ``<leaf>.swap-old`` — naive listing would either miss the leaf
-    entirely or treat the backup dir as a leaf of its own (and then
-    crash when the real leaf's _recover_swap removes it first)."""
-    if not os.path.isdir(parent):
-        return []
-    for d in sorted(os.listdir(parent)):
-        if d.endswith(".swap-old") or d.endswith(".swap-staging"):
-            _recover_swap(os.path.join(parent, d.rsplit(".swap-", 1)[0]))
-    return sorted(
-        d
-        for d in os.listdir(parent)
-        if d.startswith(prefix)
-        and ".swap-" not in d
-        and os.path.isdir(os.path.join(parent, d))
-    )
-
-
-def _swap_dir(staged: str, target: str) -> None:
-    """Atomically swap a fully-written ``staged`` dir into ``target``
-    (the tail of ``_swap_write`` without the write): backup-rename,
-    stage-rename, backup-delete. A crash between the renames leaves
-    ``<target>.swap-old``, which ``_recover_swap`` restores on the next
-    entry — the same remnant naming every swap in this store family
-    uses."""
-    backup = target.rstrip("/") + ".swap-old"
-    os.rename(target, backup)
-    os.rename(staged, target)
-    shutil.rmtree(backup)
-
-
-# Purge lists up to this size are inlined as a NOT-IN scan predicate in
-# _batched_leaf_purge (no broadcast-build job, parquet pushdown); larger
-# ones anti-join. Sized to keep literal plans small while covering every
-# realistic single-batch purge.
-_ISIN_PURGE_MAX = 10_000
-
-
-def _batched_leaf_purge(
-    spark: SparkSession,
-    sdir: str,
-    prefix: str,
-    purge: DataFrame,
-    key: str,
-    columns: list[str] | None = None,
-    sort_within: list[str] | None = None,
-    leaf_values: list | None = None,
-    fold=None,
-) -> list[str]:
-    """Anti-join ``purge``'s ``key`` values out of every ``prefix``
-    leaf under ``sdir`` with ONE Spark job, then swap each leaf in
-    atomically — the batched form of the per-leaf read-rewrite loop.
-
-    Why: recovery's cost at bench scale was JOB COUNT, not bytes — one
-    read+anti-join+write job per leaf (64-bucket stores, ×2 relations,
-    ×6 stores in the drill) is hundreds of tiny scheduling round-trips.
-    One partitioned read of the store parent + one ``partitionBy``
-    staging write computes every leaf's purged content in a single
-    job; the per-leaf atomicity the crash protocol relies on is
-    preserved because each leaf still changes only via its own
-    directory swap (same ``.swap-old`` remnant naming, recovered by
-    ``_recovered_leaves``/``_recover_swap`` on re-entry). Idempotent
-    exactly like the sequential form: the append marker outlives the
-    whole loop, so a crashed/partial pass re-runs cleanly, and a stale
-    ``.purge-staging`` from a crashed attempt is deleted on entry.
-
-    ``columns`` pins the data-file column order (must match what the
-    store's appends write); ``sort_within`` adds a within-file sort
-    (after the partition column) for stores whose files are row-group
-    pruned by min-max on that column; ``leaf_values`` restricts the
-    purge to those partition values (partition-pruned read — the
-    dedupindex sets/ shape where only the batch's buckets are
-    touched). A leaf whose rows are ALL purged gets an empty rewrite
-    via the single-leaf ``_swap_write`` fallback (the staging write
-    cannot emit an empty partition).
-
-    ``fold``, when given, is called with the purged, ``part``-
-    partitioned frame while it is PERSISTED (right after the staging
-    write, before the swaps) — a derived relation (e.g. the text
-    index's per-bucket df stats) can then be computed from the purge
-    pass's own output instead of re-reading the whole store afterwards
-    (round-11 verdict #3: the stats recompute was a second full store
-    scan + shuffle). Because the frame is hash-partitioned by ``part``,
-    a ``groupBy(part, ...)`` inside the fold aggregates WITHOUT another
-    exchange. The fold must only write STAGING output: the store has
-    not been swapped yet, so a crash inside the fold is recovered by
-    the marker protocol exactly like a crash inside the purge.
-
-    Returns the purged leaf names."""
-    part = prefix.rstrip("=")
-    leaves = _recovered_leaves(sdir, prefix)
-    if leaf_values is not None:
-        wanted = {f"{part}={v}" for v in leaf_values}
-        leaves = [leaf for leaf in leaves if leaf in wanted]
-    if not leaves:
-        return []
-    staging = sdir.rstrip("/") + ".purge-staging"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # a crashed earlier attempt; recompute
-    store = spark.read.parquet(sdir)
-    if leaf_values is not None:
-        store = store.filter(F.col(part).isin(list(leaf_values)))
-    # A SMALL purge list becomes a literal NOT-IN predicate instead of
-    # a broadcast anti-join: no broadcast-build job, and the In filter
-    # pushes down into the parquet scan (recovery's cost is scheduling
-    # round-trips, not bytes — guide §6). Exact anti-join semantics:
-    # a NULL store key never matches the join and must survive the
-    # filter too, and a NULL purge key matches nothing — it is dropped
-    # from the list, since `k NOT IN (.., NULL)` is NULL for every k
-    # and would purge every non-NULL row. Large (delta-sized) purges
-    # keep the broadcast anti-join — a million-term isin would bloat
-    # the plan, the opposite trade.
-    purge_vals = purge.select(key).distinct().limit(_ISIN_PURGE_MAX + 1).collect()
-    if len(purge_vals) <= _ISIN_PURGE_MAX:
-        vals = [r[0] for r in purge_vals if r[0] is not None]
-        cleaned = store.filter(
-            F.col(key).isNull() | ~F.col(key).isin(vals)
+        stats.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(path, "stats")
         )
-    else:
-        cleaned = store.join(F.broadcast(purge), key, "left_anti")
-    cols = columns or [c for c in cleaned.columns if c != part]
-    # one task per partition value -> exactly ONE file per rewritten
-    # leaf, like the old per-leaf rewrite (file-count governance and
-    # the compaction verdict both watch files-per-leaf)
-    cleaned = cleaned.select(*cols, part).repartition(F.col(part))
-    if sort_within:
-        cleaned = cleaned.sortWithinPartitions(part, *sort_within)
-    if fold is not None:
-        cleaned = cleaned.persist()
-    try:
-        cleaned.write.mode("overwrite").partitionBy(part).parquet(staging)
-        if fold is not None:
-            fold(cleaned)
-    finally:
-        if fold is not None:
-            cleaned.unpersist()
-    for leaf in leaves:
-        target = os.path.join(sdir, leaf)
-        staged = os.path.join(staging, leaf)
-        if os.path.isdir(staged):
-            _swap_dir(staged, target)
-        else:
-            # every row purged: rewrite the leaf empty (schema kept)
-            empty = (
-                spark.read.parquet(target)
-                .join(F.broadcast(purge), key, "left_anti")
-                .select(*cols)
-            )
-            _swap_write(empty, target)
-    shutil.rmtree(staging, ignore_errors=True)
-    return leaves
-
-
-def _swap_write(df: DataFrame, target: str, partition_by: str | None = None) -> None:
-    """Materialise ``df`` into a staging dir, then swap it in — safe
-    even when ``df`` READS from ``target`` (the merge shapes below),
-    because the staging write completes before the swap. Same
-    recover-on-entry discipline as sinks/compaction (_recover_swap); a
-    crash before the swap leaves the original untouched."""
-    staging = target.rstrip("/") + ".swap-staging"
-    backup = target.rstrip("/") + ".swap-old"
-    _recover_swap(target)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(staging)
-    os.rename(target, backup)
-    os.rename(staging, target)
-    shutil.rmtree(backup)
+        meta = _with_avgdl(meta_counts).withColumn(
+            "fingerprint", F.lit(fingerprint or "")
+        )
+        meta.write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
 
 def append_to_text_index(
-    delta: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint: str | None = None,
-    batch_id: str | None = None,
-) -> dict:
-    """Serialization shell — appends (and recovery/rebuild) hold the
-    store's exclusive ``_append.lock`` so concurrent mutators queue
-    instead of purging each other's in-flight rows (see _append_lock);
-    the protocol itself is documented on ``_append_to_text_index_impl``."""
-    with _append_lock(path):
-        return _append_to_text_index_impl(
-            delta, path, text_col, id_col, fingerprint, batch_id
-        )
-
-
-def _append_to_text_index_impl(
     delta: DataFrame,
     path: str,
     text_col: str = "text",
@@ -584,268 +248,82 @@ def _append_to_text_index_impl(
 
     Contract: delta doc ids are NEW (an updated existing doc requires a
     rebuild — its old postings are unreachable without a corpus-sized
-    anti-join). Crash-safety: the ``_append-pending`` marker brackets
-    the append; query_text_index refuses a marked index, so a torn
-    append (postings in, stats not yet merged) fails loudly instead of
-    scoring with inconsistent statistics. The stats/meta rewrites
-    themselves go through the staged swap.
+    anti-join). Crash-safety and exactly-once under ``batch_id`` are
+    the shared store protocol (storeprotocol.append): the marker
+    records the pre-append meta scalars and ``_pending-docs`` the
+    delta's doc ids before any store write."""
+    return append(
+        SPEC,
+        path,
+        delta,
+        batch_id,
+        lambda spark: _plan_append(spark, path, delta, text_col, id_col, fingerprint),
+    )
 
-    RETRY protocol (round-8 advice — a crashed append may already have
-    landed posting rows, so blind re-append would double tf/df): the
-    marker records the pre-append meta scalars and ``_pending-docs``
-    records the delta's doc ids BEFORE any store write; entry-time
-    ``recover_text_index_append`` (called here automatically) purges
-    those ids from the postings, recomputes the touched stats from the
-    purged store, and restores the recorded meta — returning the
-    artifact to its exact pre-append state, after which this append
-    (including a re-run of a crashed one with the same delta) is safe."""
-    spark = delta.sparkSession
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — rebuild the index "
-            "before appending"
-        )
-    _recover_text_index_append_impl(spark, path)
-    # Idempotence gate (round-10): a crash between the commit point and
-    # the caller observing it makes ingest retries inevitable; keying
-    # the append on the caller's batch/correlation id turns the retry
-    # of an ALREADY-COMMITTED batch into an explicit no-op instead of a
-    # double-write (see read_last_append).
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if delta.isEmpty():
-        # empty micro-batches would only fragment the store — but they
-        # still consume their batch id (atomic sidecar write; nothing
-        # else to protect)
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
-    _recover_swap(os.path.join(path, "stats"))
-    _recover_swap(os.path.join(path, "meta"))
+
+def _plan_append(
+    spark: SparkSession,
+    path: str,
+    delta: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    fingerprint: str | None = None,
+) -> Batch:
     old_meta = spark.read.parquet(os.path.join(path, "meta")).head()
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "protocol": 2,
-                    "n_docs": int(old_meta["n_docs"]),
-                    "n_tok_docs": int(old_meta["n_tok_docs"]),
-                    "sum_dl": int(old_meta["sum_dl"]),
-                    "fingerprint": old_meta["fingerprint"],
-                    "last_append": read_last_append(path),
-                }
+    postings, stats_delta, meta_counts = _index_relations(delta, text_col, id_col)
+
+    def insert() -> None:
+        postings.write.mode("append").partitionBy("bucket").parquet(
+            os.path.join(path, "postings")
+        )
+
+    def derive() -> tuple[list, dict]:
+        old_stats = spark.read.parquet(os.path.join(path, "stats")).select(
+            "term", "df", "bucket"
+        )
+        merged_stats = (
+            old_stats.unionByName(stats_delta)
+            .groupBy("term", "bucket")
+            .agg(F.sum("df").cast("bigint").alias("df"))
+            .select("term", "df", "bucket")
+        )
+        summed = (
+            spark.read.parquet(os.path.join(path, "meta"))
+            .select("n_docs", "n_tok_docs", "sum_dl")
+            .unionByName(meta_counts)
+            .agg(
+                F.sum("n_docs").cast("bigint").alias("n_docs"),
+                F.sum("n_tok_docs").cast("bigint").alias("n_tok_docs"),
+                F.sum("sum_dl").cast("bigint").alias("sum_dl"),
             )
         )
-    delta.select(F.col(id_col).alias("doc_id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _PENDING_DOCS))
-    postings, stats_delta, meta_counts = _index_relations(delta, text_col, id_col)
-    postings.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(path, "postings")
-    )
-    old_stats = spark.read.parquet(os.path.join(path, "stats")).select(
-        "term", "df", "bucket"
-    )
-    merged_stats = (
-        old_stats.unionByName(stats_delta)
-        .groupBy("term", "bucket")
-        .agg(F.sum("df").cast("bigint").alias("df"))
-        .select("term", "df", "bucket")
-    )
-    _swap_write(merged_stats, os.path.join(path, "stats"), partition_by="bucket")
-    old_meta = spark.read.parquet(os.path.join(path, "meta")).select(
-        "n_docs", "n_tok_docs", "sum_dl"
-    )
-    summed = (
-        old_meta.unionByName(meta_counts)
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("n_tok_docs").cast("bigint").alias("n_tok_docs"),
-            F.sum("sum_dl").cast("bigint").alias("sum_dl"),
+        merged_meta = _with_avgdl(summed).withColumn(
+            "fingerprint", F.lit(fingerprint or "")
         )
+        return [("stats", merged_stats, "bucket"), ("meta", merged_meta, None)], {}
+
+    return Batch(
+        marker={
+            "n_docs": int(old_meta["n_docs"]),
+            "n_tok_docs": int(old_meta["n_tok_docs"]),
+            "sum_dl": int(old_meta["sum_dl"]),
+            "fingerprint": old_meta["fingerprint"],
+        },
+        ids=delta.select(F.col(id_col).alias("doc_id")).distinct(),
+        insert=insert,
+        derive=derive,
     )
-    merged_meta = _with_avgdl(summed).withColumn(
-        "fingerprint", F.lit(fingerprint or "")
-    )
-    _swap_write(merged_meta, os.path.join(path, "meta"))
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # Commit point (round-9 advice): removing the MARKER is the commit
-    # record, so it must precede the ids-record delete. A crash between
-    # the two leaves a marker-less stale ids dir — inert junk (recovery
-    # no-ops without a marker; the next append overwrites it) — instead
-    # of a live marker whose purge record is gone, which recovery would
-    # have mis-read as "restore meta, skip the purge" and silently
-    # reverted n_docs/avgdl under committed postings.
-    os.remove(pending)
-    shutil.rmtree(os.path.join(path, _PENDING_DOCS))
-    return {"committed": True, "skipped_duplicate_batch": False}
 
 
 def recover_text_index_append(spark: SparkSession, path: str) -> dict:
-    """Locked entry point for standalone recovery — holds the store's
-    ``_append.lock`` so a recovery never races a live append (whose
-    marker it would mis-read as torn). Protocol documented on
-    ``_recover_text_index_append_impl``."""
-    with _append_lock(path):
-        return _recover_text_index_append_impl(spark, path)
-
-
-def _recover_text_index_append_impl(spark: SparkSession, path: str) -> dict:
-    """Return a torn-append artifact to its EXACT pre-append state so
-    the same delta can be re-appended safely (round-8 advice: posting
-    rows may already be stored when the marker is found, so a blind
-    retry double-writes them and the duplicates even evade governance's
-    count_distinct checks).
-
-    Mechanics — everything needed is recorded BEFORE the first store
-    write, so recovery never needs the delta itself:
-
-    * purge: anti-join the recorded ``_pending-docs`` ids out of every
-      posting bucket leaf (delta ids are NEW per the append contract,
-      so id-purge removes exactly the crashed append's rows);
-    * stats: recompute each purged bucket's per-term df from its purged
-      postings (df == posting rows per term — exact, bucket-local);
-    * meta: restore the scalars recorded in the marker (n_docs counts
-      zero-token docs too, so it is NOT derivable from postings — hence
-      recorded, not recomputed).
-
-    Cost shape: the purge rewrites the posting/stats bucket leaves once
-    (store-sized I/O, zero tokenisation) — far cheaper than the full
-    rebuild that was previously the only safe answer, and paid only on
-    the rare recovery path; the happy-path append stays delta-sized.
-    No-op without a marker. Round-9 advice hardening: a protocol-2
-    marker whose ``_pending-docs`` record never committed proves no
-    store write happened (the record precedes every store write and the
-    marker's removal is the commit record) — recovery just cleans up
-    and reports ``store_untouched``; the same state under a pre-v2 or
-    unparseable marker is ambiguous and raises, advising rebuild."""
-    pending = os.path.join(path, _PENDING)
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_DOCS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        old = {
-            "n_docs": int(state["n_docs"]),
-            "n_tok_docs": int(state["n_tok_docs"]),
-            "sum_dl": int(state["sum_dl"]),
-            "fingerprint": str(state.get("fingerprint") or ""),
-        }
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "pre-protocol or corrupt state cannot be auto-recovered; "
-            "rebuild the index from the corpus"
-        ) from None
-    buckets_purged = 0
-    pdocs_dir = os.path.join(path, _PENDING_DOCS)
-    if not os.path.exists(os.path.join(pdocs_dir, "_SUCCESS")):
-        # Marker present but the purge record never committed. Under
-        # protocol 2 (marker removal is the commit record; the ids
-        # record precedes every store write) this PROVES no postings/
-        # stats/meta write happened — clean up the partial record and
-        # the marker, and leave the provably-untouched store alone.
-        # A pre-v2 marker is ambiguous between "nothing written" and
-        # "fully committed" (its commit order deleted the ids record
-        # FIRST), so restoring meta could silently revert n_docs/avgdl
-        # under committed postings: refuse loudly (round-9 advice).
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-docs record is missing or incomplete — for a "
-                "pre-protocol-2 marker this is ambiguous between "
-                "'nothing written' and 'fully committed' and cannot be "
-                "auto-recovered; rebuild the index from the corpus"
-            )
-        if os.path.isdir(pdocs_dir):
-            shutil.rmtree(pdocs_dir)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {"recovered": True, "buckets_purged": 0, "store_untouched": True}
-    doc_ids = spark.read.parquet(pdocs_dir).select("doc_id").distinct()
-    postings_dir = os.path.join(path, "postings")
-    stats_dir = os.path.join(path, "stats")
-    staging = stats_dir.rstrip("/") + ".purge-staging"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    # ONE pass purges every posting bucket AND derives the stats
-    # relation from the purge output (the ``fold``): the purged frame
-    # is persisted bucket-partitioned, so the per-bucket per-term df
-    # aggregate (df == posting rows per term — exact, bucket-local)
-    # runs exchange-free on the in-memory purge result instead of
-    # re-scanning the whole store after the swap (round-11 verdict #3:
-    # the recompute was the recovery's second full store read).
-    def _fold_stats(cleaned: DataFrame) -> None:
-        (
-            cleaned.groupBy("bucket", "term")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-            .select("term", "df", "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
-
-    leaves = _batched_leaf_purge(
-        spark,
-        postings_dir,
-        "bucket=",
-        doc_ids,
-        "doc_id",
-        columns=["term", "doc_id", "tf", "dl"],
-        fold=_fold_stats,
-    )
-    if leaves:
-        for leaf in leaves:
-            sleaf = os.path.join(stats_dir, leaf)
-            _recover_swap(sleaf)  # remnant from a crashed recovery
-            staged = os.path.join(staging, leaf)
-            if os.path.isdir(staged):
-                if os.path.isdir(sleaf):
-                    _swap_dir(staged, sleaf)
-                else:
-                    os.rename(staged, sleaf)
-            else:
-                # the purged bucket is empty: its stats leaf must be too
-                empty = (
-                    spark.read.parquet(os.path.join(postings_dir, leaf))
-                    .groupBy("term")
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-                    .select("term", "df")
-                )
-                if os.path.isdir(sleaf):
-                    _swap_write(empty, sleaf)
-                else:
-                    empty.write.mode("overwrite").parquet(sleaf)
-        shutil.rmtree(staging, ignore_errors=True)
-    buckets_purged = len(leaves)
-    restored = spark.createDataFrame(
-        [(old["n_docs"], old["n_tok_docs"], old["sum_dl"])],
-        "n_docs bigint, n_tok_docs bigint, sum_dl bigint",
-    )
-    restored = _with_avgdl(restored).withColumn(
-        "fingerprint", F.lit(old["fingerprint"])
-    )
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    if os.path.isdir(meta_dir):
-        _swap_write(restored, meta_dir)
-    else:
-        restored.write.mode("overwrite").parquet(meta_dir)
-    # The idempotence sidecar is part of the pre-append state too: the
-    # crash may have landed after the new batch id was stamped, and a
-    # restored-but-stamped store would wrongly no-op the legitimate
-    # re-append of the purged batch.
-    _restore_last_append(path, old_last)
-    # Same commit discipline as the append: marker removal commits the
-    # recovery; the ids record outliving the marker is inert.
-    os.remove(pending)
-    shutil.rmtree(pdocs_dir)
-    return {"recovered": True, "buckets_purged": buckets_purged}
+    """Return a torn-append index to its EXACT pre-append state so the
+    same delta can be re-appended safely (posting rows may already be
+    stored when the marker is found, so a blind retry would double tf/df
+    — and the duplicates even evade governance's count_distinct
+    checks): purge the recorded doc ids from every posting bucket,
+    recompute the purged buckets' df stats, restore the recorded meta
+    scalars. Protocol: storeprotocol.recover."""
+    return recover(SPEC, spark, path)
 
 
 def compact_text_index(
@@ -860,6 +338,7 @@ def compact_text_index(
     wholesale on every append, so only postings fragment."""
     from ..sinks.compaction import compact_partitioned_dir
 
+    recover_leaves(SPEC, path)
     return compact_partitioned_dir(
         spark, os.path.join(path, "postings"), target_bytes=target_bytes
     )
@@ -895,7 +374,7 @@ def text_index_governance(
     collects are STRUCTURALLY capped at max_terms rows: on a badly
     corrupted index the lists are samples (rebuild is already the
     verdict), never an unbounded driver collect."""
-    _check_markers(path)
+    open_for_read(SPEC, path)
     terms = sorted(set(sample_terms))[:max_terms]
     if not terms:
         raise ValueError(
@@ -962,28 +441,10 @@ def text_index_governance(
 
 
 def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
-    """The source fingerprint stamped into the index meta; None when
-    the artifact is absent, torn (pending append OR crashed-rebuild
-    marker), unreadable (empty/corrupt meta from a crashed overwrite —
-    guarded like the dedupindex twin, round-8 advice), or predates
-    fingerprinting — every case a fingerprint-checking consumer must
-    treat as 'rebuild'."""
-    if os.path.exists(os.path.join(path, _PENDING)) or os.path.exists(
-        os.path.join(path, _BUILD_PENDING)
-    ):
-        return None
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    if not os.path.isdir(meta_dir):
-        return None
-    try:
-        meta = spark.read.parquet(meta_dir)
-        if "fingerprint" not in meta.columns:
-            return None
-        row = meta.select("fingerprint").head()
-    except Exception:
-        return None
-    return row["fingerprint"] if row else None
+    """The source fingerprint stamped into the index meta; None for an
+    absent, torn or unreadable artifact (storeprotocol.stored_fingerprint)
+    — every case a fingerprint-checking consumer treats as 'rebuild'."""
+    return _stored_fingerprint(SPEC, spark, path)
 
 
 def query_text_index(
@@ -1003,9 +464,7 @@ def query_text_index(
     in-place rebuild died mid-flight): the relations may disagree and
     scoring would be silently wrong; the error advises the safe fix
     (recover_text_index_append for an append, rebuild for a rebuild)."""
-    _check_markers(path)
-    _recover_swap(os.path.join(path, "stats"))
-    _recover_swap(os.path.join(path, "meta"))
+    open_for_read(SPEC, path)
     buckets = sorted({_py_term_bucket(t) for t in query_terms})
     postings = (
         spark.read.parquet(os.path.join(path, "postings"))

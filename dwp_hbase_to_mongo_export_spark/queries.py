@@ -438,7 +438,7 @@ DRIVER_WINDOW_CHANGED = [
     # call pipeline.export_topic, which the one-pass export change
     # reworked (shared scan_envelopes front half); no gated query reaches
     # sinks.snapshot.write_encrypted_snapshots or
-    # textindex._batched_leaf_purge
+    # storeprotocol._batched_leaf_purge
     "export_pipeline_e2e",
     "export_unwrap_roundtrip",
     "streaming_export_pipeline",

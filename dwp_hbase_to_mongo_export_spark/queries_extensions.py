@@ -2598,6 +2598,8 @@ def _cached_pq_store(spark: SparkSession, sf_dir: str) -> str:
     corpus-sized build cost paid once per fingerprint."""
     import shutil as _shutil
 
+    from .operators import storeprotocol
+
     from .functions import indexcache
     from .functions.fingerprint import source_fingerprint
 
@@ -2607,7 +2609,7 @@ def _cached_pq_store(spark: SparkSession, sf_dir: str) -> str:
         fp_file = os.path.join(path, "_fingerprint")
         stored = None
         if os.path.exists(fp_file) and not os.path.exists(
-            os.path.join(path, "_append-pending")
+            os.path.join(path, storeprotocol._PENDING)
         ):
             with open(fp_file, encoding="utf-8") as f:
                 stored = f.read()
@@ -2655,12 +2657,10 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store's build flock so concurrent indexed queries serialize
     against the mid-drill marker instead of mistaking it for a torn
     store."""
-    import json as _json
     import time as _time
 
     from .functions import indexcache
-    from .operators import dedupindex, textindex
-    from .operators.textindex import read_last_append as _rla
+    from .operators import dedupindex, editindex, gramindex, storeprotocol, textindex
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2677,239 +2677,79 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 10 == 9) & (F.col("vec_id") < 3000)
     ).select((F.col("vec_id") + _OFF).alias("vec_id"), "embedding")
 
-    def _drill_text() -> tuple:
+    def _drill(store, cached, spec, plan, recover, purged) -> tuple:
+        # stage the torn append exactly as a crash right after the store
+        # insert leaves it — the protocol's own marker and ids record,
+        # then the store's insert hook — and time the recovery
+        path = cached(spark, sf_dir)
+        with indexcache.build_lock(path):
+            batch = plan(spark, path)
+            try:
+                storeprotocol.begin(spec, path, batch)
+                batch.insert()
+            finally:
+                batch.release()
+            t0 = _time.time()
+            res = recover(spark, path)
+            return (store, purged(res), round(_time.time() - t0, 3))
+
+    drills = [
         # all-bucket purge + per-bucket df recompute + meta restore
-        path = _cached_text_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            with open(os.path.join(path, textindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "n_tok_docs": int(m["n_tok_docs"]),
-                            "sum_dl": int(m["sum_dl"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            doc_delta.select("doc_id").distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, textindex._PENDING_DOCS))
-            postings, _, _ = textindex._index_relations(
-                doc_delta, "text", "doc_id"
-            )
-            postings.write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(path, "postings")
-            )
-            t0 = _time.time()
-            res = textindex.recover_text_index_append(spark, path)
-            return (
-                "text",
-                int(res["buckets_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_dedup() -> tuple:
+        (
+            "text",
+            _cached_text_index,
+            textindex.SPEC,
+            lambda sp, p: textindex._plan_append(sp, p, doc_delta),
+            textindex.recover_text_index_append,
+            lambda r: int(r["buckets_purged"]),
+        ),
         # all-band purge + set-bucket purge + meta restore
-        path = _cached_dedup_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            with open(os.path.join(path, dedupindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            doc_delta.select(F.col("doc_id").alias("id")).distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, dedupindex._PENDING_IDS))
-            bands, sets = dedupindex._sig_relations(
-                doc_delta,
-                "text",
-                "doc_id",
-                m["n_perm"],
-                m["rows_per_band"],
-                m["k"],
-                m["max_chars"],
-            )
-            bands.write.mode("append").partitionBy("band").parquet(
-                os.path.join(path, "bands")
-            )
-            sets.write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(path, "sets")
-            )
-            t0 = _time.time()
-            res = dedupindex.recover_dedup_index_append(spark, path)
-            return (
-                "dedup",
-                int(res["band_leaves_purged"]) + int(res["set_leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_ivf() -> tuple:
+        (
+            "dedup",
+            _cached_dedup_index,
+            dedupindex.SPEC,
+            lambda sp, p: dedupindex._plan_append(sp, p, doc_delta),
+            dedupindex.recover_dedup_index_append,
+            lambda r: int(r["band_leaves_purged"]) + int(r["set_leaves_purged"]),
+        ),
         # purge prunes to the batch's recorded clusters
-        path = _cached_ivf_store(spark, sf_dir)
-        with indexcache.build_lock(path):
-            _, cents = similarity.load_ivf_index(spark, path)
-            batch_index = similarity._nearest_centroids(
-                vec_delta, cents, 1, "embedding", "cluster"
-            ).select(
-                "cluster",
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("cv"),
-            )
-            with open(os.path.join(path, similarity._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "kind": "ivf",
-                            "protocol": 2,
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            batch_index.select(
-                F.col("neighbor_id").alias("id"), "cluster"
-            ).distinct().write.mode("overwrite").parquet(
-                os.path.join(path, similarity._PENDING_IDS)
-            )
-            batch_index.write.mode("append").partitionBy("cluster").parquet(
-                os.path.join(path, "postings")
-            )
-            t0 = _time.time()
-            res = similarity.recover_ivf_index_append(spark, path)
-            return (
-                "ivf",
-                int(res["cluster_leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_pq() -> tuple:
+        (
+            "ivf",
+            _cached_ivf_store,
+            similarity.IVF_SPEC,
+            lambda sp, p: similarity._plan_ivf_append(sp, p, vec_delta),
+            similarity.recover_ivf_index_append,
+            lambda r: int(r["cluster_leaves_purged"]),
+        ),
         # one anti-join rewrite of the flat codes store
-        path = _cached_pq_store(spark, sf_dir)
-        with indexcache.build_lock(path):
-            _, books = similarity.load_pq_index(spark, path)
-            with open(os.path.join(path, similarity._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "kind": "pq",
-                            "id_col": "vec_id",
-                            "protocol": 2,
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            vec_delta.select(F.col("vec_id").alias("id")).distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, similarity._PENDING_IDS))
-            similarity.pq_encode(vec_delta, books).write.mode("append").parquet(
-                os.path.join(path, "codes")
-            )
-            t0 = _time.time()
-            res = similarity.recover_pq_index_append(spark, path)
-            return (
-                "pq",
-                int(bool(res["codes_purged"])),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_gram() -> tuple:
+        (
+            "pq",
+            _cached_pq_store,
+            similarity.PQ_SPEC,
+            lambda sp, p: similarity._plan_pq_append(sp, p, vec_delta),
+            similarity.recover_pq_index_append,
+            lambda r: int(bool(r["codes_purged"])),
+        ),
         # all-leaf gh purge + meta restore on the span family's store
-        path = _cached_gram_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            from .operators import gramindex
-
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            store = spark.read.parquet(os.path.join(path, "grams")).select("gh")
-            new_ghs = (
-                gramindex._gram_relation(doc_delta, "text", "doc_id", int(m["n"]))
-                .join(store, "gh", "left_anti")
-            )
-            # stage the EXACT production marker shape, including the
-            # last_append slot a real protocol-2 append always records
-            # (round-11 advice — its absence read as the _UNKNOWN
-            # sentinel: benign, but the drill should drill reality)
-            with open(os.path.join(path, gramindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "n_grams": int(m["n_grams"]),
-                            "n": int(m["n"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            pids = os.path.join(path, gramindex._PENDING_IDS)
-            new_ghs.write.mode("overwrite").parquet(pids)
-            spark.read.parquet(pids).write.mode("append").partitionBy(
-                "bucket"
-            ).parquet(os.path.join(path, "grams"))
-            t0 = _time.time()
-            res = gramindex.recover_gram_index_append(spark, path)
-            return (
-                "gram",
-                int(res["leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_edit() -> tuple:
+        (
+            "gram",
+            _cached_gram_index,
+            gramindex.SPEC,
+            lambda sp, p: gramindex._plan_append(sp, p, doc_delta),
+            gramindex.recover_gram_index_append,
+            lambda r: int(r["leaves_purged"]),
+        ),
         # two-store id purge (prefix/ + docs/) + meta restore on the
         # edit-distance family's frozen-order prefix store
-        path = _cached_edit_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            from .operators import editindex
-
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            with open(os.path.join(path, editindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "k": int(m["k"]),
-                            "q": int(m["q"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            pids = os.path.join(path, editindex._PENDING_IDS)
-            doc_delta.select(F.col("doc_id").alias("id")).distinct().write.mode(
-                "overwrite"
-            ).parquet(pids)
-            frozen = spark.read.parquet(os.path.join(path, "df"))
-            emit, doc_rows = editindex._emit_rows(
-                doc_delta, frozen, int(m["k"]), int(m["q"])
-            )
-            emit.withColumn(
-                "gbucket", editindex._gbucket(F.col("g"))
-            ).write.mode("append").partitionBy("gbucket").parquet(
-                os.path.join(path, "prefix")
-            )
-            doc_rows.withColumn(
-                "bucket", editindex._dbucket(F.col("id"))
-            ).write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(path, "docs")
-            )
-            t0 = _time.time()
-            res = editindex.recover_edit_index_append(spark, path)
-            return (
-                "edit",
-                int(res["leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
+        (
+            "edit",
+            _cached_edit_index,
+            editindex.SPEC,
+            lambda sp, p: editindex._plan_append(sp, p, doc_delta),
+            editindex.recover_edit_index_append,
+            lambda r: int(r["leaves_purged"]),
+        ),
+    ]
 
     # The six stores are fully independent (own directories, own
     # locks), exactly like a production maintenance window over many
@@ -2917,18 +2757,8 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the slowest store, not the sum of six.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(6) as ex:
-        rows = [
-            f.result()
-            for f in [
-                ex.submit(_drill_text),
-                ex.submit(_drill_dedup),
-                ex.submit(_drill_ivf),
-                ex.submit(_drill_pq),
-                ex.submit(_drill_gram),
-                ex.submit(_drill_edit),
-            ]
-        ]
+    with ThreadPoolExecutor(len(drills)) as ex:
+        rows = [f.result() for f in [ex.submit(_drill, *d) for d in drills]]
 
     return spark.createDataFrame(
         rows, "store string, leaves_purged bigint, recover_sec double"

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
+
+from ..operators.storeprotocol import _recover_swap, _swap_dir
 
 
 def plan_compaction(
@@ -59,34 +60,22 @@ def compact_parquet_dir(
     nothing) when the directory already has fewer than
     ``min_files_to_compact`` files or one output file would not shrink
     the count. The rewrite goes through a sibling staging directory and
-    a swap; a crash mid-write leaves the original intact (the staging
-    dir is the only casualty). The swap itself is two renames, which is
-    NOT atomic: a crash between them leaves the data stranded in the
-    '.compact-old' backup — so entry-time recovery below restores a
-    stale backup before planning, and a missing input dir raises
-    instead of being read as an empty table (the same
-    publish-then-swap-then-recover discipline as the snapshot sink's
-    naming contract)."""
-    staging = input_dir.rstrip("/") + ".compact-staging"
-    backup = input_dir.rstrip("/") + ".compact-old"
-    # Crash recovery, in dependency order. A stale backup with NO input
-    # dir means the previous run died between the two renames: the
-    # backup IS the table — restore it. A stale backup alongside a
-    # surviving input dir is a completed swap whose cleanup died:
-    # the input dir is current, drop the backup. Stale staging is
-    # always junk (mid-write remnant or swapped-out source).
-    if os.path.isdir(backup):
-        if not os.path.isdir(input_dir):
-            os.rename(backup, input_dir)
-        else:
-            shutil.rmtree(backup)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
+    the durable stores' swap (operators/storeprotocol: ``.swap-staging``
+    then two renames through ``.swap-old``); a crash mid-write leaves
+    the original intact. The two renames are NOT atomic: a crash between
+    them strands the data in the ``.swap-old`` backup — so entry-time
+    recovery restores a stale backup before planning, and a missing
+    input dir raises instead of being read as an empty table. Because
+    the remnant naming is the stores' own, a store append or recovery
+    that runs after a crashed compaction restores the stranded leaf
+    BEFORE writing into the relation, instead of recreating the leaf
+    and leaving the backup to be deleted as a completed swap."""
+    _recover_swap(input_dir)
     if not os.path.isdir(input_dir):
         raise FileNotFoundError(
             f"{input_dir} does not exist (and no recoverable "
-            f"{backup} backup) — refusing to treat a missing table as "
-            "an empty one"
+            f"{input_dir}.swap-old backup) — refusing to treat a missing "
+            "table as an empty one"
         )
     plan = plan_compaction(input_dir, target_bytes)
     if plan["partitioned"]:
@@ -104,11 +93,10 @@ def compact_parquet_dir(
     ):
         return {**plan, "compacted": False}
 
+    staging = input_dir.rstrip("/") + ".swap-staging"
     df = spark.read.parquet(input_dir)
     df.repartition(plan["target_files"]).write.mode("overwrite").parquet(staging)
-    os.rename(input_dir, backup)
-    os.rename(staging, input_dir)
-    shutil.rmtree(backup)
+    _swap_dir(staging, input_dir)
     return {**plan, "compacted": True}
 
 
@@ -134,12 +122,12 @@ def compact_partitioned_dir(
 
     Returns {n_partitions, n_compacted, per_partition: {relpath: plan}}.
     """
-    # The walk must see THROUGH the flat compactor's crash-recovery
-    # artifacts: a stale '<leaf>.compact-old' is not a partition — it is
-    # the stranded backup of '<leaf>' (crash between the two swap
-    # renames), so the ORIGINAL leaf name goes on the work list and
-    # compact_parquet_dir's entry recovery restores it; stale staging
-    # dirs are junk the flat compactor clears itself.
+    # The walk must see THROUGH the swap's crash-recovery artifacts: a
+    # stale '<leaf>.swap-old' is not a partition — it is the stranded
+    # backup of '<leaf>' (crash between the two swap renames), so the
+    # ORIGINAL leaf name goes on the work list and compact_parquet_dir's
+    # entry recovery restores it; stale staging dirs are junk the flat
+    # compactor clears itself.
     raw: list[str] = []
     for root, dirs, names in os.walk(input_dir):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
@@ -147,12 +135,9 @@ def compact_partitioned_dir(
             raw.append(root)
     leaf_set: set[str] = set()
     for r in raw:
-        if r.endswith(".compact-staging"):
+        if r.endswith(".swap-staging"):
             continue
-        if r.endswith(".compact-old"):
-            leaf_set.add(r[: -len(".compact-old")])
-        else:
-            leaf_set.add(r)
+        leaf_set.add(r.removesuffix(".swap-old"))
     leaves = sorted(leaf_set)
     if not leaves:
         raise FileNotFoundError(
@@ -224,8 +209,7 @@ def fragmentation_report(
             d
             for d in dirs
             if not d.startswith(("_", "."))
-            and not d.endswith((".compact-staging", ".compact-old",
-                                ".swap-staging", ".swap-old"))
+            and not d.endswith((".swap-staging", ".swap-old"))
         ]
         data = [
             os.path.join(root, f)

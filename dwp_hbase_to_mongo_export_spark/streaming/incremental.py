@@ -531,7 +531,7 @@ def store_maintenance(
     compaction, when it fires, rewrites only fragmented leaves through
     the swap protocol — leaf-sized I/O, amortised across the epochs
     that fragmented them."""
-    from ..operators.textindex import _append_lock
+    from ..operators.storeprotocol import _append_lock
     from ..sinks.compaction import fragmentation_report
 
     def maintain() -> dict:

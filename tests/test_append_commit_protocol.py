@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from dwp_hbase_to_mongo_export_spark.operators import (
     dedupindex,
     similarity,
+    storeprotocol,
     textindex,
 )
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
@@ -78,7 +79,7 @@ def test_text_crash_after_commit_point_is_inert(
     path = str(tmp_path / "ix")
     textindex.build_text_index(old, path)
 
-    _selective_rmtree_boom(monkeypatch, textindex, textindex._PENDING_DOCS)
+    _selective_rmtree_boom(monkeypatch, storeprotocol, textindex._PENDING_DOCS)
     with pytest.raises(RuntimeError, match="after the commit point"):
         textindex.append_to_text_index(delta, path)
     monkeypatch.undo()
@@ -87,7 +88,7 @@ def test_text_crash_after_commit_point_is_inert(
     # and the no-marker recovery CLEARS it (round-11 advice: a stale
     # committed ids record must never coexist with the next append's
     # fresh marker)
-    assert not os.path.exists(os.path.join(path, textindex._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert os.path.isdir(os.path.join(path, textindex._PENDING_DOCS))
     assert textindex.recover_text_index_append(spark, path) == {
         "recovered": False,
@@ -112,7 +113,7 @@ def test_text_protocol2_marker_without_ids_record_cleans_up(
     )
     pre_meta = tuple(spark.read.parquet(path + "/meta").head())
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, textindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -130,7 +131,7 @@ def test_text_protocol2_marker_without_ids_record_cleans_up(
     res = textindex.recover_text_index_append(spark, path)
     assert res["recovered"] and res["store_untouched"]
     assert res["buckets_purged"] == 0
-    assert not os.path.exists(os.path.join(path, textindex._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert not os.path.isdir(pdocs)
     # meta untouched (n_docs/avgdl not reverted, fingerprint kept)
     assert tuple(spark.read.parquet(path + "/meta").head()) == pre_meta
@@ -142,7 +143,7 @@ def test_text_legacy_marker_without_ids_record_raises(spark, docs, tmp_path):
     path = str(tmp_path / "ix")
     textindex.build_text_index(docs.filter(F.col("doc_id") < 100), path)
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, textindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -175,18 +176,18 @@ def test_dedup_crash_after_commit_point_is_inert(
     path = str(tmp_path / "ix")
     dedupindex.build_dedup_index(old, path, **PARAMS)
 
-    _selective_rmtree_boom(monkeypatch, dedupindex, dedupindex._PENDING_IDS)
+    _selective_rmtree_boom(monkeypatch, storeprotocol, storeprotocol._PENDING_IDS)
     with pytest.raises(RuntimeError, match="after the commit point"):
         dedupindex.append_to_dedup_index(delta, path)
     monkeypatch.undo()
 
-    assert not os.path.exists(os.path.join(path, dedupindex._PENDING))
-    assert os.path.isdir(os.path.join(path, dedupindex._PENDING_IDS))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
+    assert os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     assert dedupindex.recover_dedup_index_append(spark, path) == {
         "recovered": False,
         "stale_ids_cleared": True,
     }
-    assert not os.path.isdir(os.path.join(path, dedupindex._PENDING_IDS))
+    assert not os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
 
     full = str(tmp_path / "full")
     dedupindex.build_dedup_index(corpus, full, **PARAMS)
@@ -214,7 +215,7 @@ def test_dedup_protocol2_marker_without_ids_record_cleans_up(
     )
     pre_meta = tuple(spark.read.parquet(path + "/meta").head())
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, dedupindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -227,7 +228,7 @@ def test_dedup_protocol2_marker_without_ids_record_cleans_up(
     res = dedupindex.recover_dedup_index_append(spark, path)
     assert res["recovered"] and res["store_untouched"]
     assert res["band_leaves_purged"] == 0 and res["set_leaves_purged"] == 0
-    assert not os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert tuple(spark.read.parquet(path + "/meta").head()) == pre_meta
     assert dedupindex.stored_fingerprint(spark, path) == "v1"
 
@@ -238,7 +239,7 @@ def test_dedup_legacy_marker_without_ids_record_raises(spark, docs, tmp_path):
         docs.filter(F.col("doc_id") < 100), path, **PARAMS
     )
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, dedupindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {"n_docs": int(m["n_docs"]), "fingerprint": m["fingerprint"]}
@@ -272,18 +273,18 @@ def test_ivf_crash_after_commit_point_is_inert(
     _small_ivf(spark, emb, path)
     new = emb.filter(F.col("vec_id") % 2 == 1)
 
-    _selective_rmtree_boom(monkeypatch, similarity, similarity._PENDING_IDS)
+    _selective_rmtree_boom(monkeypatch, storeprotocol, storeprotocol._PENDING_IDS)
     with pytest.raises(RuntimeError, match="after the commit point"):
         similarity.append_to_ivf_index(path, new)
     monkeypatch.undo()
 
-    assert not os.path.exists(os.path.join(path, similarity._PENDING))
-    assert os.path.isdir(os.path.join(path, similarity._PENDING_IDS))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
+    assert os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     assert similarity.recover_ivf_index_append(spark, path) == {
         "recovered": False,
         "stale_ids_cleared": True,
     }
-    assert not os.path.isdir(os.path.join(path, similarity._PENDING_IDS))
+    assert not os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     # the appended rows are all committed exactly once
     assert spark.read.parquet(path + "/postings").count() == emb.count()
     gov = similarity.ivf_index_governance(spark, path, list(range(10)), k=5)
@@ -296,19 +297,19 @@ def test_ivf_protocol2_marker_without_ids_record_cleans_up(
     path = str(tmp_path / "ivf")
     _small_ivf(spark, emb, path)
     pre = spark.read.parquet(path + "/postings").count()
-    with open(os.path.join(path, similarity._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(json.dumps({"kind": "ivf", "protocol": 2}))
     res = similarity.recover_ivf_index_append(spark, path)
     assert res["recovered"] and res["store_untouched"]
     assert res["cluster_leaves_purged"] == 0
-    assert not os.path.exists(os.path.join(path, similarity._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert spark.read.parquet(path + "/postings").count() == pre
 
 
 def test_ivf_legacy_marker_without_ids_record_raises(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     _small_ivf(spark, emb, path)
-    with open(os.path.join(path, similarity._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(json.dumps({"kind": "ivf"}))
     with pytest.raises(ValueError, match="ambiguous"):
         similarity.recover_ivf_index_append(spark, path)
@@ -324,18 +325,18 @@ def test_pq_crash_after_commit_point_is_inert(spark, emb, tmp_path, monkeypatch)
     path = str(tmp_path / "pq")
     similarity.save_pq_index(codes, books, path)
 
-    _selective_rmtree_boom(monkeypatch, similarity, similarity._PENDING_IDS)
+    _selective_rmtree_boom(monkeypatch, storeprotocol, storeprotocol._PENDING_IDS)
     with pytest.raises(RuntimeError, match="after the commit point"):
         similarity.append_to_pq_index(path, new)
     monkeypatch.undo()
 
-    assert not os.path.exists(os.path.join(path, similarity._PENDING))
-    assert os.path.isdir(os.path.join(path, similarity._PENDING_IDS))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
+    assert os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     assert similarity.recover_pq_index_append(spark, path) == {
         "recovered": False,
         "stale_ids_cleared": True,
     }
-    assert not os.path.isdir(os.path.join(path, similarity._PENDING_IDS))
+    assert not os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     got = spark.read.parquet(path + "/codes")
     assert got.count() == emb.count()
     assert got.select("vec_id").distinct().count() == emb.count()
@@ -348,12 +349,12 @@ def test_pq_protocol2_marker_without_ids_record_cleans_up(spark, emb, tmp_path):
     path = str(tmp_path / "pq")
     similarity.save_pq_index(codes, books, path)
     pre = spark.read.parquet(path + "/codes").count()
-    with open(os.path.join(path, similarity._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(json.dumps({"kind": "pq", "id_col": "vec_id", "protocol": 2}))
     res = similarity.recover_pq_index_append(spark, path)
     assert res["recovered"] and res["store_untouched"]
     assert res["codes_purged"] is False
-    assert not os.path.exists(os.path.join(path, similarity._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert spark.read.parquet(path + "/codes").count() == pre
 
 
@@ -363,7 +364,7 @@ def test_pq_legacy_marker_without_ids_record_raises(spark, emb, tmp_path):
     )
     path = str(tmp_path / "pq")
     similarity.save_pq_index(codes, books, path)
-    with open(os.path.join(path, similarity._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(json.dumps({"kind": "pq", "id_col": "vec_id"}))
     with pytest.raises(ValueError, match="ambiguous"):
         similarity.recover_pq_index_append(spark, path)
@@ -376,14 +377,14 @@ def test_batched_leaf_purge_null_purge_key(spark, tmp_path, monkeypatch, isin_ma
     branches — the inlined NOT-IN predicate (small lists) and the
     broadcast anti-join (``_ISIN_PURGE_MAX = 0`` forces it)."""
     if isin_max is not None:
-        monkeypatch.setattr(textindex, "_ISIN_PURGE_MAX", isin_max)
+        monkeypatch.setattr(storeprotocol, "_ISIN_PURGE_MAX", isin_max)
     sdir = str(tmp_path / "store")
     spark.createDataFrame(
         [(1, "a", 0), (2, "b", 0), (3, "c", 1), (None, "d", 1)],
         "id long, v string, part int",
     ).write.partitionBy("part").parquet(sdir)
     purge = spark.createDataFrame([(1,), (None,)], "id long")
-    leaves = textindex._batched_leaf_purge(spark, sdir, "part=", purge, "id")
+    leaves = storeprotocol._batched_leaf_purge(spark, sdir, "part=", purge, "id")
     assert leaves == ["part=0", "part=1"]
     kept = spark.read.parquet(sdir)
     assert sorted(r.id for r in kept.collect() if r.id is not None) == [2, 3]

@@ -7,7 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import clustering, dedup, similarity
+from dwp_hbase_to_mongo_export_spark.operators import (
+    clustering,
+    dedup,
+    similarity,
+    storeprotocol,
+)
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 
@@ -797,12 +802,10 @@ def test_ivf_torn_append_recovers_and_retries(spark, emb, tmp_path):
     after its posting rows landed (marker + pending-ids still present)
     must be purgeable — a blind retry would double-write the batch and
     duplicate neighbors distort top-k while staying invisible to recall
-    governance. The torn state is hand-rolled exactly as the crashed
-    append leaves it; recovery restores the pre-append postings and the
+    governance. The torn state is staged through the protocol's begin
+    step and the store's insert, exactly as the crashed append leaves
+    it; recovery restores the pre-append postings and the
     retried real append equals the clean path."""
-    import json as _json
-    import os as _os
-
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1)
     cents = similarity._resolve_centroids(
@@ -817,22 +820,12 @@ def test_ivf_torn_append_recovers_and_retries(spark, emb, tmp_path):
     similarity.save_ivf_index(idx, cents, path)
     pre = _ivf_postings_set(spark, path)
 
-    # hand-roll the crashed append's steps: marker, pending-ids, append
-    batch_index = similarity._nearest_centroids(
-        new, cents, 1, "embedding", "cluster"
-    ).select(
-        "cluster", F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    with open(_os.path.join(path, similarity._PENDING), "w") as f:
-        f.write(_json.dumps({"kind": "ivf"}))
-    batch_index.select(
-        F.col("neighbor_id").alias("id"), "cluster"
-    ).distinct().write.mode("overwrite").parquet(
-        _os.path.join(path, similarity._PENDING_IDS)
-    )
-    batch_index.write.mode("append").partitionBy("cluster").parquet(
-        path + "/postings"
-    )
+    # stage the crashed append through the protocol's begin step
+    # (marker + pending-ids) and the store's insert
+    batch = similarity._plan_ivf_append(spark, path, new)
+    storeprotocol.begin(similarity.IVF_SPEC, path, batch)
+    batch.insert()
+    batch.release()
 
     with pytest.raises(ValueError, match="recover_ivf_index_append"):
         similarity.load_ivf_index(spark, path)
@@ -871,9 +864,6 @@ def test_pq_torn_append_recovers_and_retries(spark, emb, tmp_path):
     """The PQ twin: recovery purges the recorded ids from the flat
     codes store (one I/O-only swap rewrite) and the retried append
     equals the clean path bit-for-bit."""
-    import json as _json
-    import os as _os
-
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1)
     codes, books = similarity.build_pq_index(old, m=4, k_codes=8, iters=2)
@@ -884,12 +874,9 @@ def test_pq_torn_append_recovers_and_retries(spark, emb, tmp_path):
         for r in spark.read.parquet(path + "/codes").collect()
     }
 
-    with open(_os.path.join(path, similarity._PENDING), "w") as f:
-        f.write(_json.dumps({"kind": "pq", "id_col": "vec_id"}))
-    new.select(F.col("vec_id").alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, similarity._PENDING_IDS))
-    similarity.pq_encode(new, books).write.mode("append").parquet(path + "/codes")
+    batch = similarity._plan_pq_append(spark, path, new)
+    storeprotocol.begin(similarity.PQ_SPEC, path, batch)
+    batch.insert()
 
     with pytest.raises(ValueError, match="recover_pq_index_append"):
         similarity.load_pq_index(spark, path)

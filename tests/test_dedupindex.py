@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import dedup, dedupindex
+from dwp_hbase_to_mongo_export_spark.operators import dedup, dedupindex, storeprotocol
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 # small n_perm/k keep the Arrow signature pass cheap at test scale while
@@ -59,8 +59,8 @@ def test_append_equals_full_build(spark, docs, tmp_path):
     for c in ("n_docs", "n_perm", "rows_per_band", "k", "max_chars", "id_col"):
         assert m_inc[c] == m_full[c], c
     # leftover protocol state never lingers after a clean append
-    assert not os.path.exists(os.path.join(inc, dedupindex._PENDING))
-    assert not os.path.isdir(os.path.join(inc, dedupindex._PENDING_IDS))
+    assert not os.path.exists(os.path.join(inc, storeprotocol._PENDING))
+    assert not os.path.isdir(os.path.join(inc, storeprotocol._PENDING_IDS))
 
 
 def test_query_matches_one_shot_lsh(spark, docs, tmp_path):
@@ -141,18 +141,18 @@ def test_torn_append_recovers_and_retries(spark, docs, tmp_path, monkeypatch):
     pre_bands, pre_sets = _bands_set(spark, path), _sets_set(spark, path)
     pre_meta = tuple(spark.read.parquet(path + "/meta").head())
 
-    real_swap = dedupindex._swap_write
+    real_swap = storeprotocol._swap_write
 
     def boom(df, target, partition_by=None):
         raise RuntimeError("simulated crash before the meta swap")
 
-    monkeypatch.setattr(dedupindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         dedupindex.append_to_dedup_index(delta, path)
-    monkeypatch.setattr(dedupindex, "_swap_write", real_swap)
+    monkeypatch.setattr(storeprotocol, "_swap_write", real_swap)
 
     # torn: marker present, band/set rows already in the store
-    assert os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert len(_bands_set(spark, path)) > len(pre_bands)
     with pytest.raises(ValueError, match="recover_dedup_index_append"):
         dedupindex.query_dedup_index(spark, path, delta)
@@ -207,7 +207,7 @@ def test_crashed_inplace_rebuild_leaves_build_marker(
         )
     monkeypatch.undo()
 
-    assert os.path.exists(os.path.join(path, dedupindex._BUILD_PENDING))
+    assert os.path.exists(os.path.join(path, storeprotocol._BUILD_PENDING))
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
         dedupindex.query_dedup_index(spark, path, docs.filter(F.col("doc_id") < 5))
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
@@ -219,7 +219,7 @@ def test_crashed_inplace_rebuild_leaves_build_marker(
     dedupindex.build_dedup_index(
         docs.filter(F.col("doc_id") < 50), path, fingerprint="v2", **PARAMS
     )
-    assert not os.path.exists(os.path.join(path, dedupindex._BUILD_PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._BUILD_PENDING))
     assert dedupindex.stored_fingerprint(spark, path) == "v2"
     assert dedupindex.dedup_index_governance(spark, path, [0, 7])["healthy"]
 
@@ -244,7 +244,7 @@ def test_recovery_survives_its_own_crash_mid_swap(spark, docs, tmp_path, monkeyp
     def boom(df, target, partition_by=None):
         raise RuntimeError("simulated crash before the meta swap")
 
-    monkeypatch.setattr(dedupindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError):
         dedupindex.append_to_dedup_index(delta, path)
     monkeypatch.undo()

@@ -15,7 +15,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import editdist, editindex
+from dwp_hbase_to_mongo_export_spark.operators import editdist, editindex, storeprotocol
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 
@@ -113,14 +113,14 @@ def test_torn_append_recovers_to_pre_append_state(
     pre_ids, pre_meta = _store_ids(spark, path), _meta(spark, path)
     pre_prefix = _store_ids(spark, path, "prefix")
 
-    real = editindex._swap_write
+    real = storeprotocol._swap_write
 
     def boom(df, target, partition_by=None):
         if target.endswith("meta"):
             raise RuntimeError("simulated crash before meta merge")
         return real(df, target, partition_by)
 
-    monkeypatch.setattr(editindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="before meta merge"):
         editindex.append_to_edit_index(delta, path, batch_id="b1")
     monkeypatch.undo()
@@ -152,22 +152,22 @@ def test_crash_after_commit_point_is_inert_and_cleared(
     real = shutil.rmtree
 
     def boom(p, *a, **k):
-        if str(p).endswith(editindex._PENDING_IDS):
+        if str(p).endswith(storeprotocol._PENDING_IDS):
             raise RuntimeError("simulated crash after the commit point")
         return real(p, *a, **k)
 
-    monkeypatch.setattr(editindex.shutil, "rmtree", boom)
+    monkeypatch.setattr(storeprotocol.shutil, "rmtree", boom)
     with pytest.raises(RuntimeError, match="after the commit point"):
         editindex.append_to_edit_index(delta, path)
     monkeypatch.undo()
 
-    assert not os.path.exists(os.path.join(path, editindex._PENDING))
-    assert os.path.isdir(os.path.join(path, editindex._PENDING_IDS))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
+    assert os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     assert editindex.recover_edit_index_append(spark, path) == {
         "recovered": False,
         "stale_ids_cleared": True,
     }
-    assert not os.path.isdir(os.path.join(path, editindex._PENDING_IDS))
+    assert not os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     assert _store_ids(spark, path) == sorted(
         r.doc_id for r in corpus.select("doc_id").collect()
     )
@@ -178,7 +178,7 @@ def test_protocol2_marker_without_ids_record_cleans_up(spark, docs, tmp_path):
     path = str(tmp_path / "ex")
     editindex.build_edit_index(corpus, path, k=8, q=4)
     pre_ids, pre_meta = _store_ids(spark, path), _meta(spark, path)
-    with open(os.path.join(path, editindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -220,7 +220,7 @@ def test_build_pending_refused_and_fingerprint_none(spark, docs, tmp_path):
     path = str(tmp_path / "ex")
     editindex.build_edit_index(corpus, path, k=8, q=4, fingerprint="v1")
     assert editindex.stored_fingerprint(spark, path) == "v1"
-    open(os.path.join(path, editindex._BUILD_PENDING), "w").close()
+    open(os.path.join(path, storeprotocol._BUILD_PENDING), "w").close()
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
         editindex.query_edit_index(spark, path, batch)
     assert editindex.stored_fingerprint(spark, path) is None
@@ -351,14 +351,14 @@ def test_normalised_policy_survives_append_and_recovery(
         [(4, "yet more unrelated filler words here")],
         "doc_id bigint, text string",
     )
-    real = editindex._swap_write
+    real = storeprotocol._swap_write
 
     def boom(df, target, partition_by=None):
         if target.endswith("meta"):
             raise RuntimeError("crash before meta merge")
         return real(df, target, partition_by)
 
-    monkeypatch.setattr(editindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="before meta merge"):
         editindex.append_to_edit_index(delta2, path, batch_id="b2")
     monkeypatch.undo()

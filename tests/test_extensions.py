@@ -6,7 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import dedup, multimodal, similarity, textops
+from dwp_hbase_to_mongo_export_spark.operators import (
+    dedup,
+    multimodal,
+    similarity,
+    storeprotocol,
+    textops,
+)
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 
@@ -474,6 +480,54 @@ def test_text_index_swap_recovers_from_crash_between_renames(spark, sf_dir, tmp_
     assert not _os.path.isdir(stats + ".swap-old")  # cleaned up
 
 
+def test_text_index_append_after_crashed_compaction_keeps_postings(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies between its two renames strands a posting
+    leaf in its swap backup. The next append must restore that leaf
+    BEFORE writing into the relation, so the compaction retry keeps
+    every posting. Under a separate compaction remnant naming the
+    append recreated the leaf, the retry deleted the stranded backup as
+    a 'completed swap', and the query silently returned one document
+    while the stored df still counted them all."""
+    import os as _os
+
+    textindex = _ti()
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(
+        [(i, f"alpha doc{i} word{i % 7}") for i in range(40)], schema
+    )
+    path = str(tmp_path / "ix")
+    textindex.build_text_index(docs, path)
+    textindex.append_to_text_index(
+        spark.createDataFrame([(40, "alpha extra")], schema), path
+    )
+    leaf = f"bucket={textindex._py_term_bucket('alpha')}."
+    real_rename = _os.rename
+
+    def boom(src, dst):
+        name = _os.path.basename(str(src))
+        if name.startswith(leaf) and name.endswith("staging"):
+            raise RuntimeError("simulated crash between the compaction's renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(_os, "rename", boom)
+    with pytest.raises(RuntimeError, match="compaction's renames"):
+        textindex.compact_text_index(spark, path)
+    monkeypatch.undo()
+
+    textindex.append_to_text_index(
+        spark.createDataFrame([(41, "alpha again")], schema), path
+    )
+    textindex.compact_text_index(spark, path)
+    hits = textindex.query_text_index(spark, path, ["alpha"], top_n=100).collect()
+    assert sorted(r.doc_id for r in hits) == list(range(42))
+    alpha = F.col("term") == "alpha"
+    n_postings = spark.read.parquet(path + "/postings").filter(alpha).count()
+    df = spark.read.parquet(path + "/stats").filter(alpha).head()["df"]
+    assert n_postings == df == 42
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize("crash_at", ["stats", "meta"])
 def test_text_index_torn_append_recovers_and_retries(
@@ -501,19 +555,19 @@ def test_text_index_torn_append_recovers_and_retries(
     }
     pre_meta = tuple(spark.read.parquet(path + "/meta").head())
 
-    real_swap = textindex._swap_write
+    real_swap = storeprotocol._swap_write
 
     def boom(df, target, partition_by=None):
         if target.rstrip("/").endswith(crash_at):
             raise RuntimeError(f"simulated crash at the {crash_at} swap")
         real_swap(df, target, partition_by)
 
-    monkeypatch.setattr(textindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         textindex.append_to_text_index(delta, path)
-    monkeypatch.setattr(textindex, "_swap_write", real_swap)
+    monkeypatch.setattr(storeprotocol, "_swap_write", real_swap)
 
-    assert _os.path.exists(_os.path.join(path, textindex._PENDING))
+    assert _os.path.exists(_os.path.join(path, storeprotocol._PENDING))
     with pytest.raises(ValueError, match="recover_text_index_append"):
         textindex.query_text_index(spark, path, terms)
     assert textindex.stored_fingerprint(spark, path) is None
@@ -571,7 +625,7 @@ def test_text_index_crashed_inplace_rebuild_leaves_marker(
         )
     monkeypatch.undo()
 
-    assert _os.path.exists(_os.path.join(path, textindex._BUILD_PENDING))
+    assert _os.path.exists(_os.path.join(path, storeprotocol._BUILD_PENDING))
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
         textindex.query_text_index(spark, path, ["table"])
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
@@ -583,7 +637,7 @@ def test_text_index_crashed_inplace_rebuild_leaves_marker(
     textindex.build_text_index(
         docs.filter(F.col("doc_id") < 50), path, fingerprint="v2"
     )
-    assert not _os.path.exists(_os.path.join(path, textindex._BUILD_PENDING))
+    assert not _os.path.exists(_os.path.join(path, storeprotocol._BUILD_PENDING))
     assert textindex.stored_fingerprint(spark, path) == "v2"
     assert textindex.text_index_governance(spark, path, ["table"])["healthy"]
 
@@ -596,7 +650,6 @@ def test_text_index_partial_postings_append_recovery(spark, sf_dir, tmp_path):
     postings under a live marker + pending-docs record; recovery's
     id-purge removes whatever subset landed, and the retried append
     ends bit-identical to a never-crashed full rebuild."""
-    import json as _json
     import os as _os
 
     textindex = _ti()
@@ -607,22 +660,11 @@ def test_text_index_partial_postings_append_recovery(spark, sf_dir, tmp_path):
     textindex.build_text_index(old, path, fingerprint="v-old")
     pre_meta = tuple(spark.read.parquet(path + "/meta").head())
 
-    # hand-roll the crashed append's first three steps: marker (with
-    # the recorded pre-append scalars), pending-docs, HALF the postings
-    m = spark.read.parquet(path + "/meta").head()
-    with open(_os.path.join(path, textindex._PENDING), "w") as f:
-        f.write(
-            _json.dumps(
-                {
-                    "n_docs": int(m["n_docs"]),
-                    "n_tok_docs": int(m["n_tok_docs"]),
-                    "sum_dl": int(m["sum_dl"]),
-                    "fingerprint": m["fingerprint"],
-                }
-            )
-        )
-    delta.select(F.col("doc_id")).distinct().write.mode("overwrite").parquet(
-        _os.path.join(path, textindex._PENDING_DOCS)
+    # stage the crashed append's first three steps: marker (with the
+    # recorded pre-append scalars) and pending-docs through the
+    # protocol's begin step, then HALF the postings
+    storeprotocol.begin(
+        textindex.SPEC, path, textindex._plan_append(spark, path, delta)
     )
     postings, _, _ = textindex._index_relations(delta, "text", "doc_id")
     postings.filter(F.col("doc_id") % 2 == 0).write.mode("append").partitionBy(

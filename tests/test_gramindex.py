@@ -14,7 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import gramindex, spandedup
+from dwp_hbase_to_mongo_export_spark.operators import gramindex, spandedup, storeprotocol
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 
@@ -113,14 +113,14 @@ def test_torn_append_recovers_to_pre_append_state(spark, docs, tmp_path, monkeyp
 
     # crash right after the gram rows landed (before the meta swap):
     # fail the swap-write of meta
-    real = gramindex._swap_write
+    real = storeprotocol._swap_write
 
     def boom(df, target, partition_by=None):
         if target.endswith("meta"):
             raise RuntimeError("simulated crash before meta merge")
         return real(df, target, partition_by)
 
-    monkeypatch.setattr(gramindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="before meta merge"):
         gramindex.append_to_gram_index(delta, path, batch_id="b1")
     monkeypatch.undo()
@@ -150,11 +150,11 @@ def test_crash_after_commit_point_is_inert(spark, docs, tmp_path, monkeypatch):
     real = shutil.rmtree
 
     def boom(p, *a, **k):
-        if str(p).endswith(gramindex._PENDING_IDS):
+        if str(p).endswith(storeprotocol._PENDING_IDS):
             raise RuntimeError("simulated crash after the commit point")
         return real(p, *a, **k)
 
-    monkeypatch.setattr(gramindex.shutil, "rmtree", boom)
+    monkeypatch.setattr(storeprotocol.shutil, "rmtree", boom)
     with pytest.raises(RuntimeError, match="after the commit point"):
         gramindex.append_to_gram_index(delta, path)
     monkeypatch.undo()
@@ -164,13 +164,13 @@ def test_crash_after_commit_point_is_inert(spark, docs, tmp_path, monkeypatch):
     # surviving stale ids record could pair with the NEXT append's
     # marker if that append crashed pre-overwrite, making recovery
     # purge committed rows)
-    assert not os.path.exists(os.path.join(path, gramindex._PENDING))
-    assert os.path.isdir(os.path.join(path, gramindex._PENDING_IDS))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
+    assert os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     assert gramindex.recover_gram_index_append(spark, path) == {
         "recovered": False,
         "stale_ids_cleared": True,
     }
-    assert not os.path.isdir(os.path.join(path, gramindex._PENDING_IDS))
+    assert not os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
     full = str(tmp_path / "full")
     gramindex.build_gram_index(
         docs.filter(F.col("doc_id") % 10 != 9).filter(
@@ -202,11 +202,11 @@ def test_stale_ids_record_cannot_poison_next_append(
     real = shutil.rmtree
 
     def boom(p, *a, **k):
-        if str(p).endswith(gramindex._PENDING_IDS):
+        if str(p).endswith(storeprotocol._PENDING_IDS):
             raise RuntimeError("simulated crash after the commit point")
         return real(p, *a, **k)
 
-    monkeypatch.setattr(gramindex.shutil, "rmtree", boom)
+    monkeypatch.setattr(storeprotocol.shutil, "rmtree", boom)
     with pytest.raises(RuntimeError, match="after the commit point"):
         gramindex.append_to_gram_index(delta, path)
     monkeypatch.undo()
@@ -215,16 +215,16 @@ def test_stale_ids_record_cannot_poison_next_append(
 
     # step 2: the next append's FIRST act is entry recovery — which must
     # clear the stale committed ids record before any new marker exists
-    res = gramindex._recover_gram_index_append_impl(spark, path)
+    res = storeprotocol._recover(gramindex.SPEC, spark, path)
     assert res == {"recovered": False, "stale_ids_cleared": True}
-    assert not os.path.isdir(os.path.join(path, gramindex._PENDING_IDS))
+    assert not os.path.isdir(os.path.join(path, storeprotocol._PENDING_IDS))
 
     # step 3: that next append now crashes right after writing its
     # marker (before its own ids overwrite) — the exact window the
     # advice names. With the stale record gone, recovery PROVES the
     # store untouched instead of purging step 1's committed rows.
     m = spark.read.parquet(os.path.join(path, "meta")).head()
-    with open(os.path.join(path, gramindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -250,7 +250,7 @@ def test_protocol2_marker_without_ids_record_cleans_up(spark, docs, tmp_path):
     )
     pre_meta = _meta(spark, path)
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, gramindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -262,11 +262,11 @@ def test_protocol2_marker_without_ids_record_cleans_up(spark, docs, tmp_path):
                 }
             )
         )
-    pids = os.path.join(path, gramindex._PENDING_IDS)
+    pids = os.path.join(path, storeprotocol._PENDING_IDS)
     os.makedirs(pids)  # partial record: no _SUCCESS
     res = gramindex.recover_gram_index_append(spark, path)
     assert res["recovered"] and res["store_untouched"]
-    assert not os.path.exists(os.path.join(path, gramindex._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert not os.path.isdir(pids)
     assert _meta(spark, path) == pre_meta
 
@@ -275,7 +275,7 @@ def test_legacy_marker_without_ids_record_raises(spark, docs, tmp_path):
     path = str(tmp_path / "gx")
     gramindex.build_gram_index(docs.filter(F.col("doc_id") < 100), path, n=8)
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, gramindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -445,7 +445,7 @@ def test_governance_compact_verdict_after_many_appends(spark, tmp_path):
 def test_build_pending_refused_and_fingerprint_none(spark, docs, tmp_path):
     path = str(tmp_path / "gx")
     gramindex.build_gram_index(docs.filter(F.col("doc_id") < 100), path, n=8)
-    marker = os.path.join(path, gramindex._BUILD_PENDING)
+    marker = os.path.join(path, storeprotocol._BUILD_PENDING)
     open(marker, "w").close()
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
         gramindex.strip_spans_with_index(
@@ -536,13 +536,13 @@ def test_normalised_policy_survives_append_and_recovery(spark, tmp_path):
     import pytest as _pytest
 
     def boom(p, *a, **k):
-        if str(p).endswith(gramindex._PENDING_IDS):
+        if str(p).endswith(storeprotocol._PENDING_IDS):
             raise RuntimeError("simulated crash after the commit point")
         return real(p, *a, **k)
 
     import unittest.mock as _mock
 
-    with _mock.patch.object(gramindex.shutil, "rmtree", side_effect=boom):
+    with _mock.patch.object(storeprotocol.shutil, "rmtree", side_effect=boom):
         with _pytest.raises(RuntimeError, match="after the commit point"):
             gramindex.append_to_gram_index(
                 spark.createDataFrame(

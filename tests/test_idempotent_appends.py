@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from dwp_hbase_to_mongo_export_spark.operators import (
     dedupindex,
     similarity,
+    storeprotocol,
     textindex,
 )
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
@@ -175,11 +176,11 @@ def test_crash_before_sidecar_retry_commits(spark, docs, tmp_path, monkeypatch):
     def boom(p, bid):
         raise RuntimeError("crash before sidecar")
 
-    monkeypatch.setattr(dedupindex, "_write_last_append", boom)
+    monkeypatch.setattr(storeprotocol, "_write_last_append", boom)
     with pytest.raises(RuntimeError, match="before sidecar"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
-    assert os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert os.path.exists(os.path.join(path, storeprotocol._PENDING))
     res = dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     assert res == {"committed": True, "skipped_duplicate_batch": False}
     full = _clean_equivalent(spark, docs, tmp_path)
@@ -195,18 +196,18 @@ def test_crash_after_sidecar_recovery_unstamps_it(
     otherwise the legitimate retry would read 'already committed', skip,
     and silently LOSE the batch."""
     path, delta = _fresh(docs, tmp_path, "ix")
-    real = dedupindex._write_last_append
+    real = storeprotocol._write_last_append
 
     def write_then_boom(p, bid):
         real(p, bid)
         raise RuntimeError("crash after sidecar")
 
-    monkeypatch.setattr(dedupindex, "_write_last_append", write_then_boom)
+    monkeypatch.setattr(storeprotocol, "_write_last_append", write_then_boom)
     with pytest.raises(RuntimeError, match="after sidecar"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
     # torn: marker present, sidecar (wrongly, transiently) stamped
-    assert os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert dedupindex.read_last_append(path) == "b1"
     res = dedupindex.recover_dedup_index_append(spark, path)
     assert res["recovered"]
@@ -227,15 +228,15 @@ def test_crash_after_commit_retry_skips(spark, docs, tmp_path, monkeypatch):
     real = shutil.rmtree
 
     def boom(p, *a, **k):
-        if str(p).endswith(dedupindex._PENDING_IDS):
+        if str(p).endswith(storeprotocol._PENDING_IDS):
             raise RuntimeError("crash after commit")
         return real(p, *a, **k)
 
-    monkeypatch.setattr(dedupindex.shutil, "rmtree", boom)
+    monkeypatch.setattr(storeprotocol.shutil, "rmtree", boom)
     with pytest.raises(RuntimeError, match="after commit"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
-    assert not os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert not os.path.exists(os.path.join(path, storeprotocol._PENDING))
     res = dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     assert res == {"committed": False, "skipped_duplicate_batch": True}
     full = _clean_equivalent(spark, docs, tmp_path)
@@ -254,7 +255,7 @@ def test_crash_mid_store_write_retry_commits_once(
     def boom(df, target, partition_by=None):
         raise RuntimeError("crash at meta swap")
 
-    monkeypatch.setattr(dedupindex, "_swap_write", boom)
+    monkeypatch.setattr(storeprotocol, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="meta swap"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
@@ -272,7 +273,7 @@ def test_pre_batchid_marker_leaves_sidecar_alone(spark, docs, tmp_path):
     path, delta = _fresh(docs, tmp_path, "ix")
     dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, dedupindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeprotocol._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {

@@ -677,7 +677,7 @@ def test_compaction_shrinks_file_count_and_preserves_rows(spark, tmp_path):
 
 def test_compaction_recovers_from_mid_swap_crash(spark, tmp_path):
     """The two-rename swap is not atomic; a crash between them leaves
-    the table stranded in '.compact-old'. A retry must restore it (not
+    the table stranded in '.swap-old'. A retry must restore it (not
     silently no-op on a missing dir), and leftover staging/backup dirs
     from completed-but-uncleaned swaps must not fail the next run."""
     import os
@@ -695,20 +695,20 @@ def test_compaction_recovers_from_mid_swap_crash(spark, tmp_path):
 
     # crash between rename(input, backup) and rename(staging, input):
     # input missing, all data in backup, half-written staging present
-    os.rename(d, d + ".compact-old")
-    os.makedirs(d + ".compact-staging")
+    os.rename(d, d + ".swap-old")
+    os.makedirs(d + ".swap-staging")
     res = compact_parquet_dir(spark, d, target_bytes=10**9)
     assert res["compacted"]
     back = spark.read.parquet(d)
     assert back.count() == 1_000
-    assert not os.path.exists(d + ".compact-old")
-    assert not os.path.exists(d + ".compact-staging")
+    assert not os.path.exists(d + ".swap-old")
+    assert not os.path.exists(d + ".swap-staging")
 
     # crash after the swap completed but before backup cleanup: input
     # is current, stale backup must be dropped, run proceeds normally
-    shutil.copytree(d, d + ".compact-old")
+    shutil.copytree(d, d + ".swap-old")
     res2 = compact_parquet_dir(spark, d, target_bytes=10**9)
-    assert not os.path.exists(d + ".compact-old")
+    assert not os.path.exists(d + ".swap-old")
     assert spark.read.parquet(d).count() == 1_000
     assert res2["compacted"] is False  # single file already
 
@@ -794,25 +794,25 @@ def test_partitioned_compaction_preserves_layout_and_pruning(spark, sf_dir, tmp_
     assert res2["n_compacted"] == 0
 
     # crash recovery composes per leaf: one leaf stranded mid-swap (only
-    # its .compact-old backup exists), another with a stale backup AND a
+    # its .swap-old backup exists), another with a stale backup AND a
     # stale staging dir next to intact data — a rerun must restore the
     # first under its REAL partition name (not compact the backup dir in
     # place), drop the stale artifacts, and not raise
     leaves = sorted(
         os.path.join(d, x) for x in os.listdir(d) if x.startswith("event_type=")
     )
-    os.rename(leaves[0], leaves[0] + ".compact-old")
+    os.rename(leaves[0], leaves[0] + ".swap-old")
     import shutil as _sh
 
-    _sh.copytree(leaves[1], leaves[1] + ".compact-old")
-    os.makedirs(leaves[1] + ".compact-staging")
+    _sh.copytree(leaves[1], leaves[1] + ".swap-old")
+    os.makedirs(leaves[1] + ".swap-staging")
     res3 = compact_partitioned_dir(spark, d, target_bytes=10**9)
     assert res3["n_partitions"] == res["n_partitions"]  # no phantom leaves
-    assert not any(".compact-" in rel for rel in res3["per_partition"])
+    assert not any(".swap-" in rel for rel in res3["per_partition"])
     assert os.path.isdir(leaves[0])
-    assert not os.path.exists(leaves[0] + ".compact-old")
-    assert not os.path.exists(leaves[1] + ".compact-old")
-    assert not os.path.exists(leaves[1] + ".compact-staging")
+    assert not os.path.exists(leaves[0] + ".swap-old")
+    assert not os.path.exists(leaves[1] + ".swap-old")
+    assert not os.path.exists(leaves[1] + ".swap-staging")
     assert spark.read.parquet(d).count() == ev.count()
 
 

@@ -7,7 +7,8 @@ Reference behaviours re-expressed from:
   (decryptKey with in-process cache; one batch data key per run)
 
 Spark's built-in aes_encrypt/aes_decrypt are GCM/CBC-only, so CTR runs in
-an Arrow-batched pandas UDF (operators/decryption.py). The key-service
+the per-record export kernel (operators/decryption.py), one Python pass
+per Arrow batch. The key-service
 cache is per-executor (module-level dict), mirroring HttpKeyService's
 decryptedKeyCache so a 1000-executor run makes O(distinct kek) service
 calls, not O(records).

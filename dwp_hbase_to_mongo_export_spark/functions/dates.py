@@ -6,8 +6,9 @@ Reference behaviours re-expressed (NOT translated) from:
 - src/main/kotlin/app/utils/DateWrapper.kt:11-107 (recursive wrap of date
   strings into {"$date": canonical}, full-string regex gates)
 
-Pure Python — used directly in unit tests and wrapped in Arrow-batched
-pandas UDFs by operators/validator.py for the schemaless JSON hot path.
+Pure Python — used directly in unit tests and, through
+functions/record_norm.normalise_payload, by the per-record export kernel
+(operators/decryption.py) for the schemaless JSON hot path.
 """
 
 from __future__ import annotations

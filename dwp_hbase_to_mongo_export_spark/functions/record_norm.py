@@ -7,9 +7,11 @@ Re-expresses (NOT translates) the behaviour of:
 - src/main/kotlin/app/batch/TransformationProcessor.kt:21-48
 - src/main/kotlin/app/batch/DecryptionProcessor.kt:59-73 (businessAudit)
 
-All pure Python over parsed JSON; operators/*.py wraps these in
-Arrow-batched pandas UDFs (built-in column expressions are used instead
-wherever the semantics allow — see operators/sanitisation.py).
+All pure Python over parsed JSON. Both export paths call them per record
+through one kernel (operators/decryption._process_batch), run inside a
+single Python pass per batch; the catalog's column forms (e.g.
+operators/sanitisation.py) exist for the queries that pin a semantic
+against the oracle on its own.
 """
 
 from __future__ import annotations

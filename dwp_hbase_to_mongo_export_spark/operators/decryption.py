@@ -1,17 +1,21 @@
-"""Per-record AES-CTR decryption + normalisation as one Arrow batch pass.
+"""The per-record export kernel: decrypt -> normalise -> sanitise ->
+transform, one pass over an Arrow batch.
 
-Reference: src/main/kotlin/app/batch/DecryptionProcessor.kt:34-73 and
-src/main/kotlin/app/batch/Validator.kt:34-70.
+Reference: src/main/kotlin/app/batch/DecryptionProcessor.kt:34-73,
+Validator.kt:34-70, SanitisationProcessor.kt:14-44 and
+TransformationProcessor.kt:21-48 — the reference's chunk loop runs each
+record through these processors in turn.
 
 Spark-first: the schemaless JSON work (decrypt -> businessAudit lift ->
-recursive date wrap -> id normalisation) cannot be expressed with typed
-column functions, so it runs as ONE pandas UDF — a single Python/Arrow
-round-trip per batch instead of four chained UDFs. The batch export job
-runs the same kernel (_process_batch) inside its one-pass export stage
-(sinks.snapshot.export_envelopes) instead of this UDF. The data-key cache is
-per executor (functions/crypto.py), mirroring HttpKeyService's
-decryptedKeyCache so key-service traffic is O(distinct keks).
-Failures don't fail the job: the struct carries an `error` field and the
+recursive date wrap -> id normalisation -> sanitise -> equality wrap)
+cannot be expressed with typed column functions, so it is ONE Python
+function (_process_batch) over a pandas batch, and both export paths run
+it: the batch export job inside its one-pass sink stage
+(sinks.snapshot.export_envelopes), and pipeline.export_topic as one
+mapInPandas (decrypt_and_normalise). The data-key cache is per executor
+(functions/crypto.py), mirroring HttpKeyService's decryptedKeyCache so
+key-service traffic is O(distinct keks).
+Failures don't fail the job: the record carries an `error` and the
 caller splits good/bad (the skip-with-count policy,
 configuration/JobConfiguration.kt:57-61).
 """
@@ -21,25 +25,42 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import crypto, record_norm
-from ..schemas import NORMALISED_SCHEMA
+
+# What the kernel adds per record. normalised_len is the character length
+# of the normalised line BEFORE sanitise (the bytes_normalised counter);
+# the failed records carry NULL in everything but `error`.
+KERNEL_FIELDS = [
+    T.StructField("db_object", T.StringType(), True),
+    T.StructField("manifest_id", T.StringType(), True),
+    T.StructField("manifest_original_id", T.StringType(), True),
+    T.StructField("error", T.StringType(), True),
+    T.StructField("normalised_len", T.LongType(), True),
+]
 
 
-def _process_batch(
-    db_object_enc: pd.Series,
-    kek_id: pd.Series,
-    iv: pd.Series,
-    encrypted_key: pd.Series,
-    row_key: pd.Series,
-    db: pd.Series,
-    collection: pd.Series,
-    message_last_modified: pd.Series,
-) -> pd.DataFrame:
+def _process_batch(pdf: pd.DataFrame, topic: str | None) -> dict[str, list]:
+    """The kernel over one batch of valid source records (the columns of
+    operators.envelope.split_valid's first half): per record, decrypt ->
+    businessAudit lift -> normalise -> dumps_compact -> sanitise -> the
+    equality wrap when ``topic`` is data.equality. Returns the
+    KERNEL_FIELDS as lists, one entry per input row."""
     service = crypto.local_key_service()
-    out = {"db_object": [], "manifest_id": [], "manifest_original_id": [], "error": []}
-    for ct, kek, iv_, ek, key, db_, coll, mlm in zip(
-        db_object_enc, kek_id, iv, encrypted_key, row_key, db, collection, message_last_modified
+    wrap = topic == record_norm.EQUALITY_TOPIC
+    out = {f.name: [] for f in KERNEL_FIELDS}
+    lines, ids, orig_ids, errors, lens = out.values()
+    for ct, kek, iv_, ek, key, db_, coll, mlm, inner in zip(
+        pdf["db_object_enc"],
+        pdf["kek_id"],
+        pdf["iv"],
+        pdf["encrypted_key"],
+        pdf["row_key"],
+        pdf["db"],
+        pdf["collection"],
+        pdf["message_last_modified"],
+        pdf["inner_type"],
     ):
         try:
             data_key = service.decrypt_key(kek, ek)
@@ -51,44 +72,43 @@ def _process_batch(
                 decrypted = record_norm.business_audit_transform(decrypted, mlm or "")
             suffix = bytes(key)[4:].decode("utf-8", errors="replace")
             rec = record_norm.normalise_payload(decrypted, suffix)
-            out["db_object"].append(record_norm.dumps_compact(rec.db_object))
-            out["manifest_id"].append(rec.manifest_id)
-            out["manifest_original_id"].append(rec.manifest_original_id)
-            out["error"].append(None)
+            normalised = record_norm.dumps_compact(rec.db_object)
         except Exception as e:  # noqa: BLE001 — record-level skip, never job fail
-            out["db_object"].append(None)
-            out["manifest_id"].append(None)
-            out["manifest_original_id"].append(None)
-            out["error"].append(f"{type(e).__name__}: {e}")
-    return pd.DataFrame(out)
+            lines.append(None)
+            ids.append(None)
+            orig_ids.append(None)
+            errors.append(f"{type(e).__name__}: {e}")
+            lens.append(None)
+            continue
+        line = record_norm.sanitise(normalised, db_, coll)
+        if wrap:
+            line = record_norm.equality_wrap(line, inner or "")
+        lines.append(line)
+        ids.append(rec.manifest_id)
+        orig_ids.append(rec.manifest_original_id)
+        errors.append(None)
+        lens.append(len(normalised))
+    return out
 
 
-def decrypt_and_normalise(source: DataFrame) -> DataFrame:
-    """source-record DF -> + (db_object, manifest_id, manifest_original_id,
-    error) columns. Split good/bad with split_normalised()."""
-    # asNondeterministic: semantically honest (the production decrypt calls
-    # an external key service) AND load-bearing for the plan — a
-    # deterministic UDF gets substituted into downstream filter conditions
-    # by PushDownPredicates and dragged below the parallelising Exchange,
-    # serialising the whole Python stage onto the source's input splits.
-    udf = F.pandas_udf(_process_batch, NORMALISED_SCHEMA).asNondeterministic()
-    norm = udf(
-        "db_object_enc",
-        "kek_id",
-        "iv",
-        "encrypted_key",
-        "row_key",
-        "db",
-        "collection",
-        "message_last_modified",
+def decrypt_and_normalise(source: DataFrame, topic: str | None = None) -> DataFrame:
+    """Valid source records -> the same columns minus db_object_enc, plus
+    the KERNEL_FIELDS (db_object is the final, sanitised and — on the
+    data.equality topic — wrapped line). One mapInPandas; without a
+    topic there is no equality wrap. Split good/bad with
+    split_normalised()."""
+    schema = T.StructType(
+        [f for f in source.schema.fields if f.name != "db_object_enc"] + KERNEL_FIELDS
     )
-    return source.withColumn("norm", norm).select(
-        "*",
-        F.col("norm.db_object").alias("db_object"),
-        F.col("norm.manifest_id").alias("manifest_id"),
-        F.col("norm.manifest_original_id").alias("manifest_original_id"),
-        F.col("norm.error").alias("error"),
-    ).drop("norm", "db_object_enc")
+
+    def normalise_partition(batches):
+        for pdf in batches:
+            out = _process_batch(pdf, topic)
+            # nullable integers: a None in a plain list would turn the column float
+            out["normalised_len"] = pd.array(out["normalised_len"], dtype="Int64")
+            yield pdf.drop(columns="db_object_enc").assign(**out)
+
+    return source.mapInPandas(normalise_partition, schema)
 
 
 def split_normalised(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -110,7 +110,8 @@ def skew_split_join(
     route hot (keeping the isin literal and the broadcast bounded);
     demoting a key to the cold path never changes the result, only the
     routing — so the cap trades routing optimality for a bounded plan,
-    never correctness."""
+    never correctness. A NULL key is never hot (in any mode, including a
+    given list): NULL rows route cold and drop out of the join there."""
     if hot_keys is None:
         if detect == "sample":
             hot_keys = detect_hot_keys_sampled(
@@ -122,15 +123,19 @@ def skew_split_join(
             )
         elif detect == "exact":
             hot_rows = (
-                exact_heavy_hitters(fact, fact_key, factor=factor, width=width)
+                exact_heavy_hitters(
+                    fact.filter(F.col(fact_key).isNotNull()), fact_key, factor=factor, width=width
+                )
                 .orderBy(F.desc("cnt"), F.asc(fact_key))
                 .limit(max_hot)
             )
             hot_keys = [r[fact_key] for r in hot_rows.collect()]  # <= max_hot
         else:
             raise ValueError(f"unknown detect mode {detect!r}")
-    else:
-        hot_keys = list(hot_keys)[:max_hot]
+    # NULL never matches an inner equi-join, so NULL keys take the cold
+    # path (where the join drops them); a NULL in the isin list would make
+    # ~isin NULL for every cold key and silently drop all cold rows
+    hot_keys = [k for k in hot_keys if k is not None][:max_hot]
 
     on = fact[fact_key] == dim[dim_key]
     if not hot_keys:

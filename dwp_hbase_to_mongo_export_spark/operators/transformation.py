@@ -1,12 +1,11 @@
-"""Topic-conditional output transform (equality wrap).
+"""Consumer-side unwrap of the exported extended JSON.
 
-Reference: src/main/kotlin/app/batch/TransformationProcessor.kt:21-48 —
-if topic == data.equality, wrap the payload as
-{"message": {...payload, "@type": innerType}}.
-
-The branch is driver-side (topic is constant per run) so non-equality
-topics pay zero cost. The wrap itself needs a JSON re-serialise, hence a
-pandas UDF; it runs only for the one equality collection.
+The forward topic-conditional transform (the data.equality wrap,
+TransformationProcessor.kt:21-48: {"message": {...payload, "@type":
+innerType}}) is part of the per-record export kernel
+(operators.decryption._process_batch, functions.record_norm.equality_wrap),
+so it runs in the same Python pass as decrypt and sanitise. This module
+holds its inverse for readers of the snapshot output.
 """
 
 from __future__ import annotations
@@ -15,24 +14,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..functions.record_norm import EQUALITY_TOPIC, equality_wrap
-
-
-def _wrap_batch(db_object: pd.Series, inner_type: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if j is None else equality_wrap(j, t or "")
-            for j, t in zip(db_object, inner_type)
-        ]
-    )
-
-
-def apply_topic_transform(df: DataFrame, topic: str) -> DataFrame:
-    if topic != EQUALITY_TOPIC:
-        return df
-    udf = F.pandas_udf(_wrap_batch, T.StringType())
-    return df.withColumn("db_object", udf("db_object", "inner_type"))
 
 
 def _unwrap_batch(db_object: pd.Series) -> pd.DataFrame:

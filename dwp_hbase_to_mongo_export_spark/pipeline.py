@@ -4,13 +4,16 @@ Reference lifecycle (SURVEY.md §3.1): scan -> envelope parse -> decrypt ->
 normalise -> sanitise -> transform -> snapshot + manifest sinks.
 
 Two shapes share one front half (scan_envelopes: gate, ts range,
-envelope parse, read/valid counters, quarantine split):
+envelope parse, read/valid counters, quarantine split) and one
+per-record kernel (operators.decryption._process_batch: decrypt ->
+normalise -> sanitise -> transform, the reference's chunk loop):
 - export_topic: the whole lifecycle as ONE lazy, narrow DataFrame DAG
-  (no shuffle) with codegen'd sanitise and an Arrow-batched decrypt UDF;
-  its frames feed the sinks (sinks/), the catalog and streaming export.
-- orchestration.run_topic_export: the batch export job. Everything
-  after the split runs as one Python pass per partition
-  (sinks.snapshot.export_envelopes), the reference's chunk loop.
+  (no shuffle) whose per-record work is one mapInPandas over the
+  kernel; its frames feed the sinks (sinks/), the catalog and
+  streaming export.
+- orchestration.run_topic_export: the batch export job. The kernel
+  runs inside the sink's one Python pass per partition
+  (sinks.snapshot.export_envelopes), straight into the rolling writer.
 """
 
 from __future__ import annotations
@@ -24,8 +27,6 @@ from .operators.decryption import decrypt_and_normalise, split_normalised
 from .operators.envelope import parse_envelope, split_valid
 from .operators.latest import keep_latest
 from .operators.manifest import manifest_records
-from .operators.sanitisation import sanitise_column
-from .operators.transformation import apply_topic_transform
 
 
 class BlockedTopicError(Exception):
@@ -104,36 +105,31 @@ def export_topic(
     observe_metrics: bool = True,
 ) -> ExportResult:
     """The full reference dataflow over a cells DataFrame, as lazy frames:
-    scan_envelopes, then the decrypt + normalise pandas UDF, the JVM
-    sanitise and the equality transform. Every operator in the DAG is
-    streaming-safe, which is the point: incremental export is the same
-    plan on a readStream (pass observe_metrics=False there).
+    scan_envelopes, then one mapInPandas running the per-record kernel
+    (decrypt, normalise, sanitise and the equality transform:
+    operators.decryption.decrypt_and_normalise). Every operator in the
+    DAG is streaming-safe, which is the point: incremental export is the
+    same plan on a readStream (pass observe_metrics=False there).
 
     These frames are what consumers of the records, manifest and
     quarantine/failed side outputs query; the batch export job itself
-    (orchestration.run_topic_export) runs the same per-record work as
-    one Python pass instead (sinks.snapshot.export_envelopes), writing
+    (orchestration.run_topic_export) runs the same kernel inside its
+    sink pass instead (sinks.snapshot.export_envelopes), writing
     byte-identical files to write_encrypted_snapshots over the
     `sink_frame` here."""
     valid, quarantined, obs_parsed = scan_envelopes(
         cells, topic, scan_time_range, blocked_topics, dedup_versions, observe_metrics
     )
-    normalised = decrypt_and_normalise(valid)
+    normalised = decrypt_and_normalise(valid, topic)
     obs_norm = None
     if observe_metrics:
         obs_norm = Observation()
         normalised = normalised.observe(
             obs_norm,
             _sum0(F.col("error").isNotNull().cast("long")).alias("records_failed"),
-            _sum0(F.when(F.col("error").isNull(), F.length("db_object"))).alias("bytes_normalised"),
+            _sum0(F.col("normalised_len")).alias("bytes_normalised"),
         )
     good, failed = split_normalised(normalised)
-
-    good = good.withColumn(
-        "db_object", sanitise_column(F.col("db_object"), F.col("db"), F.col("collection"))
-    )
-    good = apply_topic_transform(good, topic)
-
     manifest = manifest_records(good)
     records = good.select(
         "row_key", "ts", "db", "collection", "db_object", "manifest_id"

@@ -192,8 +192,9 @@ def streaming_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming query: orders arrive through a file-source
     readStream, the cell construction + envelope parse + mandatory-field
     gate + AES-CTR decrypt + normalise + sanitise chain is the identical
-    plan (every operator in it is streaming-safe — narrow projections
-    and Arrow-batched UDFs), and an AvailableNow drain must reproduce
+    plan (every operator in it is streaming-safe — narrow projections,
+    the fixture's encrypt UDF and the export kernel's one mapInPandas),
+    and an AvailableNow drain must reproduce
     the batch oracle byte-for-byte. This is the reference's incremental
     mode taken to its Spark-native conclusion: continuous export is not
     a second code path, it is the batch plan on a stream

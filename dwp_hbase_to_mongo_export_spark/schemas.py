@@ -56,13 +56,3 @@ ENVELOPE_SCHEMA = T.StructType(
         T.StructField("timestamp", T.StringType(), True),
     ]
 )
-
-# Output of the normalisation pandas UDF (operators/validator.py).
-NORMALISED_SCHEMA = T.StructType(
-    [
-        T.StructField("db_object", T.StringType(), True),
-        T.StructField("manifest_id", T.StringType(), True),
-        T.StructField("manifest_original_id", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)

@@ -21,10 +21,11 @@ Writers:
   compress+encrypt with byte-exact rolls; returns per-file metadata
   rows to the driver (for status counts / notifications).
 - export_envelopes: the batch export job's stage (run_topic_export) —
-  the same writer fed straight from the decrypt -> normalise ->
-  sanitise -> transform work, in ONE Python pass per partition over
-  the valid envelope frame, so the records never go back to the JVM
-  between normalising and writing.
+  the same writer fed straight from the per-record kernel
+  (operators.decryption._process_batch: decrypt -> normalise ->
+  sanitise -> transform, the kernel export_topic's frame runs too), in
+  ONE Python pass per partition over the valid envelope frame, so the
+  records never go back to the JVM between normalising and writing.
 Both encrypted stages share one per-partition _RollingWriter (roll,
 compress, encrypt, manifest lines, sidecars) and write identical bytes
 for the same records and partitioning. The data key is fetched ONCE on
@@ -312,21 +313,19 @@ def export_envelopes(
     the reference's chunk loop (CompositeItemProcessor -> S3StreamingWriter,
     JobConfiguration.kt:49-76) as one mapInPandas over the VALID envelope
     frame (operators.envelope.split_valid's first half): per Arrow batch,
-    decrypt + normalise (operators.decryption._process_batch), then
-    sanitise and the data.equality wrap (functions.record_norm), then
-    straight into the partition's rolling writer. Undecryptable and
-    invalid payloads are counted, not written.
+    the per-record kernel (operators.decryption._process_batch: decrypt,
+    normalise, sanitise and the data.equality wrap), then straight into
+    the partition's rolling writer. Undecryptable and invalid payloads
+    are counted, not written.
 
     Writes exactly what write_encrypted_snapshots writes for
     pipeline.export_topic's sink frame over the same partitioning, with
     one Python stage fewer. Returns (per-file metadata rows, {"records_failed",
     "bytes_normalised"}): each partition ends with one counter row
     (object_key NULL) and the driver sums the counters."""
-    from ..functions.record_norm import EQUALITY_TOPIC, equality_wrap, sanitise
     from ..operators.decryption import _process_batch
 
     _open_sink(cfg)
-    wrap = topic == EQUALITY_TOPIC
 
     def export_partition(batches):
         import pandas as _pd
@@ -334,34 +333,22 @@ def export_envelopes(
         writer = _RollingWriter(cfg)
         failed = nbytes = 0
         for pdf in batches:
-            norm = _process_batch(
-                pdf["db_object_enc"],
-                pdf["kek_id"],
-                pdf["iv"],
-                pdf["encrypted_key"],
-                pdf["row_key"],
-                pdf["db"],
-                pdf["collection"],
-                pdf["message_last_modified"],
-            )
-            for db_object, mid, orig_id, err, ts, db, coll, outer, inner in zip(
-                norm["db_object"],
-                norm["manifest_id"],
-                norm["manifest_original_id"],
-                norm["error"],
+            out = _process_batch(pdf, topic)
+            for line, mid, orig_id, n, ts, db, coll, outer, inner in zip(
+                out["db_object"],
+                out["manifest_id"],
+                out["manifest_original_id"],
+                out["normalised_len"],
                 pdf["ts"],
                 pdf["db"],
                 pdf["collection"],
                 pdf["outer_type"],
                 pdf["inner_type"],
             ):
-                if err is not None:
+                if line is None:
                     failed += 1
                     continue
-                nbytes += len(db_object)
-                line = sanitise(db_object, db, coll)
-                if wrap:
-                    line = equality_wrap(line, inner or "")
+                nbytes += n
                 # MANIFEST_COLUMNS order (operators.manifest.manifest_records)
                 writer.add(line, (mid, ts, db, coll, "EXPORT", outer, orig_id, inner))
         # integer columns stay NULL-free (a None would turn them float)

@@ -17,6 +17,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from dwp_hbase_to_mongo_export_spark import queries as catalog
 
 
@@ -798,5 +800,22 @@ def test_run_topic_export_one_action_one_python_stage(spark, tmp_path, monkeypat
     assert len(actions) == 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     plan = actions[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+@pytest.mark.parametrize("topic", ["db.core.healthAndDisabilityDeclaration", "data.equality"])
+def test_export_topic_one_python_stage(spark, topic):
+    """export_topic's per-record work (decrypt, normalise, sanitise and,
+    on data.equality, the wrap) is ONE mapInPandas over the shared
+    kernel: the executed plan of its sink frame has exactly one
+    MapInPandas and no ArrowEvalPython / BatchEvalPython, so neither a
+    decrypt UDF nor an equality-wrap UDF can creep back."""
+    from dwp_hbase_to_mongo_export_spark.pipeline import export_topic
+    from dwp_hbase_to_mongo_export_spark.sources.hbase_cells import fixture_cells
+
+    sink = export_topic(fixture_cells(spark, n=20, topic=topic), topic).extra["sink_frame"]
+    assert len(sink.collect()) == 20
+    plan = sink._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

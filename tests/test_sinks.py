@@ -988,6 +988,15 @@ def test_run_topic_export_matches_dataframe_path(spark, tmp_path, topic):
     assert any("\\r" in line for line in lines)  # unscoped collections keep it
     assert all(line.startswith('{"message":') for line in lines) == (topic == "data.equality")
 
+    # the side outputs sit on the same kernel frame: the failed split holds
+    # the same error rows, and records/manifest hold the rest of the valid ones
+    failed = res.failed.collect()
+    assert len(failed) == want["records_failed"]
+    assert all(r.error and r.db_object is None for r in failed)
+    assert sum(r.error.startswith("ValidationError") for r in failed) == 9
+    good = want["records_valid"] - want["records_failed"]
+    assert res.records.count() == res.manifest.count() == good
+
 
 def test_run_topic_export_all_quarantined(spark, tmp_path):
     """A topic whose every envelope is quarantined exports zero files,

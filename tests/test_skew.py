@@ -267,6 +267,28 @@ def test_skew_split_join_plan_and_exactness(spark, sf_dir):
     assert a == b
 
 
+@pytest.mark.parametrize(
+    "mode",
+    [dict(detect="exact"), dict(detect="sample", sample_fraction=1.0), dict(hot_keys=[None, 1])],
+    ids=["exact", "sample", "given"],
+)
+def test_skew_split_join_null_keys_keep_cold_rows(spark, mode):
+    """NULL is a frequent fact key, so detection can rank it hot (and a
+    caller may list it). NULL never matches an inner equi-join: the
+    split must still equal the plain join row for row — a NULL in the
+    hot list must not turn the cold filter NULL for every cold key."""
+    from dwp_hbase_to_mongo_export_spark.operators.skewjoin import skew_split_join
+
+    keys = [None] * 1000 + list(range(1, 2001)) + [7] * 100
+    fact = spark.createDataFrame(list(enumerate(keys)), "fid bigint, k bigint")
+    dim = spark.range(1, 2001).select(F.col("id").alias("d"), (F.col("id") * 10).alias("v"))
+    split = skew_split_join(fact, dim, "k", "d", **mode)
+    plain = fact.join(dim, fact.k == dim.d)
+    rows = sorted(tuple(r) for r in split.select("fid", "k", "d", "v").collect())
+    want = sorted(tuple(r) for r in plain.select("fid", "k", "d", "v").collect())
+    assert len(want) == 2100 and rows == want
+
+
 def test_skew_split_join_sampled_detection_is_exact_too(spark, sf_dir):
     """detect='sample' changes only the routing scan cost, never the
     result: the sampled-detection split equals the plain join

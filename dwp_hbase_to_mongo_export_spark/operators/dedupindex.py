@@ -57,12 +57,13 @@ from .storeprotocol import (
     StoreSpec,
     _batched_leaf_purge,
     append,
+    compact,
+    fragmentation,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     rebuild_bracket,
     recover,
-    recover_leaves,
 )
 from .storeprotocol import stored_fingerprint as _stored_fingerprint
 
@@ -239,6 +240,7 @@ SPEC = StoreSpec(
     store="dedup index",
     recover_fn="recover_dedup_index_append",
     relations=(("bands", "band="), ("sets", "bucket="), ("meta", None)),
+    appended=("bands", "sets"),
     marker={
         "n_docs": int,
         "n_perm": int,
@@ -349,21 +351,9 @@ def compact_dedup_index(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Per-leaf small-file compaction of BOTH partitioned relations
-    after many appends (each append writes one file set per touched
-    band/bucket). Hive layouts — and therefore the sets store's dynamic
-    pruning — are preserved; each leaf uses the compactor's crash-safe
-    swap protocol."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    recover_leaves(SPEC, path)
-    return {
-        "bands": compact_partitioned_dir(
-            spark, os.path.join(path, "bands"), target_bytes=target_bytes
-        ),
-        "sets": compact_partitioned_dir(
-            spark, os.path.join(path, "sets"), target_bytes=target_bytes
-        ),
-    }
+    after many appends (storeprotocol.compact; each append writes one
+    file set per touched band/bucket): {"bands": ..., "sets": ...}."""
+    return compact(SPEC, spark, path, target_bytes)
 
 
 def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
@@ -496,7 +486,9 @@ def dedup_index_governance(
     (round-8 advice: the previous hardcoded 'doc_id' broke governance
     over custom-id indexes); pass it only to govern a pre-round-9
     artifact whose meta predates the field. Returns {n_ids_checked,
-    duplicate_ids, band_mismatches, healthy, rebuild}."""
+    duplicate_ids, band_mismatches, healthy, rebuild, fragmentation,
+    compact} (the last two from storeprotocol.fragmentation over bands
+    and sets)."""
     import numpy as np
 
     from .dedup import MINHASH_MOD, minhash_perm_constants
@@ -555,25 +547,11 @@ def dedup_index_governance(
                 {"doc_id": key[0], "band": key[1], "stored": got, "expected": want}
             )
     healthy = not duplicate_ids and not band_mismatches
-    # Maintenance verdict alongside the integrity one (round-9 verdict
-    # #5): appends fragment BOTH partitioned relations one file set per
-    # touched leaf; compact when either side trips the per-leaf budget.
-    from ..sinks.compaction import fragmentation_report
-
-    frag = {
-        "bands": fragmentation_report(
-            os.path.join(path, "bands"), max_files_per_leaf=max_files_per_leaf
-        ),
-        "sets": fragmentation_report(
-            os.path.join(path, "sets"), max_files_per_leaf=max_files_per_leaf
-        ),
-    }
     return {
         "n_ids_checked": len(ids),
         "duplicate_ids": duplicate_ids,
         "band_mismatches": band_mismatches,
         "healthy": healthy,
         "rebuild": not healthy,
-        "fragmentation": frag,
-        "compact": frag["bands"]["compact"] or frag["sets"]["compact"],
+        **fragmentation(SPEC, path, max_files_per_leaf),
     }

@@ -67,12 +67,13 @@ from .storeprotocol import (
     StoreSpec,
     _batched_leaf_purge,
     append,
+    compact,
+    fragmentation,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     rebuild_bracket,
     recover,
-    recover_leaves,
 )
 from .storeprotocol import stored_fingerprint as _stored_fingerprint
 
@@ -204,6 +205,7 @@ SPEC = StoreSpec(
     store="edit index",
     recover_fn="recover_edit_index_append",
     relations=(("prefix", "gbucket="), ("docs", "bucket="), ("meta", None)),
+    appended=("prefix", "docs"),
     marker={"n_docs": int, "k": int, "q": int, "normalise": bool, "fingerprint": opt_str},
     purge=_purge,
     untouched={"leaves_purged": 0},
@@ -403,17 +405,9 @@ def compact_edit_index(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Per-bucket small-file compaction of both partitioned stores
-    after many appends; Hive layout preserved, crash-safe per-leaf swap
-    via the shared compactor."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    recover_leaves(SPEC, path)
-    out = {}
-    for store in ("prefix", "docs"):
-        out[store] = compact_partitioned_dir(
-            spark, os.path.join(path, store), target_bytes=target_bytes
-        )
-    return out
+    after many appends (storeprotocol.compact): {"prefix": ...,
+    "docs": ...}."""
+    return compact(SPEC, spark, path, target_bytes)
 
 
 def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
@@ -439,8 +433,6 @@ def edit_index_governance(
     order is pruning poorly for recent data and a rebuild would help —
     and the fragmentation verdicts for both partitioned stores."""
     open_for_read(SPEC, path)
-    from ..sinks.compaction import fragmentation_report
-
     dup_rows = 0
     sampled = list(range(0, N_DOC_BUCKETS, max(1, N_DOC_BUCKETS // sample_buckets)))[
         :sample_buckets
@@ -461,16 +453,11 @@ def edit_index_governance(
     prefix = spark.read.parquet(os.path.join(path, "prefix")).select("g")
     n_prefix = prefix.count()
     n_drift = prefix.join(frozen, "g", "left_anti").count()
-    frag = {
-        store: fragmentation_report(os.path.join(path, store))
-        for store in ("prefix", "docs")
-    }
     return {
         "duplicate_doc_rows_sampled": int(dup_rows),
         "sampled_buckets": sampled,
         "prefix_rows": int(n_prefix),
         "order_drift_rows": int(n_drift),
         "order_drift_fraction": (n_drift / n_prefix) if n_prefix else 0.0,
-        "fragmentation": frag,
-        "compact": any(f["compact"] for f in frag.values()),
+        **fragmentation(SPEC, path),
     }

@@ -59,12 +59,13 @@ from .storeprotocol import (
     _batched_leaf_purge,
     _recovered_leaves,
     append,
+    compact,
+    fragmentation,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     rebuild_bracket,
     recover,
-    recover_leaves,
 )
 from .storeprotocol import stored_fingerprint as _stored_fingerprint
 
@@ -164,6 +165,7 @@ SPEC = StoreSpec(
     store="gram index",
     recover_fn="recover_gram_index_append",
     relations=(("grams", "bucket="), ("meta", None)),
+    appended=("grams",),
     marker={
         "n_docs": int,
         "n_grams": int,
@@ -304,14 +306,8 @@ def compact_gram_index(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Per-bucket small-file compaction after many appends (each append
-    writes one file set per touched bucket); Hive layout preserved,
-    crash-safe per-leaf swap via the shared compactor."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    recover_leaves(SPEC, path)
-    return compact_partitioned_dir(
-        spark, os.path.join(path, "grams"), target_bytes=target_bytes
-    )
+    writes one file set per touched bucket; storeprotocol.compact)."""
+    return compact(SPEC, spark, path, target_bytes)
 
 
 def gram_index_governance(
@@ -347,17 +343,13 @@ def gram_index_governance(
         if int(r["rows"]) != int(r["uniq"]):
             dup_leaves.append(leaf)
     healthy = not dup_leaves
-    from ..sinks.compaction import fragmentation_report
-
-    frag = fragmentation_report(grams_dir, max_files_per_leaf=max_files_per_leaf)
     return {
         "n_leaves_checked": len(sampled),
         "rows_checked": n_rows,
         "duplicate_leaves": dup_leaves,
         "healthy": healthy,
         "rebuild": not healthy,
-        "fragmentation": frag,
-        "compact": frag["compact"],
+        **fragmentation(SPEC, path, max_files_per_leaf),
     }
 
 

@@ -276,10 +276,11 @@ from .storeprotocol import (  # noqa: E402
     _batched_leaf_purge,
     _swap_write,
     append,
+    compact,
+    fragmentation,
     open_for_read,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     recover,
-    recover_leaves,
 )
 
 
@@ -323,6 +324,7 @@ IVF_SPEC = StoreSpec(
     store="IVF index",
     recover_fn="recover_ivf_index_append",
     relations=(("postings", "cluster="),),
+    appended=("postings",),
     marker={},
     purge=_purge_ivf,
     untouched={"cluster_leaves_purged": 0},
@@ -331,6 +333,7 @@ PQ_SPEC = StoreSpec(
     store="PQ index",
     recover_fn="recover_pq_index_append",
     relations=(("codes", None),),
+    appended=("codes",),
     marker={"id_col": str},
     purge=_purge_pq,
     untouched={"codes_purged": False},
@@ -436,25 +439,14 @@ def compact_ivf_postings(
     spark, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Compact a saved IVF index's posting store after incremental
-    appends: each append_to_ivf_index call writes one file set per
-    touched cluster directory, so a micro-batch ingest cadence
-    recreates exactly the small-file problem the compaction sink
-    exists to solve — a 100 TB index appended to every few minutes
-    accumulates thousands of KB files per hot cluster, and probe-time
-    scan cost becomes file-open overhead instead of bytes. This
-    composes the partition-aware compactor over the postings directory:
-    each cluster=N leaf is rewritten independently to ~target_bytes
-    files, the Hive layout (and therefore the dynamic-partition-pruning
-    probe path pinned in tests/test_plans.py) is preserved, and the
-    per-leaf crash-safety protocol means a mid-run failure leaves every
-    cluster fully old, fully new, or recoverable on retry. Centroids
-    are untouched — compaction moves bytes, never the quantiser."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    recover_leaves(IVF_SPEC, path)
-    return compact_partitioned_dir(
-        spark, os.path.join(path, "postings"), target_bytes=target_bytes
-    )
+    appends (storeprotocol.compact): each append_to_ivf_index call
+    writes one file set per touched cluster directory, so a micro-batch
+    cadence turns probe-time scan cost into file-open overhead. Each
+    cluster=N leaf is rewritten on its own, so the Hive layout and the
+    dynamic-partition-pruning probe path (tests/test_plans.py) survive.
+    Centroids are untouched — compaction moves bytes, never the
+    quantiser."""
+    return compact(IVF_SPEC, spark, path, target_bytes)
 
 
 def load_ivf_index(spark, path: str, expect_fingerprint: str | None = None):
@@ -515,7 +507,9 @@ def ivf_index_governance(
     drift shows up there first, while old-region queries stay healthy),
     and turns it into the rebuild decision.
 
-    Returns {recall, n_queries, recall_floor, rebuild}. ``rebuild``
+    Returns {recall, n_queries, recall_floor, duplicate_ids, rebuild,
+    fragmentation, compact} (the last two from
+    storeprotocol.fragmentation over the postings). ``rebuild``
     True means: re-train the quantiser on the CURRENT corpus and
     rebuild the posting lists. Seed the re-train across ingest epochs
     (clustering.kmeans_fit's ``init``) — Lloyd from old-region-only
@@ -559,23 +553,13 @@ def ivf_index_governance(
         .limit(len(ids))
         .collect()
     )
-    # Maintenance verdict alongside recall (round-9 verdict #5): each
-    # append writes one file set per touched cluster directory, so WHEN
-    # to run compact_ivf_postings is a governance output, not operator
-    # lore — metadata-only, per cluster leaf.
-    from ..sinks.compaction import fragmentation_report
-
-    frag = fragmentation_report(
-        os.path.join(path, "postings"), max_files_per_leaf=max_files_per_leaf
-    )
     return {
         "recall": recall,
         "n_queries": len({qid for qid, _ in exact}),
         "recall_floor": recall_floor,
         "duplicate_ids": duplicate_ids,
         "rebuild": recall < recall_floor or bool(duplicate_ids),
-        "fragmentation": frag,
-        "compact": frag["compact"],
+        **fragmentation(IVF_SPEC, path, max_files_per_leaf),
     }
 
 
@@ -1025,18 +1009,10 @@ def recover_pq_index_append(spark, path: str) -> dict:
 def compact_pq_codes(
     spark, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
-    """Compact a PQ index's codes store after incremental appends: the
-    flat-directory sibling of compact_ivf_postings (the codes relation
-    has no partition key — every ADC query scores every code row, so
-    there is nothing to prune and the flat compactor is the right
-    one). Codebooks are untouched — compaction moves bytes, never the
-    quantiser."""
-    from ..sinks.compaction import compact_parquet_dir
-
-    recover_leaves(PQ_SPEC, path)
-    return compact_parquet_dir(
-        spark, os.path.join(path, "codes"), target_bytes=target_bytes
-    )
+    """Compact a PQ index's flat codes store after incremental appends
+    (storeprotocol.compact; every ADC query scores every code row, so
+    there is no partition key to keep). Codebooks are untouched."""
+    return compact(PQ_SPEC, spark, path, target_bytes)
 
 
 def pq_index_governance(
@@ -1081,19 +1057,13 @@ def pq_index_governance(
         .limit(len(ids))
         .collect()
     )
-    from ..sinks.compaction import fragmentation_report
-
-    frag = fragmentation_report(
-        os.path.join(path, "codes"), max_files_per_leaf=max_files_per_leaf
-    )
     healthy = not duplicate_ids
     return {
         "n_ids_checked": len(ids),
         "duplicate_ids": duplicate_ids,
         "healthy": healthy,
         "rebuild": not healthy,
-        "fragmentation": frag,
-        "compact": frag["compact"],
+        **fragmentation(PQ_SPEC, path, max_files_per_leaf),
     }
 
 

@@ -464,7 +464,12 @@ def exact_heavy_hitters(
     collecting it for skew routing legitimate at 100 TB. Degenerate
     inputs (single distinct key — the pathological-skew shape
     skew_split_join exists for; empty frame) take the exact-count /
-    ValueError paths of kmv_estimate_py instead of dividing by zero."""
+    ValueError paths of kmv_estimate_py instead of dividing by zero.
+
+    NULL is never a heavy key: NULL rows are dropped first (cms_build
+    would give them a NULL bucket), so they count toward neither the
+    total nor the cardinality estimate."""
+    df = df.filter(F.col(key_col).isNotNull())
     sketch_rows = cms_build(df, key_col, width=width).collect()
     total = sum(int(r["cnt"]) for r in sketch_rows if r["d"] == 0)
 

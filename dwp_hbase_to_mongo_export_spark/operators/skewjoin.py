@@ -123,9 +123,7 @@ def skew_split_join(
             )
         elif detect == "exact":
             hot_rows = (
-                exact_heavy_hitters(
-                    fact.filter(F.col(fact_key).isNotNull()), fact_key, factor=factor, width=width
-                )
+                exact_heavy_hitters(fact, fact_key, factor=factor, width=width)
                 .orderBy(F.desc("cnt"), F.asc(fact_key))
                 .limit(max_hot)
             )

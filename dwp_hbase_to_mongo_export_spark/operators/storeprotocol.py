@@ -44,6 +44,14 @@ two-rename swap with ONE remnant naming (``.swap-staging`` /
 ``.swap-old``), including the compactor's leaf swaps
 (sinks/compaction), so a crash between the renames is restored by
 whichever entry point runs next.
+
+Maintenance is the protocol's too, driven by the relations each spec
+declares ``appended`` (the ones every append adds files to):
+compaction (``compact``: leaf recovery, then the per-leaf compactor on
+partitioned relations and the flat one on flat relations, under the
+store's lock), the fragmentation verdict (``fragmentation``) and the
+exactly-once stream ingest (``stream_ingest``) whose between-epoch
+maintenance compacts when that verdict flags.
 """
 
 from __future__ import annotations
@@ -88,6 +96,10 @@ class StoreSpec:
     lists every mutable directory with its Hive leaf prefix (None for a
     flat relation): their swap remnants are recovered on every entry,
     and any of them existing makes a build an in-place rebuild.
+    ``appended`` names the relations each append adds files to — the
+    ones that fragment, and so the ones compaction, the fragmentation
+    verdict and stream-ingest maintenance walk (relations an append
+    rewrites whole, like the text index's stats, are left out).
     ``marker`` maps each recorded pre-append scalar to its parser.
     ``purge(spark, path, ids, scalars)`` removes the recorded ids from
     the store and returns the result counts (``untouched`` when nothing
@@ -100,6 +112,7 @@ class StoreSpec:
     marker: dict[str, Callable]
     purge: Callable[..., dict]
     untouched: dict
+    appended: tuple[str, ...]
     meta: Callable[[SparkSession, dict], DataFrame] | None = None
     ids_record: str = _PENDING_IDS
 
@@ -164,9 +177,10 @@ def read_last_append(path: str) -> str | None:
     SINGLE-SLOT by design: the sidecar records the LAST committed
     batch only — a marker-bracketed store can have at most one append
     in flight, and Structured Streaming replays at most the last
-    uncommitted epoch against a durable checkpoint
-    (streaming.index_stream_ingest and its per-store bindings), so the
-    retry that can actually occur is always against the last slot. A
+    uncommitted epoch against a durable checkpoint (``stream_ingest``,
+    keyed by epoch id, and its per-store bindings in
+    streaming/incremental), so the retry that can actually occur is
+    always against the last slot. A
     full re-delivery of older batches (fresh checkpoint, source rewind)
     is a rebuild scenario, deliberately NOT absorbed."""
     f = os.path.join(path, _LAST_APPEND)
@@ -452,6 +466,107 @@ def stored_fingerprint(spec: StoreSpec, spark: SparkSession, path: str) -> str |
     except Exception:
         return None
     return row["fingerprint"] if row else None
+
+
+# --- maintenance ---------------------------------------------------------------
+
+
+def _by_relation(spec: StoreSpec, results: dict):
+    """One appended relation reports alone; several are keyed by name."""
+    return results if len(spec.appended) > 1 else results[spec.appended[0]]
+
+
+def _compact(spec: StoreSpec, spark: SparkSession, path: str, target_bytes: int = 128 << 20):
+    from ..sinks.compaction import compact_parquet_dir, compact_partitioned_dir
+
+    recover_leaves(spec, path)
+    prefix = dict(spec.relations)
+    return _by_relation(spec, {
+        rel: (compact_partitioned_dir if prefix[rel] else compact_parquet_dir)(
+            spark, os.path.join(path, rel), target_bytes=target_bytes
+        )
+        for rel in spec.appended
+    })
+
+
+def compact(spec: StoreSpec, spark: SparkSession, path: str, target_bytes: int = 128 << 20) -> dict:
+    """Small-file compaction of every appended relation after stranded
+    leaves are restored: leaf by leaf on a partitioned relation (its
+    Hive layout and pruning kept), whole on a flat one. Holds the
+    store's lock — a leaf swap that overlapped an append could move
+    files the append just committed into ``.swap-old`` and delete them
+    with the backup."""
+    with _append_lock(path):
+        return _compact(spec, spark, path, target_bytes)
+
+
+def _verdicts(path: str, rels, max_files_per_leaf: int) -> dict:
+    from ..sinks.compaction import fragmentation_report
+
+    return {
+        rel: fragmentation_report(os.path.join(path, rel), max_files_per_leaf=max_files_per_leaf)
+        for rel in rels
+    }
+
+
+def fragmentation(spec: StoreSpec, path: str, max_files_per_leaf: int = 8) -> dict:
+    """The metadata-only WHEN-to-compact verdict over the appended
+    relations (sinks/compaction.fragmentation_report, no Spark job):
+    {"fragmentation": report(s), "compact": any relation flagged}."""
+    frag = _verdicts(path, spec.appended, max_files_per_leaf)
+    return {
+        "fragmentation": _by_relation(spec, frag),
+        "compact": any(f["compact"] for f in frag.values()),
+    }
+
+
+def store_maintenance(spec: StoreSpec, spark: SparkSession, path: str, max_files_per_leaf: int = 8):
+    """``stream_ingest``'s between-epoch hook: under the store's lock
+    (never interleaved with an append or a recovery), the fragmentation
+    verdict over the appended relations that exist yet, then a
+    compaction only when it flags."""
+
+    def maintain() -> dict:
+        with _append_lock(path):
+            present = [r for r in spec.appended if os.path.isdir(os.path.join(path, r))]
+            frag = _verdicts(path, present, max_files_per_leaf)
+            if not any(f["compact"] for f in frag.values()):
+                return {"compacted": False}
+            return {"compacted": True, "result": _compact(spec, spark, path)}
+
+    return maintain
+
+
+def stream_ingest(
+    spec: StoreSpec,
+    spark: SparkSession,
+    delta_dir: str,
+    path: str,
+    append: Callable[[DataFrame, str], dict],
+    checkpoint_dir: str | None,
+    max_files_per_trigger: int,
+    timeout_sec: int,
+    auto_compact: bool,
+    compact_max_files_per_leaf: int,
+) -> dict:
+    """Exactly-once micro-batch ingest into the store at ``path``:
+    streaming.index_stream_ingest calling ``append(batch, "epoch-<id>")``,
+    with ``store_maintenance`` between epochs when ``auto_compact``."""
+    from ..streaming.incremental import index_stream_ingest
+
+    return index_stream_ingest(
+        spark,
+        delta_dir,
+        append,
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        timeout_sec=timeout_sec,
+        maintenance=(
+            store_maintenance(spec, spark, path, compact_max_files_per_leaf)
+            if auto_compact
+            else None
+        ),
+    )
 
 
 # --- swaps and purges ---------------------------------------------------------

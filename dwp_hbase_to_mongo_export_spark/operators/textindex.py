@@ -38,9 +38,9 @@ mode appends new cells behind a fixed artifact, HBaseReader.kt:131-150):
   needs a rebuild — its old postings cannot be found without a
   corpus-sized anti-join).
 * ``compact_text_index`` — per-bucket small-file compaction of the
-  posting store after many appends (sinks/compaction per-leaf
-  crash-safe protocol; the Hive bucket layout and its static pruning
-  survive).
+  posting store after many appends (storeprotocol.compact: per-leaf
+  crash-safe swaps under the store lock; the Hive bucket layout and
+  its static pruning survive).
 * Crash-safety is the shared store protocol (operators/storeprotocol.py):
   the append's marker records the pre-append meta scalars and
   ``_pending-docs`` the delta's doc ids; ``recover_text_index_append``
@@ -72,12 +72,13 @@ from .storeprotocol import (
     StoreSpec,
     _batched_leaf_purge,
     append,
+    compact,
+    fragmentation,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     rebuild_bracket,
     recover,
-    recover_leaves,
 )
 from .storeprotocol import stored_fingerprint as _stored_fingerprint
 from .textops import _doc_tokens
@@ -191,6 +192,7 @@ SPEC = StoreSpec(
     store="text index",
     recover_fn="recover_text_index_append",
     relations=(("postings", "bucket="), ("stats", "bucket="), ("meta", None)),
+    appended=("postings",),
     marker={"n_docs": int, "n_tok_docs": int, "sum_dl": int, "fingerprint": opt_str},
     purge=_purge,
     untouched={"buckets_purged": 0},
@@ -330,18 +332,10 @@ def compact_text_index(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
     """Per-bucket small-file compaction of the posting store after many
-    appends — each append writes one file set per touched bucket, so a
-    daily-ingest cadence accumulates small files exactly like the IVF
-    posting store (compact_ivf_postings). The Hive ``bucket=N`` layout
-    (and its static pruning) is preserved; each leaf uses the
-    compactor's crash-safe swap protocol. Stats/meta are rewritten
-    wholesale on every append, so only postings fragment."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    recover_leaves(SPEC, path)
-    return compact_partitioned_dir(
-        spark, os.path.join(path, "postings"), target_bytes=target_bytes
-    )
+    appends (storeprotocol.compact) — each append writes one file set
+    per touched bucket; stats/meta are rewritten whole and never
+    fragment."""
+    return compact(SPEC, spark, path, target_bytes)
 
 
 def text_index_governance(
@@ -368,8 +362,10 @@ def text_index_governance(
     buckets and everything downstream is sample-sized (<= max_terms
     groups); the collect is bounded by max_terms rows. Returns
     {n_terms_checked, df_mismatches, dl_inconsistent_docs, healthy,
-    rebuild} — rebuild True means the append contract was violated and
-    the artifact must be rebuilt from the corpus (a targeted repair
+    rebuild, fragmentation, compact} (the last two from
+    storeprotocol.fragmentation over the postings) — rebuild True means
+    the append contract was violated and the artifact must be rebuilt
+    from the corpus (a targeted repair
     cannot know which postings are the stale ones). Both diagnostic
     collects are STRUCTURALLY capped at max_terms rows: on a badly
     corrupted index the lists are samples (rebuild is already the
@@ -420,23 +416,13 @@ def text_index_governance(
         .collect()
     ]
     healthy = not df_mismatches and not dl_bad
-    # Maintenance verdict alongside the integrity one (round-9 verdict
-    # #5): each append writes one file set per touched bucket, so WHEN
-    # to run compact_text_index is itself a governance decision —
-    # metadata-only, fragmentation measured per posting-bucket leaf.
-    from ..sinks.compaction import fragmentation_report
-
-    frag = fragmentation_report(
-        os.path.join(path, "postings"), max_files_per_leaf=max_files_per_leaf
-    )
     return {
         "n_terms_checked": len(terms),
         "df_mismatches": df_mismatches,
         "dl_inconsistent_docs": sorted(dl_bad),
         "healthy": healthy,
         "rebuild": not healthy,
-        "fragmentation": frag,
-        "compact": frag["compact"],
+        **fragmentation(SPEC, path, max_files_per_leaf),
     }
 
 

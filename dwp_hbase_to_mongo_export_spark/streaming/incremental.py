@@ -36,6 +36,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.storeprotocol import stream_ingest
+
 
 def stream_table(
     spark: SparkSession,
@@ -505,52 +507,6 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def store_maintenance(
-    spark: SparkSession,
-    index_path: str,
-    data_dirs: list[str],
-    compactor,
-    max_files_per_leaf: int = 8,
-):
-    """WHEN-compact decision wired to action (round-10 verdict #5):
-    governance computes a ``compact`` verdict per store
-    (sinks/compaction.fragmentation_report) but nothing acted on it —
-    an epoch-per-file ingest cadence walks a leaf from 2 files to
-    2,000 and scan cost becomes file-open overhead. Returns a callable
-    for ``index_stream_ingest``'s ``maintenance`` hook that, under the
-    store's ``_append.lock`` (so it can never interleave with a live
-    append or recovery):
-
-    1. runs the metadata-only fragmentation verdict over the store's
-       data directories (pure os.walk — no Spark job on the happy
-       path), and
-    2. invokes ``compactor()`` (the store's own crash-safe per-leaf
-       compactor) only when the verdict flags.
-
-    Cost shape: the check is filesystem-metadata-sized per epoch; the
-    compaction, when it fires, rewrites only fragmented leaves through
-    the swap protocol — leaf-sized I/O, amortised across the epochs
-    that fragmented them."""
-    from ..operators.storeprotocol import _append_lock
-    from ..sinks.compaction import fragmentation_report
-
-    def maintain() -> dict:
-        with _append_lock(index_path):
-            flagged = any(
-                fragmentation_report(
-                    d, max_files_per_leaf=max_files_per_leaf
-                )["compact"]
-                for d in data_dirs
-                if os.path.isdir(d)
-            )
-            if not flagged:
-                return {"compacted": False}
-            result = compactor()
-            return {"compacted": True, "result": result}
-
-    return maintain
-
-
 def index_stream_ingest(
     spark: SparkSession,
     delta_dir: str,
@@ -579,13 +535,14 @@ def index_stream_ingest(
     ``append(batch_df, batch_id) -> {"skipped_duplicate_batch": bool}``
     — any store's append partially applied, e.g.
     ``lambda df, b: similarity.append_to_ivf_index(path, df, batch_id=b)``
-    (named wrappers below cover the text/dedup stores).
+    (the named bindings below cover the six row stores through
+    storeprotocol.stream_ingest, and the HLL store).
 
     Pass a persistent ``checkpoint_dir`` to make restarts resume from
     the offset log (a FRESH checkpoint replays every file — that is a
     rebuild scenario, not a retry, and is deliberately not absorbed).
 
-    ``maintenance`` (see ``store_maintenance``) runs BETWEEN epochs,
+    ``maintenance`` (see storeprotocol.store_maintenance) runs BETWEEN epochs,
     after each committed append: foreachBatch calls are sequential, so
     a flagged compaction executes in the natural maintenance window —
     the stream simply triggers its next micro-batch afterwards, and
@@ -636,247 +593,94 @@ def index_stream_ingest(
 
 
 def dedup_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
+    spark: SparkSession, delta_dir: str, index_path: str,
+    checkpoint_dir: str | None = None, max_files_per_trigger: int = 1, timeout_sec: int = 120,
+    auto_compact: bool = True, compact_max_files_per_leaf: int = 8,
 ) -> dict:
-    """index_stream_ingest bound to the dedup signature index, with
-    between-epoch auto-compaction of BOTH partitioned relations when
-    the fragmentation verdict flags."""
-    from ..operators import dedupindex
+    """storeprotocol.stream_ingest bound to the dedup signature index."""
+    from ..operators.dedupindex import SPEC, append_to_dedup_index
 
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "bands"), os.path.join(index_path, "sets")],
-            lambda: dedupindex.compact_dedup_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: dedupindex.append_to_dedup_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+    return stream_ingest(
+        SPEC, spark, delta_dir, index_path,
+        lambda df, b: append_to_dedup_index(df, index_path, batch_id=b),
+        checkpoint_dir, max_files_per_trigger, timeout_sec, auto_compact, compact_max_files_per_leaf,
     )
 
 
 def text_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
+    spark: SparkSession, delta_dir: str, index_path: str,
+    checkpoint_dir: str | None = None, max_files_per_trigger: int = 1, timeout_sec: int = 120,
+    auto_compact: bool = True, compact_max_files_per_leaf: int = 8,
 ) -> dict:
-    """index_stream_ingest bound to the BM25 text index, with
-    between-epoch auto-compaction of the posting store when the
-    fragmentation verdict flags (stats/meta are swap-rewritten
-    wholesale per append and never fragment)."""
-    from ..operators import textindex
+    """storeprotocol.stream_ingest bound to the BM25 text index."""
+    from ..operators.textindex import SPEC, append_to_text_index
 
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "postings")],
-            lambda: textindex.compact_text_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: textindex.append_to_text_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+    return stream_ingest(
+        SPEC, spark, delta_dir, index_path,
+        lambda df, b: append_to_text_index(df, index_path, batch_id=b),
+        checkpoint_dir, max_files_per_trigger, timeout_sec, auto_compact, compact_max_files_per_leaf,
     )
 
 
 def ivf_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
+    spark: SparkSession, delta_dir: str, index_path: str,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    checkpoint_dir: str | None = None, max_files_per_trigger: int = 1, timeout_sec: int = 120,
+    auto_compact: bool = True, compact_max_files_per_leaf: int = 8,
 ) -> dict:
-    """index_stream_ingest bound to the durable IVF posting store, with
-    between-epoch auto-compaction of the cluster leaves when the
-    fragmentation verdict flags (each append writes one file set per
-    touched cluster — exactly the micro-batch cadence that fragments)."""
-    from ..operators import similarity
+    """storeprotocol.stream_ingest bound to the durable IVF posting store."""
+    from ..operators.similarity import IVF_SPEC, append_to_ivf_index
 
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "postings")],
-            lambda: similarity.compact_ivf_postings(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: similarity.append_to_ivf_index(
-            index_path, df, id_col=id_col, vec_col=vec_col, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+    return stream_ingest(
+        IVF_SPEC, spark, delta_dir, index_path,
+        lambda df, b: append_to_ivf_index(index_path, df, id_col=id_col, vec_col=vec_col, batch_id=b),
+        checkpoint_dir, max_files_per_trigger, timeout_sec, auto_compact, compact_max_files_per_leaf,
     )
 
 
 def pq_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
+    spark: SparkSession, delta_dir: str, index_path: str,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    checkpoint_dir: str | None = None, max_files_per_trigger: int = 1, timeout_sec: int = 120,
+    auto_compact: bool = True, compact_max_files_per_leaf: int = 8,
 ) -> dict:
-    """index_stream_ingest bound to the durable PQ codes store, with
-    between-epoch auto-compaction of the flat codes directory (treated
-    as a single leaf by the fragmentation verdict — every ADC query
-    scores every code row, so file-open overhead is pure waste)."""
-    from ..operators import similarity
+    """storeprotocol.stream_ingest bound to the durable PQ codes store."""
+    from ..operators.similarity import PQ_SPEC, append_to_pq_index
 
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "codes")],
-            lambda: similarity.compact_pq_codes(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: similarity.append_to_pq_index(
-            index_path, df, id_col=id_col, vec_col=vec_col, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+    return stream_ingest(
+        PQ_SPEC, spark, delta_dir, index_path,
+        lambda df, b: append_to_pq_index(index_path, df, id_col=id_col, vec_col=vec_col, batch_id=b),
+        checkpoint_dir, max_files_per_trigger, timeout_sec, auto_compact, compact_max_files_per_leaf,
     )
 
 
 def gram_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
+    spark: SparkSession, delta_dir: str, index_path: str,
+    checkpoint_dir: str | None = None, max_files_per_trigger: int = 1, timeout_sec: int = 120,
+    auto_compact: bool = True, compact_max_files_per_leaf: int = 8,
 ) -> dict:
-    """index_stream_ingest bound to the duplicated-span gram index,
-    with between-epoch auto-compaction of the gram store when the
-    fragmentation verdict flags."""
-    from ..operators import gramindex
+    """storeprotocol.stream_ingest bound to the duplicated-span gram index."""
+    from ..operators.gramindex import SPEC, append_to_gram_index
 
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "grams")],
-            lambda: gramindex.compact_gram_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: gramindex.append_to_gram_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+    return stream_ingest(
+        SPEC, spark, delta_dir, index_path,
+        lambda df, b: append_to_gram_index(df, index_path, batch_id=b),
+        checkpoint_dir, max_files_per_trigger, timeout_sec, auto_compact, compact_max_files_per_leaf,
     )
 
 
 def edit_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
+    spark: SparkSession, delta_dir: str, index_path: str,
+    checkpoint_dir: str | None = None, max_files_per_trigger: int = 1, timeout_sec: int = 120,
+    auto_compact: bool = True, compact_max_files_per_leaf: int = 8,
 ) -> dict:
-    """index_stream_ingest bound to the edit-distance prefix store
-    (operators/editindex.py), with between-epoch auto-compaction of
-    BOTH its partitioned dirs (prefix/ and docs/) when the
-    fragmentation verdict flags."""
-    from ..operators import editindex
+    """storeprotocol.stream_ingest bound to the edit-distance prefix store."""
+    from ..operators.editindex import SPEC, append_to_edit_index
 
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [
-                os.path.join(index_path, "prefix"),
-                os.path.join(index_path, "docs"),
-            ],
-            lambda: editindex.compact_edit_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: editindex.append_to_edit_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+    return stream_ingest(
+        SPEC, spark, delta_dir, index_path,
+        lambda df, b: append_to_edit_index(df, index_path, batch_id=b),
+        checkpoint_dir, max_files_per_trigger, timeout_sec, auto_compact, compact_max_files_per_leaf,
     )
 
 

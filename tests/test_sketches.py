@@ -323,6 +323,10 @@ def test_exact_heavy_hitters_single_key_frame(spark):
     )
     rows = sketches.exact_heavy_hitters(skewed, "k").collect()
     assert [(r["k"], r["cnt"]) for r in rows] == [(7, 450)]
+    # NULL is never a heavy key, and does not move the threshold
+    nulls = spark.range(200).select(F.lit(None).cast("int").alias("k"))
+    rows = sketches.exact_heavy_hitters(skewed.unionByName(nulls), "k").collect()
+    assert [(r["k"], r["cnt"]) for r in rows] == [(7, 450)]
 
 
 def test_exact_heavy_hitters_empty_frame_raises(spark):

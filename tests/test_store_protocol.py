@@ -10,6 +10,9 @@ driven through every durable store's spec.
   a committed ids record and the batch's rows already stored, is
   refused on every store ("ambiguous … rebuild the <store>") and the
   store is left exactly as the crash left it.
+* **compaction** — every store's public compactor leaves its state
+  unchanged and clears the fragmentation verdict an append raised, and
+  a compaction waits for the store lock.
 
 One build per store (sf0.001), copied per case.
 """
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 from collections import Counter
 
 import pytest
@@ -259,3 +263,63 @@ def test_corrupt_marker_with_committed_ids_is_refused(spark, built, tmp_path, st
     assert os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert os.path.exists(os.path.join(path, spec.ids_record, "_SUCCESS"))
     assert _state(spark, spec, path) == torn
+
+
+COMPACT = {
+    "text": textindex.compact_text_index,
+    "dedup": dedupindex.compact_dedup_index,
+    "edit": editindex.compact_edit_index,
+    "gram": gramindex.compact_gram_index,
+    "ivf": similarity.compact_ivf_postings,
+    "pq": similarity.compact_pq_codes,
+}
+
+
+@pytest.mark.parametrize("store", list(STORES))
+def test_compaction_keeps_state_and_clears_fragmentation(spark, built, tmp_path, store):
+    docs, emb, stores = built
+    spec, _, _, _, append, _ = STORES[store]
+    pristine, _ = stores[store]
+    path = str(tmp_path / store)
+    shutil.copytree(pristine, path)
+    assert append(docs, emb, path, "b1")["committed"]
+    assert storeprotocol.fragmentation(spec, path, max_files_per_leaf=1)["compact"]
+    before = _state(spark, spec, path)
+
+    COMPACT[store](spark, path)
+    assert _state(spark, spec, path) == before
+    assert not storeprotocol.fragmentation(spec, path, max_files_per_leaf=1)["compact"]
+
+
+def test_compaction_waits_for_the_store_lock(spark, built, tmp_path, monkeypatch):
+    """A compaction swaps leaves, so it must not start while an append
+    (or anything else holding the store lock) is mid-flight: a leaf
+    moved to ``.swap-old`` after the append committed files into it
+    would be deleted with the backup."""
+    from dwp_hbase_to_mongo_export_spark.sinks import compaction
+
+    docs, emb, stores = built
+    path = str(tmp_path / "text")
+    shutil.copytree(stores["text"][0], path)
+    STORES["text"][4](docs, emb, path, "b1")
+    before = _state(spark, textindex.SPEC, path)
+    started = threading.Event()
+    real = compaction.compact_partitioned_dir
+
+    def watched(*a, **k):
+        started.set()
+        return real(*a, **k)
+
+    monkeypatch.setattr(compaction, "compact_partitioned_dir", watched)
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(res=textindex.compact_text_index(spark, path))
+    )
+    with storeprotocol._append_lock(path):
+        worker.start()
+        assert not started.wait(3), "compaction ran while the store lock was held"
+        assert worker.is_alive() and not out
+    worker.join(timeout=300)
+    assert not worker.is_alive()
+    assert out["res"]["n_compacted"] > 0
+    assert _state(spark, textindex.SPEC, path) == before

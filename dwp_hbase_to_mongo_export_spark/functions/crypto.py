@@ -18,15 +18,23 @@ from __future__ import annotations
 
 import base64
 import hashlib
+from functools import lru_cache
 
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 
+@lru_cache(maxsize=256)
+def _aes(key_b64: str) -> algorithms.AES:
+    """The decoded AES key: a run decrypts every record of a topic with
+    one of a few data keys, so the base64 decode and key check run once
+    per key, not once per record."""
+    return algorithms.AES(base64.b64decode(key_b64))
+
+
 def aes_ctr_decrypt(key_b64: str, iv_b64: str, ciphertext_b64: str) -> bytes:
-    key = base64.b64decode(key_b64)
     iv = base64.b64decode(iv_b64)
     ct = base64.b64decode(ciphertext_b64)
-    cipher = Cipher(algorithms.AES(key), modes.CTR(iv))
+    cipher = Cipher(_aes(key_b64), modes.CTR(iv))
     d = cipher.decryptor()
     return d.update(ct) + d.finalize()
 

@@ -14,10 +14,12 @@ functions/record_norm.normalise_payload, by the per-record export kernel
 from __future__ import annotations
 
 import re
-from datetime import datetime, timedelta, timezone
+from datetime import date, datetime, timedelta, timezone
+from functools import lru_cache
 from typing import Any
 
 EPOCH_FALLBACK = "1980-01-01T00:00:00.000Z"
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 DATE_KEY = "$date"
 LAST_MODIFIED = "_lastModifiedDateTime"
 CREATED = "createdDateTime"
@@ -95,15 +97,46 @@ def to_outgoing_format(dt: datetime) -> str:
     )
 
 
+# Strings already in UTC with millisecond precision: ASCII digits only
+# (int() also reads other Unicode Nd digits, which the general path
+# renders as ASCII, so those must take it).
+_UTC_MILLIS_RE = re.compile(
+    r"[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{3}(?:Z|\+0000)\Z"
+)
+
+
+@lru_cache(maxsize=1 << 14)
+def _valid_calendar_date(ymd: str) -> bool:
+    try:
+        date(int(ymd[0:4]), int(ymd[5:7]), int(ymd[8:10]))
+    except ValueError:
+        return False
+    return True
+
+
 def canonicalise(s: str) -> str:
-    """Parse (two formats) then render canonically; raises DateParseError."""
+    """Parse (two formats) then render canonically; raises DateParseError.
+
+    A string with 3 fraction digits in UTC (``Z`` or ``+0000``) whose
+    fields are valid already holds its canonical digits, so it is
+    returned re-suffixed without a datetime round trip."""
+    if (
+        isinstance(s, str)
+        and _UTC_MILLIS_RE.match(s)
+        and s[11:13] < "24"
+        and s[14:16] < "60"
+        and s[17:19] < "60"
+        and _valid_calendar_date(s[:10])
+    ):
+        return s[:23] + "Z"
     return to_outgoing_format(parse_valid_datetime(s))
 
 
 def _wrappable(s: str) -> str | None:
     """DateWrapper.parsedDate — canonical form if the string full-matches
     either regex gate, else None (leave untouched)."""
-    if isinstance(s, str) and (_INCOMING_RE.match(s) or _OUTGOING_RE.match(s)):
+    # the gates match exactly 24 (outgoing) or 28 (incoming) characters
+    if isinstance(s, str) and len(s) in (24, 28) and (_INCOMING_RE.match(s) or _OUTGOING_RE.match(s)):
         try:
             return canonicalise(s)
         except DateParseError:
@@ -129,22 +162,22 @@ def wrap_dates_in_place(obj: Any, include_last_modified: bool = True) -> None:
     it explicitly first); nested ones are always processed.
     """
     if isinstance(obj, dict):
-        for key in list(obj.keys()):
+        for key, child in list(obj.items()):
             if key == LAST_MODIFIED and not include_last_modified:
                 continue
-            child = obj[key]
-            if _is_mongo_date_object(child):
-                c = _wrappable(child[DATE_KEY]) if isinstance(child[DATE_KEY], str) else None
-                if c is not None:
-                    child[DATE_KEY] = c
-            elif isinstance(child, dict):
-                wrap_dates_in_place(child)
-            elif isinstance(child, list):
-                _wrap_dates_in_array(child)
-            elif isinstance(child, str):
+            if isinstance(child, str):
                 c = _wrappable(child)
                 if c is not None:
                     obj[key] = {DATE_KEY: c}  # value replaced, key keeps position
+            elif isinstance(child, dict):
+                if _is_mongo_date_object(child):
+                    c = _wrappable(child[DATE_KEY])
+                    if c is not None:
+                        child[DATE_KEY] = c
+                else:
+                    wrap_dates_in_place(child)
+            elif isinstance(child, list):
+                _wrap_dates_in_array(child)
 
 
 def _wrap_dates_in_array(arr: list) -> None:
@@ -202,4 +235,5 @@ def manifest_timestamp_ms(created: str, last_modified: str, snapshot_type: str) 
         dt = parse_valid_datetime(preferred)
     except DateParseError:
         dt = parse_valid_datetime(fallback)
-    return int(dt.timestamp() * 1000)
+    # integer arithmetic: float seconds * 1000 truncates to a millisecond too few
+    return (dt - _EPOCH) // timedelta(milliseconds=1)

@@ -15,10 +15,19 @@ import zlib
 from typing import Any
 
 
+_COMPACT = json.JSONEncoder(separators=(",", ":"), ensure_ascii=False)
+
+
 def dumps_compact(obj: Any) -> str:
     """Gson-style compact rendering (serializeNulls is the default in
     Python's json: None -> null)."""
-    return json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
+    return _COMPACT.encode(obj)
+
+
+def _dumps_sorted(obj: dict) -> str:
+    """Compact rendering with the TOP-LEVEL keys sorted lexicographically
+    (case-sensitive); nested objects keep their order."""
+    return dumps_compact({k: obj[k] for k in sorted(obj)})
 
 
 def sort_json_by_key(unsorted_json: str) -> str:
@@ -27,14 +36,14 @@ def sort_json_by_key(unsorted_json: str) -> str:
     obj = json.loads(unsorted_json)
     if not isinstance(obj, dict):
         raise ValueError("sortJsonByKey requires a JSON object")
-    return dumps_compact({k: obj[k] for k in sorted(obj)})
+    return _dumps_sorted(obj)
 
 
 def element_as_string(v: Any) -> str:
     """Validator.elementAsString — objects render key-sorted; primitives
     render as their bare string value."""
     if isinstance(v, dict):
-        return sort_json_by_key(dumps_compact(v))
+        return _dumps_sorted(v)
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
@@ -52,8 +61,8 @@ def reverse_engineer_id(hbase_id: str) -> tuple[str, str]:
     if len(obj) == 1 and "id" in obj:
         scalar = obj["id"]
         scalar_s = scalar if isinstance(scalar, str) else element_as_string(scalar)
-        return scalar_s, sort_json_by_key(dumps_compact({"$oid": scalar_s}))
-    sorted_json = sort_json_by_key(dumps_compact(obj))
+        return scalar_s, dumps_compact({"$oid": scalar_s})
+    sorted_json = _dumps_sorted(obj)
     return sorted_json, sorted_json
 
 

@@ -13,8 +13,10 @@ py4j zip and the spark-core jar, 16 zipimporters in all — 0.13–0.30 s per
 task on a 4-core VM before any UDF, ``mapIn*`` or Python DataSource code
 runs (CPython 3.13 made the re-read lazy). The daemon skips the re-read for
 those archives only. Spark starts its planner workers (Python DataSource
-``create``/``plan``/filter pushdown) through a hard-coded ``pyspark.daemon``,
-so each ``.load()`` and plan of a Python DataSource still pays it. The
+``create``/``plan``/filter pushdown) through a hard-coded ``pyspark.daemon``;
+those unpickle ``sources.hbase_cells_source`` on every call, and importing
+it applies the same skip, so only the first call into a planner worker
+pays the re-read and each later ``.load()`` and plan in it does not. The
 package root goes on the workers' PYTHONPATH so they can import the daemon
 (and the package's UDFs) from any working directory.
 """

@@ -41,6 +41,7 @@ import gzip as _gzip
 import hashlib
 import json
 import os
+import re
 import secrets
 from dataclasses import dataclass
 
@@ -161,8 +162,11 @@ def key_range_naming(scan_width: int = 5) -> dict[int, tuple[int, int]]:
     }
 
 
+_CSV_SPECIAL = re.compile(r'[",\n\r]')
+
+
 def _csv_escape(v: str) -> str:
-    if any(ch in v for ch in ('"', ",", "\n", "\r")):
+    if _CSV_SPECIAL.search(v):
         return '"' + v.replace('"', '""') + '"'
     return v
 

@@ -23,6 +23,7 @@ Arrow RecordBatches — the zero-copy path through the Python worker.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -35,6 +36,15 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+
+# Spark's DataSource planner workers start from pyspark.daemon, not the
+# package's worker daemon, and unpickle this module's source on every
+# call: patch them here, so the planner child Spark reuses stops
+# re-reading Spark's archives on each later call.
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    from ..worker_daemon import skip_shipped_archive_rereads
+
+    skip_shipped_archive_rereads()
 
 SOURCE_NAME = "hbase_cells_fixture"
 SCHEMA = "row_key binary, ts bigint, value string"

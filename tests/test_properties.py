@@ -8,7 +8,7 @@ from __future__ import annotations
 import json
 from datetime import datetime, timedelta, timezone
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dwp_hbase_to_mongo_export_spark.functions.dates import (
@@ -20,6 +20,7 @@ from dwp_hbase_to_mongo_export_spark.functions.dates import (
 )
 from dwp_hbase_to_mongo_export_spark.functions.jsonfns import (
     dumps_compact,
+    element_as_string,
     make_row_key,
     reverse_engineer_id,
     sort_json_by_key,
@@ -88,6 +89,61 @@ def test_garbage_never_parses_silently(s):
     assert ours == datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%f%z")
 
 
+# Zero of each digit set the date strings may be drawn in: ASCII, then
+# Unicode Nd digits that int() and the \d gates also accept.
+_DIGIT_ZEROS = (0x30, 0xFF10, 0x0660, 0x0966, 0x1D7CE)
+
+
+@st.composite
+def _date_strings(draw):
+    """Date-shaped strings: valid instants or independently drawn fields
+    (day 0-32, month 0-13, hour 24, minute/second 60, year 0000), 1-6
+    fraction digits, Z or a +/-HHMM zone, some digits in another Nd set."""
+    if draw(st.booleans()):
+        dt = draw(_dt)
+        fields = (dt.year, dt.month, dt.day, dt.hour, dt.minute, dt.second)
+    else:
+        fields = tuple(
+            draw(st.integers(lo, hi))
+            for lo, hi in ((0, 9999), (0, 13), (0, 32), (0, 24), (0, 60), (0, 60))
+        )
+    frac = draw(st.text("0123456789", min_size=1, max_size=6))
+    zone = draw(st.sampled_from(("Z", "+0000", "-0000", "+0130", "-0130", "+1400", "-0001")))
+    text = "{:04d}-{:02d}-{:02d}T{:02d}:{:02d}:{:02d}.".format(*fields) + frac + zone
+    zero = draw(st.sampled_from(_DIGIT_ZEROS))
+    if zero != 0x30:
+        moved = draw(st.sets(st.integers(0, len(text) - 1), min_size=1))
+        text = "".join(
+            chr(zero + ord(c) - 0x30) if i in moved and c.isdigit() else c
+            for i, c in enumerate(text)
+        )
+    return text
+
+
+@given(_date_strings())
+@example("2019-02-29T00:00:00.000Z")
+@example("2020-04-31T00:00:00.000+0000")
+@example("2020-13-01T00:00:00.000Z")
+@example("2020-01-01T24:00:00.000Z")
+@example("2020-01-01T00:60:00.000Z")
+@example("2020-01-01T00:00:60.000+0000")
+@example("0000-01-01T00:00:00.000Z")
+@example("\uff12\uff10\uff12\uff10-01-01T00:00:00.000Z")
+@settings(max_examples=400, deadline=None)
+def test_canonicalise_equals_general_path(s):
+    """canonicalise (with its UTC fast path) and the general parse+render
+    return the same string, or both raise."""
+    try:
+        expected = to_outgoing_format(parse_valid_datetime(s))
+    except DateParseError:
+        expected = DateParseError
+    try:
+        got = canonicalise(s)
+    except DateParseError:
+        got = DateParseError
+    assert got == expected
+
+
 _json_scalars = st.one_of(
     st.none(), st.booleans(), st.integers(-(2**40), 2**40), st.text(max_size=12)
 )
@@ -105,6 +161,14 @@ def test_sort_json_by_key_properties(obj):
     assert parsed == obj
     assert list(parsed.keys()) == sorted(obj.keys())
     assert sort_json_by_key(s) == s
+
+
+@given(_json_objects)
+@settings(max_examples=200, deadline=None)
+def test_element_as_string_equals_sort_json_by_key(obj):
+    """Objects render once with sorted keys, the same string as the
+    dumps -> sort_json_by_key round trip."""
+    assert element_as_string(obj) == sort_json_by_key(dumps_compact(obj))
 
 
 @given(_json_objects)

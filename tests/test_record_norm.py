@@ -286,6 +286,20 @@ def test_manifest_ts_falls_back_on_invalid_preferred():
     assert ms == 1544799662000
 
 
+@pytest.mark.parametrize(
+    "instant, expected",
+    [
+        ("1972-02-23T17:43:25.857Z", 67715005857),
+        ("1935-07-19T12:11:39.091Z", -1087300100909),
+        ("1935-07-19T13:41:39.091+0130", -1087300100909),
+    ],
+)
+def test_manifest_ts_is_exact_to_the_millisecond(instant, expected):
+    """Float seconds * 1000 lands a hair below these instants, and
+    truncating it would drop a millisecond (before and after 1970)."""
+    assert dates.manifest_timestamp_ms(instant, "", "full") == expected
+
+
 # --- sanitisation (SanitisationProcessorTest 19-66) -------------------------
 
 

@@ -140,26 +140,27 @@ def run_topic_export(
     blocked_topics: tuple[str, ...] = (),
     export_date: str = "",
 ) -> RunReport:
-    """One topic end-to-end: envelope scan -> one export pass writing the
-    encrypted snapshots + manifests -> status increments -> terminal
-    status -> message payloads.
+    """One topic end-to-end: blocked-topic gate -> one export pass
+    parsing the envelopes and writing the encrypted snapshots +
+    manifests -> status increments -> terminal status -> message
+    payloads.
 
     The §3.1 lifecycle as driver code around ONE DataFrame action and
     two Python stages at most (a Python source's read, then the export
-    pass): pipeline.scan_envelopes builds scan -> envelope parse ->
-    observe(records_read, records_valid) -> valid filter, and
-    sinks.snapshot.export_envelopes runs decrypt -> normalise ->
-    sanitise -> transform -> rolling encrypted writer per partition,
-    the reference's chunk loop. records_read/records_valid ride the
-    action via observe(); records_failed/bytes_normalised come back
-    with the file rows (no second scan — at 100 TB a metrics-only pass
-    would cost as much as the export). Blocked topics short-circuit
-    before any job, exactly like the reference's pre-flight gate."""
-    from .pipeline import BlockedTopicError, scan_envelopes
+    pass): pipeline.scan_cells gates the topic and pushes the ts range
+    into the source, and sinks.snapshot.export_envelopes runs envelope
+    parse -> mandatory-field gate -> decrypt -> normalise -> sanitise ->
+    transform -> rolling encrypted writer per partition, the
+    reference's chunk loop. records_read/records_valid/records_failed/
+    bytes_normalised come back in each partition's counter row with the
+    file rows (no second scan — at 100 TB a metrics-only pass would cost
+    as much as the export). Blocked topics short-circuit before any
+    job, exactly like the reference's pre-flight gate."""
+    from .pipeline import BlockedTopicError, scan_cells
     from .sinks.snapshot import export_envelopes
 
     try:
-        valid, _, observation = scan_envelopes(
+        cells = scan_cells(
             cells, topic, scan_time_range=scan_time_range, blocked_topics=blocked_topics
         )
     except BlockedTopicError:
@@ -178,14 +179,14 @@ def run_topic_export(
         )
 
     try:
-        files, counters = export_envelopes(valid, topic, sink_cfg)
+        files, counters = export_envelopes(cells, topic, sink_cfg)
     except Exception:
         status_service.set_status(topic, CollectionStatus.EXPORT_FAILED)
         raise
     status_service.increment_exported_count(topic, len(files))
     status_service.set_status(topic, CollectionStatus.EXPORTED)
 
-    metrics = {**observation.get, **counters, "files_exported": len(files)}
+    metrics = {**counters, "files_exported": len(files)}
 
     messages = [
         snapshot_sender_message(

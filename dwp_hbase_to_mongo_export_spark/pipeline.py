@@ -3,16 +3,17 @@
 Reference lifecycle (SURVEY.md §3.1): scan -> envelope parse -> decrypt ->
 normalise -> sanitise -> transform -> snapshot + manifest sinks.
 
-Two shapes share one front half (scan_envelopes: gate, ts range,
-envelope parse, read/valid counters, quarantine split) and one
-per-record kernel (operators.decryption._process_batch: decrypt ->
-normalise -> sanitise -> transform, the reference's chunk loop):
+Two shapes share one front half (scan_cells: blocked-topic gate, ts
+range pushed into the source) and one Python pass per batch —
+operators.envelope.parse_batch, then the per-record kernel
+(operators.decryption._process_batch: decrypt -> normalise -> sanitise
+-> transform) over the valid rows, the reference's chunk loop:
 - export_topic: the whole lifecycle as ONE lazy, narrow DataFrame DAG
-  (no shuffle) whose per-record work is one mapInPandas over the
-  kernel; its frames feed the sinks (sinks/), the catalog and
-  streaming export.
-- orchestration.run_topic_export: the batch export job. The kernel
-  runs inside the sink's one Python pass per partition
+  (no shuffle) whose per-record work is one mapInPandas
+  (operators.decryption.parse_and_normalise); its frames feed the sinks
+  (sinks/), the catalog and streaming export.
+- orchestration.run_topic_export: the batch export job. Parse and
+  kernel run inside the sink's one Python pass per partition
   (sinks.snapshot.export_envelopes), straight into the rolling writer.
 """
 
@@ -23,8 +24,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .operators.decryption import decrypt_and_normalise, split_normalised
-from .operators.envelope import parse_envelope, split_valid
+from .operators.decryption import parse_and_normalise, split_normalised
+from .operators.envelope import ENVELOPE_COLUMNS
 from .operators.latest import keep_latest
 from .operators.manifest import manifest_records
 
@@ -43,51 +44,29 @@ class ExportResult:
     extra: dict = field(default_factory=dict)
 
 
-def scan_envelopes(
+def scan_cells(
     cells: DataFrame,
     topic: str,
     scan_time_range: tuple[int, int] | None = None,
     blocked_topics: tuple[str, ...] = (),
     dedup_versions: bool = False,
-    observe_metrics: bool = True,
-) -> tuple[DataFrame, DataFrame, Observation | None]:
+) -> DataFrame:
     """The export's front half, shared by export_topic and
-    orchestration.run_topic_export: blocked-topic gate -> ts range ->
-    envelope parse -> observe(records_read, records_valid) -> split.
-    Returns (valid, quarantined, observation or None).
+    orchestration.run_topic_export: blocked-topic gate -> ts range.
 
     scan_time_range maps to the incremental-mode Scan.setTimeRange
-    (HBaseReader.kt:131-150): a pushed-down ts filter. dedup_versions
-    reinstates latest-version-per-key when the source materialises all
-    versions. observe_metrics=False skips the Observation node — pass
-    it when `cells` is a STREAMING DataFrame (the batch Observation
-    helper can't wait on a streaming query)."""
+    (HBaseReader.kt:131-150): a ts filter the cells source takes as a
+    pushed-down range. dedup_versions reinstates latest-version-per-key
+    when the source materialises all versions."""
     if topic in blocked_topics:
         raise BlockedTopicError(f"Provided topic is blocked so cannot be processed: '{topic}'")
-
     df = cells
     if scan_time_range is not None:
         start, end = scan_time_range
         df = df.filter((F.col("ts") >= start) & (F.col("ts") < end))
     if dedup_versions:
         df = keep_latest(df, ["row_key"], "ts")
-
-    parsed = parse_envelope(df, topic)
-
-    # Metrics (MetricsConfiguration.kt counters) ride the SAME pass as the
-    # export action: observe() on an ancestor of the sink counts
-    # read/valid rows with zero extra jobs — the quarantine filter
-    # happens downstream of this node, so it still sees every record.
-    obs = None
-    if observe_metrics:
-        obs = Observation()
-        parsed = parsed.observe(
-            obs,
-            F.count(F.lit(1)).alias("records_read"),
-            _sum0(F.col("valid").cast("long")).alias("records_valid"),
-        )
-    valid, quarantined = split_valid(parsed)
-    return valid, quarantined, obs
+    return df
 
 
 def _sum0(c: Column) -> Column:
@@ -105,31 +84,41 @@ def export_topic(
     observe_metrics: bool = True,
 ) -> ExportResult:
     """The full reference dataflow over a cells DataFrame, as lazy frames:
-    scan_envelopes, then one mapInPandas running the per-record kernel
-    (decrypt, normalise, sanitise and the equality transform:
-    operators.decryption.decrypt_and_normalise). Every operator in the
-    DAG is streaming-safe, which is the point: incremental export is the
-    same plan on a readStream (pass observe_metrics=False there).
+    scan_cells, then ONE mapInPandas that parses each envelope and runs
+    the per-record kernel over the valid ones (decrypt, normalise,
+    sanitise and the equality transform:
+    operators.decryption.parse_and_normalise). The quarantined frame is
+    its rows with `valid` false. Every operator in the DAG is
+    streaming-safe, which is the point: incremental export is the same
+    plan on a readStream (pass observe_metrics=False there — the batch
+    Observation helper can't wait on a streaming query).
 
     These frames are what consumers of the records, manifest and
     quarantine/failed side outputs query; the batch export job itself
-    (orchestration.run_topic_export) runs the same kernel inside its
-    sink pass instead (sinks.snapshot.export_envelopes), writing
-    byte-identical files to write_encrypted_snapshots over the
+    (orchestration.run_topic_export) runs the same parse and kernel
+    inside its sink pass instead (sinks.snapshot.export_envelopes),
+    writing byte-identical files to write_encrypted_snapshots over the
     `sink_frame` here."""
-    valid, quarantined, obs_parsed = scan_envelopes(
-        cells, topic, scan_time_range, blocked_topics, dedup_versions, observe_metrics
-    )
-    normalised = decrypt_and_normalise(valid, topic)
-    obs_norm = None
+    cells = scan_cells(cells, topic, scan_time_range, blocked_topics, dedup_versions)
+    kernel = parse_and_normalise(cells, topic)
+    obs_parsed = obs_norm = None
     if observe_metrics:
-        obs_norm = Observation()
-        normalised = normalised.observe(
+        # Metrics (MetricsConfiguration.kt counters) ride the SAME pass as
+        # the export action: observe() on an ancestor of the sink counts
+        # with zero extra jobs — the quarantine and failure filters happen
+        # downstream of these nodes, so they see every record.
+        obs_parsed, obs_norm = Observation(), Observation()
+        kernel = kernel.observe(
+            obs_parsed,
+            F.count(F.lit(1)).alias("records_read"),
+            _sum0(F.col("valid").cast("long")).alias("records_valid"),
+        ).observe(
             obs_norm,
             _sum0(F.col("error").isNotNull().cast("long")).alias("records_failed"),
             _sum0(F.col("normalised_len")).alias("bytes_normalised"),
         )
-    good, failed = split_normalised(normalised)
+    quarantined = kernel.filter(~F.col("valid")).select(*ENVELOPE_COLUMNS)
+    good, failed = split_normalised(kernel.filter(F.col("valid")).drop("valid", "db_object_enc"))
     manifest = manifest_records(good)
     records = good.select(
         "row_key", "ts", "db", "collection", "db_object", "manifest_id"

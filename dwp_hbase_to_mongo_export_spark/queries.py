@@ -436,9 +436,9 @@ DRIVER_WINDOW_CHANGED = [
     "pagerank_entities",
     "winnowing_overlap",
     # call pipeline.export_topic, which the one-pass export change
-    # reworked (shared scan_envelopes front half) and whose per-record
-    # work is now one mapInPandas over the export kernel shared with
-    # run_topic_export; no gated query reaches
+    # reworked (shared scan front half) and whose per-record work is
+    # now one mapInPandas over the envelope parser and export kernel
+    # shared with run_topic_export; no gated query reaches
     # sinks.snapshot.write_encrypted_snapshots or
     # storeprotocol._batched_leaf_purge
     "export_pipeline_e2e",

@@ -6,8 +6,10 @@ tests/test_record_norm.py (the ValidatorTest matrix) and end-to-end by
 export_pipeline_e2e; these queries surface each one individually in the
 driver's correctness gate, using the built-in-function mapping from
 SURVEY.md §2 (coalesce chains, to_timestamp dual-format parse,
-conditional dropFields) — no Python in any of them, so they hold the
-whole-stage-codegen path at 100 TB.
+conditional dropFields) — no Python in any of them but the two envelope
+rows (7 and 8), which run the export's one envelope parser
+(operators.envelope.parse_envelope, a mapInPandas over parse_batch) so
+the gate pins the code the export runs.
 
 Each builds its record stream deterministically from `orders` (modulo
 cases choose the record shape) so a DuckDB oracle reproduces expected
@@ -46,9 +48,9 @@ def validation_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: HBaseResultProcessor.kt:97-102 throws MissingFieldException
     on blank dbObject/kekId/IV/encryptedKey/db/collection and the Spring
     Batch skip policy drops the record (JobConfiguration.kt:57-61). Spark
-    form: `valid` is ONE boolean column computed in the envelope
-    projection; the quarantine branch is a filter over the same plan
-    (scan reused, no second read). Records with o_orderkey%10==3 carry a
+    form: `valid` is ONE boolean column computed by the envelope parse;
+    the quarantine branch is a filter over the same plan (scan reused,
+    no second read). Records with o_orderkey%10==3 carry a
     blank IV, %10==7 omit dbObject; everything else is valid and excluded.
     """
     from .operators.partitioning import spread_scan
@@ -115,8 +117,8 @@ def db_collection_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic name db.topicdb.topic-coll via the reference regex.
 
     Reference: HBaseResultProcessor.kt:79-94 with the topic regex from
-    utils/TextUtils.kt:8-9. Spark form: coalesce(nullif(msg.db, ''),
-    lit(parsed_db)) inside the envelope projection — records with
+    utils/TextUtils.kt:8-9. The envelope parse (parse_batch) reads
+    nullif(msg.db, '') and falls back to the topic's db — records with
     o_orderkey%3==0 carry message db/collection; the rest omit them and
     fall back."""
     from .operators.partitioning import spread_scan

@@ -21,11 +21,12 @@ Writers:
   compress+encrypt with byte-exact rolls; returns per-file metadata
   rows to the driver (for status counts / notifications).
 - export_envelopes: the batch export job's stage (run_topic_export) —
-  the same writer fed straight from the per-record kernel
+  the same writer fed straight from the envelope parse
+  (operators.envelope.parse_batch) and the per-record kernel
   (operators.decryption._process_batch: decrypt -> normalise ->
   sanitise -> transform, the kernel export_topic's frame runs too), in
-  ONE Python pass per partition over the valid envelope frame, so the
-  records never go back to the JVM between normalising and writing.
+  ONE Python pass per partition over the cells, so a record never goes
+  back to the JVM between its cell and its file.
 Both encrypted stages share one per-partition _RollingWriter (roll,
 compress, encrypt, manifest lines, sidecars) and write identical bytes
 for the same records and partitioning. The data key is fetched ONCE on
@@ -301,33 +302,32 @@ def write_encrypted_snapshots(records: DataFrame, cfg: SnapshotSinkConfig) -> li
     return records.mapInPandas(write_partition, FILE_META_SCHEMA).collect()
 
 
+COUNTERS = ("records_read", "records_valid", "records_failed", "bytes_normalised")
 EXPORT_SCHEMA = T.StructType(
-    FILE_META_SCHEMA.fields
-    + [
-        T.StructField("records_failed", T.LongType()),
-        T.StructField("bytes_normalised", T.LongType()),
-    ]
+    FILE_META_SCHEMA.fields + [T.StructField(c, T.LongType()) for c in COUNTERS]
 )
 
 
 def export_envelopes(
-    valid: DataFrame, topic: str, cfg: SnapshotSinkConfig
+    cells: DataFrame, topic: str, cfg: SnapshotSinkConfig
 ) -> tuple[list[Row], dict]:
     """The export's per-record work as ONE Python pass per partition —
-    the reference's chunk loop (CompositeItemProcessor -> S3StreamingWriter,
-    JobConfiguration.kt:49-76) as one mapInPandas over the VALID envelope
-    frame (operators.envelope.split_valid's first half): per Arrow batch,
-    the per-record kernel (operators.decryption._process_batch: decrypt,
-    normalise, sanitise and the data.equality wrap), then straight into
-    the partition's rolling writer. Undecryptable and invalid payloads
-    are counted, not written.
+    the reference's chunk loop (HBaseResultProcessor ->
+    CompositeItemProcessor -> S3StreamingWriter, JobConfiguration.kt:49-76)
+    as one mapInPandas over the cells (row_key, ts, value): per Arrow
+    batch, the envelope parse (operators.envelope.parse_batch), the
+    per-record kernel over its valid rows (operators.decryption._process_batch:
+    decrypt, normalise, sanitise and the data.equality wrap), then
+    straight into the partition's rolling writer. Quarantined envelopes
+    and undecryptable or invalid payloads are counted, not written.
 
     Writes exactly what write_encrypted_snapshots writes for
     pipeline.export_topic's sink frame over the same partitioning, with
-    one Python stage fewer. Returns (per-file metadata rows, {"records_failed",
-    "bytes_normalised"}): each partition ends with one counter row
-    (object_key NULL) and the driver sums the counters."""
-    from ..operators.decryption import _process_batch
+    one Python stage fewer. Returns (per-file metadata rows, COUNTERS):
+    each partition ends with one counter row (object_key NULL) and the
+    driver sums the counters."""
+    from ..operators.decryption import _process_batch, valid_rows
+    from ..operators.envelope import parse_batch
 
     _open_sink(cfg)
 
@@ -335,19 +335,22 @@ def export_envelopes(
         import pandas as _pd
 
         writer = _RollingWriter(cfg)
-        failed = nbytes = 0
+        read = valid = failed = nbytes = 0
         for pdf in batches:
-            out = _process_batch(pdf, topic)
+            env = valid_rows(parse_batch(pdf, topic))
+            read += len(pdf)
+            valid += len(env["valid"])
+            out = _process_batch(env, topic)
             for line, mid, orig_id, n, ts, db, coll, outer, inner in zip(
                 out["db_object"],
                 out["manifest_id"],
                 out["manifest_original_id"],
                 out["normalised_len"],
-                pdf["ts"],
-                pdf["db"],
-                pdf["collection"],
-                pdf["outer_type"],
-                pdf["inner_type"],
+                env["ts"],
+                env["db"],
+                env["collection"],
+                env["outer_type"],
+                env["inner_type"],
             ):
                 if line is None:
                     failed += 1
@@ -356,13 +359,13 @@ def export_envelopes(
                 # MANIFEST_COLUMNS order (operators.manifest.manifest_records)
                 writer.add(line, (mid, ts, db, coll, "EXPORT", outer, orig_id, inner))
         # integer columns stay NULL-free (a None would turn them float)
-        rows = [m + (0, 0) for m in writer.close()]
-        rows.append((None, None, 0, 0, 0, None, None, None, failed, nbytes))
+        rows = [m + (0,) * len(COUNTERS) for m in writer.close()]
+        rows.append((None, None, 0, 0, 0, None, None, None, read, valid, failed, nbytes))
         yield _pd.DataFrame(rows, columns=EXPORT_SCHEMA.fieldNames())
 
-    rows = valid.mapInPandas(export_partition, EXPORT_SCHEMA).collect()
+    rows = cells.select("row_key", "ts", "value").mapInPandas(export_partition, EXPORT_SCHEMA).collect()
     files = [FILE_META_ROW(*r[: len(FILE_META_ROW)]) for r in rows if r.object_key is not None]
-    counters = {c: sum(r[c] for r in rows) for c in ("records_failed", "bytes_normalised")}
+    counters = {c: sum(r[c] for r in rows) for c in COUNTERS}
     return files, counters
 
 

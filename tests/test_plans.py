@@ -763,8 +763,10 @@ def test_scd2_fold_last_event_ts_maintains_the_guard_state(spark):
 def test_run_topic_export_one_action_one_python_stage(spark, tmp_path, monkeypatch):
     """run_topic_export runs ONE Spark job whose executed plan has
     exactly one MapInPandas above the scan and no ArrowEvalPython /
-    BatchEvalPython: the decrypt -> normalise -> sanitise -> sink work
-    is one Python pass, and a second Python hop cannot creep back."""
+    BatchEvalPython: the envelope parse -> decrypt -> normalise ->
+    sanitise -> sink work is one Python pass, and a second Python hop
+    cannot creep back. No JVM envelope stage either: no JsonToStructs
+    (from_json), GetJsonObject or CollectMetrics (observe) node."""
     from dwp_hbase_to_mongo_export_spark.orchestration import (
         CollectionStatus,
         ExportStatusService,
@@ -802,6 +804,8 @@ def test_run_topic_export_one_action_one_python_stage(spark, tmp_path, monkeypat
     plan = actions[0]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    for node in ("JsonToStructs", "from_json", "GetJsonObject", "get_json_object", "CollectMetrics"):
+        assert node not in plan, plan
 
 
 @pytest.mark.parametrize("topic", ["db.core.healthAndDisabilityDeclaration", "data.equality"])

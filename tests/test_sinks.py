@@ -998,6 +998,32 @@ def test_run_topic_export_matches_dataframe_path(spark, tmp_path, topic):
     assert res.records.count() == res.manifest.count() == good
 
 
+def test_run_topic_export_equality_wrap_failure_skips_only_its_record(spark, tmp_path):
+    """On data.equality, a payload whose string holds a backslash then
+    u0000 is invalid JSON once sanitise strips the \\u0000, so the
+    equality wrap raises: the record is counted in records_failed and its
+    batch neighbours are written — the error does not fail the task."""
+    from dwp_hbase_to_mongo_export_spark.orchestration import run_topic_export
+    from dwp_hbase_to_mongo_export_spark.schemas import CELLS_SCHEMA
+    from dwp_hbase_to_mongo_export_spark.sinks.snapshot import read_encrypted_snapshots
+    from dwp_hbase_to_mongo_export_spark.sources.hbase_cells import envelope
+
+    topic = "data.equality"
+    rows = []
+    for i in range(6):
+        note = "a\\u0000x" if i == 3 else f"note {i}"
+        key, value = envelope(i, "data", "equality", json.dumps({"_id": f"{i:05d}", "note": note}))
+        rows.append((topic, key, 1000 + i, value))
+    cells = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), CELLS_SCHEMA)
+    report = run_topic_export(cells, topic, _sink_cfg(tmp_path, topic), ExportStatusService("eq-wrap"))
+    assert report.status == CS.EXPORTED
+    assert report.metrics["records_valid"] == 6 and report.metrics["records_failed"] == 1
+    lines = [r.db_object for r in read_encrypted_snapshots(spark, str(tmp_path), DATA_KEY_B64).collect()]
+    assert sorted(json.loads(line)["message"]["note"] for line in lines) == [
+        f"note {i}" for i in (0, 1, 2, 4, 5)
+    ]
+
+
 def test_run_topic_export_all_quarantined(spark, tmp_path):
     """A topic whose every envelope is quarantined exports zero files,
     reports counters of 0 (not None) and sends the no-files message."""

@@ -59,9 +59,11 @@ from .storeprotocol import (
     append,
     compact,
     fragmentation,
+    meta_frame,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
+    read_meta,
     rebuild_bracket,
     recover,
 )
@@ -163,7 +165,7 @@ def build_dedup_index(
         )
         spark = corpus.sparkSession
         n_docs = spark.read.parquet(os.path.join(path, "sets")).count()
-        _meta_frame(
+        SPEC.meta(
             spark,
             {
                 "n_docs": n_docs,
@@ -175,28 +177,6 @@ def build_dedup_index(
                 "fingerprint": fingerprint or "",
             },
         ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-
-
-def _meta_frame(spark: SparkSession, s: dict) -> DataFrame:
-    return spark.createDataFrame(
-        [
-            (
-                s["n_docs"],
-                s["n_perm"],
-                s["rows_per_band"],
-                s["k"],
-                s["max_chars"],
-                s["id_col"],
-                s["fingerprint"],
-            )
-        ],
-        "n_docs bigint, n_perm int, rows_per_band int, k int, "
-        "max_chars int, id_col string, fingerprint string",
-    )
-
-
-def _read_meta(spark: SparkSession, path: str):
-    return spark.read.parquet(os.path.join(path, "meta")).head()
 
 
 def _purge(spark: SparkSession, path: str, ids: DataFrame, scalars: dict) -> dict:
@@ -252,7 +232,10 @@ SPEC = StoreSpec(
     },
     purge=_purge,
     untouched={"band_leaves_purged": 0, "set_leaves_purged": 0},
-    meta=_meta_frame,
+    meta=meta_frame(
+        "n_docs bigint, n_perm int, rows_per_band int, k int, "
+        "max_chars int, id_col string, fingerprint string"
+    ),
 )
 
 
@@ -289,23 +272,13 @@ def _plan_append(
     id_col: str = "doc_id",
     fingerprint: str | None = None,
 ) -> Batch:
-    m = _read_meta(spark, path)
-    stored_id_col = m.asDict().get("id_col")
-    if stored_id_col and stored_id_col != id_col:
+    old = read_meta(SPEC, spark, path)
+    if old["id_col"] != id_col:
         raise ValueError(
-            f"{path}: index was built with id_col={stored_id_col!r}; "
+            f"{path}: index was built with id_col={old['id_col']!r}; "
             f"append called with id_col={id_col!r} — mixed id columns "
             "would corrupt the band/set relations"
         )
-    old = {
-        "n_docs": int(m["n_docs"]),
-        "n_perm": int(m["n_perm"]),
-        "rows_per_band": int(m["rows_per_band"]),
-        "k": int(m["k"]),
-        "max_chars": int(m["max_chars"]),
-        "id_col": stored_id_col or id_col,
-        "fingerprint": m["fingerprint"],
-    }
     bands, sets = _sig_relations(
         delta,
         text_col,
@@ -327,7 +300,7 @@ def _plan_append(
     def derive() -> tuple[list, dict]:
         n_new = delta.select(F.count(F.lit(1))).head()[0]
         new = {**old, "n_docs": old["n_docs"] + int(n_new), "fingerprint": fingerprint or ""}
-        return [("meta", _meta_frame(spark, new), None)], {}
+        return [("meta", SPEC.meta(spark, new), None)], {}
 
     return Batch(
         marker=old,
@@ -394,7 +367,7 @@ def query_dedup_index(
     open_for_read(SPEC, path)
     from ._cache import swap_cache
 
-    m = _read_meta(spark, path)
+    m = read_meta(SPEC, spark, path)
     mh = swap_cache(
         "dedup_index_query",
         minhash_sets_and_sigs(
@@ -459,7 +432,6 @@ def dedup_index_governance(
     path: str,
     sample_ids: list[int],
     max_ids: int = 64,
-    id_col: str | None = None,
     max_files_per_leaf: int = 8,
 ) -> dict:
     """Integrity governance for the durable dedup index — the check
@@ -482,13 +454,10 @@ def dedup_index_governance(
     truncated diagnostic sample, never an unbounded driver collect —
     duplication is still detected from the capped rows).
 
-    ``id_col`` defaults to the value persisted in meta at build time
-    (round-8 advice: the previous hardcoded 'doc_id' broke governance
-    over custom-id indexes); pass it only to govern a pre-round-9
-    artifact whose meta predates the field. Returns {n_ids_checked,
-    duplicate_ids, band_mismatches, healthy, rebuild, fragmentation,
-    compact} (the last two from storeprotocol.fragmentation over bands
-    and sets)."""
+    The id column is the one persisted in meta at build time. Returns
+    {n_ids_checked, duplicate_ids, band_mismatches, healthy, rebuild,
+    fragmentation, compact} (the last two from
+    storeprotocol.fragmentation over bands and sets)."""
     import numpy as np
 
     from .dedup import MINHASH_MOD, minhash_perm_constants
@@ -500,8 +469,8 @@ def dedup_index_governance(
             "dedup_index_governance needs a non-empty id sample — "
             "a health check over zero ids would read as healthy"
         )
-    m = _read_meta(spark, path)
-    id_col = id_col or m.asDict().get("id_col") or "doc_id"
+    m = read_meta(SPEC, spark, path)
+    id_col = m["id_col"]
     # cap: a healthy sample has 1 set row and n_bands band rows per id;
     # allow 4x before truncating the diagnostic (4 dup generations per
     # id is already an unambiguous 'rebuild')

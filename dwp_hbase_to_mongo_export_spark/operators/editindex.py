@@ -69,9 +69,11 @@ from .storeprotocol import (
     append,
     compact,
     fragmentation,
+    meta_frame,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
+    read_meta,
     rebuild_bracket,
     recover,
 )
@@ -129,23 +131,6 @@ def _emit_rows(
     return emit, doc_rows
 
 
-def _meta_frame(spark: SparkSession, s: dict) -> DataFrame:
-    return spark.createDataFrame(
-        [(s["n_docs"], s["k"], s["q"], s["fingerprint"], bool(s["normalise"]))],
-        "n_docs bigint, k int, q int, fingerprint string, normalise boolean",
-    )
-
-
-def _read_meta(spark: SparkSession, path: str):
-    return spark.read.parquet(os.path.join(path, "meta")).head()
-
-
-def _meta_normalise(meta) -> bool:
-    """The store's matching policy; absent (pre-policy store) reads as
-    strict — the gramindex discipline."""
-    return bool(meta.asDict().get("normalise", False))
-
-
 def build_edit_index(
     corpus: DataFrame,
     path: str,
@@ -177,7 +162,7 @@ def build_edit_index(
             "overwrite"
         ).partitionBy("bucket").parquet(os.path.join(path, "docs"))
         n_docs = spark.read.parquet(os.path.join(path, "docs")).count()
-        _meta_frame(
+        SPEC.meta(
             spark,
             {
                 "n_docs": n_docs,
@@ -209,7 +194,7 @@ SPEC = StoreSpec(
     marker={"n_docs": int, "k": int, "q": int, "normalise": bool, "fingerprint": opt_str},
     purge=_purge,
     untouched={"leaves_purged": 0},
-    meta=_meta_frame,
+    meta=meta_frame("n_docs bigint, k int, q int, fingerprint string, normalise boolean"),
 )
 
 
@@ -240,18 +225,9 @@ def _plan_append(
     delta: DataFrame,
     fingerprint: str | None = None,
 ) -> Batch:
-    old = _read_meta(spark, path)
-    k, q = int(old["k"]), int(old["q"])
-    normalise = _meta_normalise(old)
+    old = read_meta(SPEC, spark, path)
     frozen = spark.read.parquet(os.path.join(path, "df"))
-    emit, doc_rows = _emit_rows(delta, frozen, k, q, normalise=normalise)
-    scalars = {
-        "n_docs": int(old["n_docs"]),
-        "k": k,
-        "q": q,
-        "normalise": normalise,
-        "fingerprint": old["fingerprint"],
-    }
+    emit, doc_rows = _emit_rows(delta, frozen, old["k"], old["q"], old["normalise"])
 
     def insert() -> None:
         emit.withColumn("gbucket", _gbucket(F.col("g"))).write.mode(
@@ -263,17 +239,13 @@ def _plan_append(
 
     def derive() -> tuple[list, dict]:
         n_batch = spark.read.parquet(os.path.join(path, SPEC.ids_record)).count()
-        meta = {
-            **scalars,
-            "n_docs": scalars["n_docs"] + n_batch,
-            "fingerprint": fingerprint or str(old["fingerprint"]),
-        }
-        return [("meta", _meta_frame(spark, meta), None)], {
+        new = {**old, "n_docs": old["n_docs"] + n_batch, "fingerprint": fingerprint or ""}
+        return [("meta", SPEC.meta(spark, new), None)], {
             "docs_appended": int(n_batch)
         }
 
     return Batch(
-        marker=scalars,
+        marker=old,
         ids=delta.select(F.col("doc_id").alias("id")).distinct(),
         insert=insert,
         derive=derive,
@@ -309,9 +281,8 @@ def query_edit_index(
     id-bucketed docs/ store behind a broadcast candidate list, the
     dedupindex sets/ DPP discipline."""
     open_for_read(SPEC, path)
-    meta = _read_meta(spark, path)
-    k, q = int(meta["k"]), int(meta["q"])
-    normalise = _meta_normalise(meta)
+    meta = read_meta(SPEC, spark, path)
+    k, q, normalise = meta["k"], meta["q"], meta["normalise"]
     frozen = spark.read.parquet(os.path.join(path, "df"))
 
     from ._cache import swap_cache

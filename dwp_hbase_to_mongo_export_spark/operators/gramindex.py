@@ -61,9 +61,11 @@ from .storeprotocol import (
     append,
     compact,
     fragmentation,
+    meta_frame,
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
+    read_meta,
     rebuild_bracket,
     recover,
 )
@@ -89,24 +91,6 @@ def _gram_relation(
         .distinct()
     )
     return g.withColumn("bucket", gram_bucket(F.col("gh")))
-
-
-def _meta_frame(spark: SparkSession, s: dict) -> DataFrame:
-    return spark.createDataFrame(
-        [(s["n_docs"], s["n_grams"], s["n"], s["fingerprint"], bool(s["normalise"]))],
-        "n_docs bigint, n_grams bigint, n int, fingerprint string, "
-        "normalise boolean",
-    )
-
-
-def _read_meta(spark: SparkSession, path: str):
-    return spark.read.parquet(os.path.join(path, "meta")).head()
-
-
-def _meta_normalise(meta) -> bool:
-    """The store's matching policy. Pre-round-11 stores lack the meta
-    column — they were built strict, so absent reads as False."""
-    return bool(meta.asDict().get("normalise", False))
 
 
 def build_gram_index(
@@ -135,7 +119,7 @@ def build_gram_index(
         )
         n_grams = spark.read.parquet(os.path.join(path, "grams")).count()
         n_docs = corpus.select(id_col).distinct().count()
-        _meta_frame(
+        SPEC.meta(
             spark,
             {
                 "n_docs": n_docs,
@@ -175,7 +159,9 @@ SPEC = StoreSpec(
     },
     purge=_purge,
     untouched={"leaves_purged": 0},
-    meta=_meta_frame,
+    meta=meta_frame(
+        "n_docs bigint, n_grams bigint, n int, fingerprint string, normalise boolean"
+    ),
 )
 
 
@@ -217,22 +203,13 @@ def _plan_append(
     id_col: str = "doc_id",
     fingerprint: str | None = None,
 ) -> Batch:
-    old = _read_meta(spark, path)
-    n = int(old["n"])
-    normalise = _meta_normalise(old)
+    old = read_meta(SPEC, spark, path)
     store = spark.read.parquet(os.path.join(path, "grams")).select("gh")
     new_ghs = (
-        _gram_relation(delta, text_col, id_col, n, normalise)
+        _gram_relation(delta, text_col, id_col, old["n"], old["normalise"])
         .join(store, "gh", "left_anti")
         .select("gh", "bucket")
     )
-    scalars = {
-        "n_docs": int(old["n_docs"]),
-        "n_grams": int(old["n_grams"]),
-        "n": n,
-        "normalise": normalise,
-        "fingerprint": old["fingerprint"],
-    }
     ids_dir = os.path.join(path, SPEC.ids_record)
 
     def insert() -> None:
@@ -243,17 +220,17 @@ def _plan_append(
     def derive() -> tuple[list, dict]:
         n_inserted = spark.read.parquet(ids_dir).count()
         n_batch_docs = delta.select(id_col).distinct().count()
-        meta = {
-            **scalars,
-            "n_docs": scalars["n_docs"] + n_batch_docs,
-            "n_grams": scalars["n_grams"] + n_inserted,
-            "fingerprint": fingerprint or str(old["fingerprint"]),
+        new = {
+            **old,
+            "n_docs": old["n_docs"] + n_batch_docs,
+            "n_grams": old["n_grams"] + n_inserted,
+            "fingerprint": fingerprint or "",
         }
-        return [("meta", _meta_frame(spark, meta), None)], {
+        return [("meta", SPEC.meta(spark, new), None)], {
             "grams_inserted": int(n_inserted)
         }
 
-    return Batch(marker=scalars, ids=new_ghs, insert=insert, derive=derive)
+    return Batch(marker=old, ids=new_ghs, insert=insert, derive=derive)
 
 
 def recover_gram_index_append(spark: SparkSession, path: str) -> dict:
@@ -287,10 +264,9 @@ def strip_spans_with_index(
     shuffle semi-join on 16-byte hashes — the same AQE-decided
     discipline as the family's other joins."""
     open_for_read(SPEC, path)
-    meta = _read_meta(spark, path)
-    n = int(meta["n"])
-    normalise = _meta_normalise(meta)
-    bstaged = _cached_staged(batch, text_col, id_col, n, normalise=normalise)
+    meta = read_meta(SPEC, spark, path)
+    n = meta["n"]
+    bstaged = _cached_staged(batch, text_col, id_col, n, normalise=meta["normalise"])
     bgset = bstaged.select(F.explode(F.array_distinct("ghs")).alias("gh"))
     store = spark.read.parquet(os.path.join(path, "grams")).select("gh")
     vs_store = store.join(bgset.distinct(), "gh", "left_semi").distinct()

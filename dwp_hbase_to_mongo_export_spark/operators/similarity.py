@@ -281,6 +281,7 @@ from .storeprotocol import (  # noqa: E402
     open_for_read,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     recover,
+    stored_fingerprint,
 )
 
 
@@ -462,11 +463,7 @@ def load_ivf_index(spark, path: str, expect_fingerprint: str | None = None):
 
     open_for_read(IVF_SPEC, path)
     if expect_fingerprint is not None:
-        meta_dir = os.path.join(path, "meta")
-        stored = None
-        if os.path.isdir(meta_dir):
-            row = spark.read.parquet(meta_dir).head()
-            stored = row["fingerprint"] if row else None
+        stored = stored_fingerprint(IVF_SPEC, spark, path)
         if stored != expect_fingerprint:
             raise ValueError(
                 f"{path}: stored source fingerprint {stored!r} does not "

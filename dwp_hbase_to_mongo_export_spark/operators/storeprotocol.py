@@ -11,9 +11,15 @@ duplicated rows silently corrupt every downstream answer (doubled
 tf/df, duplicate neighbours, duplicate candidate pairs) and evade the
 stores' own distinct-count governance. This module owns that protocol.
 Each store contributes a module-level ``StoreSpec`` (its relations and
-leaf prefixes, marker scalars, purge and meta restore) and, per append,
+leaf prefixes, marker scalars, purge and meta writer) and, per append,
 a ``Batch`` (its marker scalars, ids record, insert and the derived
 relations it rewrites).
+
+Meta belongs to the spec: a store's marker scalars are its meta row,
+read only through ``read_meta`` (which refuses an older format) and
+written only through ``StoreSpec.meta``. An append's new meta records
+the caller's fingerprint, else ``""``: unknown content, a rebuild for
+any consumer that reuses the artifact by fingerprint.
 
 State inside a store directory:
 
@@ -100,11 +106,13 @@ class StoreSpec:
     ones that fragment, and so the ones compaction, the fragmentation
     verdict and stream-ingest maintenance walk (relations an append
     rewrites whole, like the text index's stats, are left out).
-    ``marker`` maps each recorded pre-append scalar to its parser.
+    ``marker`` maps each recorded pre-append scalar (a meta column, when
+    the store has a ``meta`` relation) to its parser.
     ``purge(spark, path, ids, scalars)`` removes the recorded ids from
     the store and returns the result counts (``untouched`` when nothing
     reached the store); ``meta(spark, scalars)``, for stores with a
-    ``meta`` relation, rebuilds it from the recorded scalars."""
+    ``meta`` relation, is the one meta writer of builds, appends and
+    recovery."""
 
     store: str
     recover_fn: str
@@ -444,6 +452,29 @@ def open_for_read(spec: StoreSpec, path: str) -> None:
         _recover_swap(os.path.join(path, rel))
 
 
+def meta_frame(ddl: str) -> Callable[[SparkSession, dict], DataFrame]:
+    """The ``StoreSpec.meta`` writer of a store whose meta row is
+    exactly its marker scalars: one row in ``ddl``'s column order."""
+    cols = [c.split()[0] for c in ddl.split(",")]
+    return lambda spark, s: spark.createDataFrame([tuple(s[c] for c in cols)], ddl)
+
+
+def read_meta(spec: StoreSpec, spark: SparkSession, path: str) -> dict:
+    """The meta row parsed through ``spec.marker`` — the scalars an
+    append records in its marker and writes back through ``spec.meta``.
+    A meta missing one of them was written by an older on-disk format:
+    refused, never read with a guessed default."""
+    meta = spark.read.parquet(os.path.join(path, "meta"))
+    missing = [k for k in spec.marker if k not in meta.columns]
+    if missing:
+        raise ValueError(
+            f"{path}: meta lacks {', '.join(missing)} (an older on-disk "
+            f"format); rebuild the {spec.store} from the corpus"
+        )
+    row = meta.head()
+    return {k: parse(row[k]) for k, parse in spec.marker.items()}
+
+
 def stored_fingerprint(spec: StoreSpec, spark: SparkSession, path: str) -> str | None:
     """The source fingerprint stamped into meta; None when the artifact
     is absent, torn (pending append OR crashed-rebuild marker),
@@ -459,10 +490,7 @@ def stored_fingerprint(spec: StoreSpec, spark: SparkSession, path: str) -> str |
     if not os.path.isdir(meta_dir):
         return None
     try:
-        meta = spark.read.parquet(meta_dir)
-        if "fingerprint" not in meta.columns:
-            return None
-        row = meta.select("fingerprint").head()
+        row = spark.read.parquet(meta_dir).select("fingerprint").head()
     except Exception:
         return None
     return row["fingerprint"] if row else None

@@ -77,6 +77,7 @@ from .storeprotocol import (
     open_for_read,
     opt_str,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
+    read_meta,
     rebuild_bracket,
     recover,
 )
@@ -271,7 +272,6 @@ def _plan_append(
     id_col: str = "doc_id",
     fingerprint: str | None = None,
 ) -> Batch:
-    old_meta = spark.read.parquet(os.path.join(path, "meta")).head()
     postings, stats_delta, meta_counts = _index_relations(delta, text_col, id_col)
 
     def insert() -> None:
@@ -305,12 +305,7 @@ def _plan_append(
         return [("stats", merged_stats, "bucket"), ("meta", merged_meta, None)], {}
 
     return Batch(
-        marker={
-            "n_docs": int(old_meta["n_docs"]),
-            "n_tok_docs": int(old_meta["n_tok_docs"]),
-            "sum_dl": int(old_meta["sum_dl"]),
-            "fingerprint": old_meta["fingerprint"],
-        },
+        marker=read_meta(SPEC, spark, path),
         ids=delta.select(F.col(id_col).alias("doc_id")).distinct(),
         insert=insert,
         derive=derive,

@@ -35,19 +35,30 @@ class ExportCompletionStatus(str, Enum):
     NOT_COMPLETED = "NOT_COMPLETED"
 
 
-_SUCCESSFUL = {CollectionStatus.EXPORTED, CollectionStatus.TABLE_UNAVAILABLE, CollectionStatus.BLOCKED_TOPIC}
-_IN_PROGRESS = {CollectionStatus.EXPORTING}
-_FAILED = {CollectionStatus.EXPORT_FAILED}
+# DynamoDBExportStatusService.kt:159-165 — the fold also counts states
+# the DOWNSTREAM snapshot sender writes into the same table
+# (Sent/Received/Success); CollectionStatus members match as strings.
+SUCCESSFUL_COMPLETION_STATUSES = (
+    "Exported",
+    "Sent",
+    "Received",
+    "Success",
+    "Table_Unavailable",
+    "Blocked_Topic",
+)
+UNSUCCESSFUL_COMPLETION_STATUSES = ("Export_Failed",)
+IN_PROGRESS_COMPLETION_STATUSES = ("Exporting",)
 
 
-def completion_fold(statuses: list[CollectionStatus]) -> ExportCompletionStatus:
-    """DynamoDBExportStatusService.exportCompletionStatus (kt:33-58):
+def completion_fold(statuses: list[str]) -> ExportCompletionStatus:
+    """DynamoDBExportStatusService.exportCompletionStatus (kt:30-58)
+    over status strings or ``CollectionStatus`` members:
     all-successful > any-in-progress > any-failed > not-completed."""
-    if statuses and all(s in _SUCCESSFUL for s in statuses):
+    if statuses and all(s in SUCCESSFUL_COMPLETION_STATUSES for s in statuses):
         return ExportCompletionStatus.COMPLETED_SUCCESSFULLY
-    if any(s in _IN_PROGRESS for s in statuses):
+    if any(s in IN_PROGRESS_COMPLETION_STATUSES for s in statuses):
         return ExportCompletionStatus.IN_PROGRESS
-    if any(s in _FAILED for s in statuses):
+    if any(s in UNSUCCESSFUL_COMPLETION_STATUSES for s in statuses):
         return ExportCompletionStatus.COMPLETED_UNSUCCESSFULLY
     return ExportCompletionStatus.NOT_COMPLETED
 

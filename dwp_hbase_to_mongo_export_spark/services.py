@@ -38,22 +38,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from .orchestration import ExportCompletionStatus
-
-# DynamoDBExportStatusService.kt:159-165 — the fold's status classes
-# include states written by DOWNSTREAM services (Sent/Received/Success,
-# written by the snapshot sender into the same table), which is why the
-# string sets are wider than this exporter's own CollectionStatus enum.
-SUCCESSFUL_COMPLETION_STATUSES = (
-    "Exported",
-    "Sent",
-    "Received",
-    "Success",
-    "Table_Unavailable",
-    "Blocked_Topic",
-)
-UNSUCCESSFUL_COMPLETION_STATUSES = ("Export_Failed",)
-IN_PROGRESS_COMPLETION_STATUSES = ("Exporting",)
+from .orchestration import ExportCompletionStatus, completion_fold
 
 # ExportCompletionStatus.kt:3-8 — the human description used in
 # monitoring title_text.
@@ -63,19 +48,6 @@ COMPLETION_DESCRIPTION = {
     ExportCompletionStatus.IN_PROGRESS: "in progress",
     ExportCompletionStatus.NOT_COMPLETED: "not completed",
 }
-
-
-def completion_fold_statuses(statuses: list[str]) -> ExportCompletionStatus:
-    """DynamoDBExportStatusService.exportCompletionStatus (kt:30-46) over
-    raw status strings: all-successful > any-in-progress > any-failed >
-    not-completed."""
-    if statuses and all(s in SUCCESSFUL_COMPLETION_STATUSES for s in statuses):
-        return ExportCompletionStatus.COMPLETED_SUCCESSFULLY
-    if any(s in IN_PROGRESS_COMPLETION_STATUSES for s in statuses):
-        return ExportCompletionStatus.IN_PROGRESS
-    if any(s in UNSUCCESSFUL_COMPLETION_STATUSES for s in statuses):
-        return ExportCompletionStatus.COMPLETED_UNSUCCESSFULLY
-    return ExportCompletionStatus.NOT_COMPLETED
 
 
 def retrying(
@@ -226,7 +198,7 @@ class DynamoDbExportStatusService:
         return [item["CollectionStatus"]["S"] for item in items]
 
     def export_completion_status(self) -> ExportCompletionStatus:
-        return completion_fold_statuses(self.statuses())
+        return completion_fold(self.statuses())
 
     # -- orchestration.ExportStatusService interface compatibility ------
     # run_fleet's docstring offers this adapter as the per-topic

@@ -342,7 +342,7 @@ def test_normalised_policy_survives_append_and_recovery(
     path = str(tmp_path / "norm")
     editindex.build_edit_index(corpus, path, k=2, q=4, normalise=True)
     editindex.append_to_edit_index(delta, path, batch_id="b1")
-    assert editindex._meta_normalise(editindex._read_meta(spark, path))
+    assert spark.read.parquet(os.path.join(path, "meta")).head()["normalise"]
     assert _rows(editindex.query_edit_index(spark, path, batch)) == [(11, 2, 0)]
 
     # torn append (crash before meta merge) then recovery must RESTORE
@@ -363,7 +363,7 @@ def test_normalised_policy_survives_append_and_recovery(
         editindex.append_to_edit_index(delta2, path, batch_id="b2")
     monkeypatch.undo()
     editindex.recover_edit_index_append(spark, path)
-    assert editindex._meta_normalise(editindex._read_meta(spark, path))
+    assert spark.read.parquet(os.path.join(path, "meta")).head()["normalise"]
     assert _rows(editindex.query_edit_index(spark, path, batch)) == [(11, 2, 0)]
 
 

@@ -496,9 +496,7 @@ def test_normalised_store_equals_index_free_normalised(spark, docs, tmp_path):
     batch = docs.filter(F.col("doc_id") % 10 == 9)
     path = str(tmp_path / "gxn")
     gramindex.build_gram_index(corpus, path, n=8, normalise=True)
-    assert gramindex._meta_normalise(
-        spark.read.parquet(os.path.join(path, "meta")).head()
-    )
+    assert spark.read.parquet(os.path.join(path, "meta")).head()["normalise"]
     got = gramindex.strip_spans_with_index(spark, path, batch)
     want = spandedup.strip_spans_against_corpus(
         batch, corpus, n=8, normalise=True
@@ -523,7 +521,7 @@ def test_normalised_policy_survives_append_and_recovery(spark, tmp_path):
     res = gramindex.append_to_gram_index(delta, path)
     assert res["committed"]
     m = spark.read.parquet(os.path.join(path, "meta")).head()
-    assert gramindex._meta_normalise(m)
+    assert m["normalise"]
     # a case/punct variant of the BASE doc strips fully against the store
     probe = spark.createDataFrame(
         [(9, "the quick brown fox jumps over lazy dogs")],
@@ -553,12 +551,13 @@ def test_normalised_policy_survives_append_and_recovery(spark, tmp_path):
             )
     gramindex.recover_gram_index_append(spark, path)
     m2 = spark.read.parquet(os.path.join(path, "meta")).head()
-    assert gramindex._meta_normalise(m2)
+    assert m2["normalise"]
 
 
 def test_pre_policy_meta_reads_as_strict(spark, docs, tmp_path):
-    """A pre-round-11 store's meta lacks the normalise column — it was
-    built strict, so probes must hash strict (absent == False)."""
+    """A pre-round-11 store's meta lacks the normalise column. Its
+    policy is not read as a guessed default: probes refuse the store
+    and ask for a rebuild."""
     corpus = docs.filter((F.col("doc_id") % 10 != 9) & (F.col("doc_id") < 200))
     batch = docs.filter(F.col("doc_id") % 10 == 9)
     path = str(tmp_path / "gx")
@@ -569,9 +568,6 @@ def test_pre_policy_meta_reads_as_strict(spark, docs, tmp_path):
         [(int(m["n_docs"]), int(m["n_grams"]), int(m["n"]), m["fingerprint"])],
         "n_docs bigint, n_grams bigint, n int, fingerprint string",
     ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    assert not gramindex._meta_normalise(
-        spark.read.parquet(os.path.join(path, "meta")).head()
-    )
-    got = gramindex.strip_spans_with_index(spark, path, batch)
-    want = spandedup.strip_spans_against_corpus(batch, corpus, n=8)
-    assert _rows(got) == _rows(want)
+    assert "normalise" not in spark.read.parquet(os.path.join(path, "meta")).columns
+    with pytest.raises(ValueError, match="lacks normalise.*rebuild the gram index"):
+        gramindex.strip_spans_with_index(spark, path, batch)

@@ -13,6 +13,10 @@ driven through every durable store's spec.
 * **compaction** — every store's public compactor leaves its state
   unchanged and clears the fragmentation verdict an append raised, and
   a compaction waits for the store lock.
+* **empty batches** — an empty append commits, leaves every relation
+  as it was, consumes its batch id, and its retry is skipped.
+* **fingerprints** — an append that passes no fingerprint stamps ``""``
+  (unknown: rebuild) into meta, never the build's stamp.
 
 One build per store (sf0.001), copied per case.
 """
@@ -263,6 +267,33 @@ def test_corrupt_marker_with_committed_ids_is_refused(spark, built, tmp_path, st
     assert os.path.exists(os.path.join(path, storeprotocol._PENDING))
     assert os.path.exists(os.path.join(path, spec.ids_record, "_SUCCESS"))
     assert _state(spark, spec, path) == torn
+
+
+@pytest.mark.parametrize("store", list(STORES))
+def test_empty_batch_commits_and_consumes_its_id(spark, built, tmp_path, store):
+    docs, emb, stores = built
+    spec, _, _, _, append, _ = STORES[store]
+    pristine, _ = stores[store]
+    path = str(tmp_path / store)
+    shutil.copytree(pristine, path)
+    rels, _ = _state(spark, spec, path)
+    no_docs, no_emb = docs.filter(F.lit(False)), emb.filter(F.lit(False))
+
+    assert append(no_docs, no_emb, path, "e1")["committed"]
+    assert _state(spark, spec, path) == (rels, "e1")
+    assert append(no_docs, no_emb, path, "e1")["skipped_duplicate_batch"]
+
+
+@pytest.mark.parametrize("store", ["text", "dedup", "edit", "gram"])
+def test_append_without_fingerprint_stamps_unknown(spark, built, store):
+    """The clean state is a "v1" build plus an append that passed no
+    fingerprint: the store now holds documents "v1" never had, so its
+    meta must not keep claiming "v1" to a consumer reusing it by
+    fingerprint."""
+    _, _, stores = built
+    pristine, (rels, _) = stores[store]
+    col = spark.read.parquet(os.path.join(pristine, "meta")).columns.index("fingerprint")
+    assert [row[col] for row in rels["meta"]] == [""]
 
 
 COMPACT = {

@@ -1,21 +1,23 @@
-"""Run orchestration: per-collection status tracking, completion fold,
-downstream messaging payloads, metrics.
+"""Run orchestration: per-collection status tracking, the completion
+fold, and after_job, the one router of every downstream message.
 
 Reference: services/impl/DynamoDBExportStatusService.kt:33-121 (status
-fold + increments), services/impl/SQSMessagingService.kt:20-99 and
-SnsServiceImpl.kt:51-135 (message payload shapes),
-batch/JobCompletionNotificationListener.kt:47-141 (terminal routing).
+fold + increments), batch/JobCompletionNotificationListener.kt:47-141
+(afterJob: per-topic sends, then the fold and the terminal routing).
+The message payload shapes (SQSMessagingService.kt:20-99,
+SnsServiceImpl.kt:51-135) live only in services.py.
 
 All driver-side: the heavy lifting happened in the DataFrame job; these
 are bookkeeping calls after actions complete. External services (DynamoDB
-/SQS/SNS via boto3, Prometheus pushgateway) are behind small interfaces
-with in-memory defaults so the logic is testable hermetically; production
-impls are thin boto3 adapters.
+/SQS/SNS via boto3, Prometheus pushgateway) are the services.py adapters
+over injectable clients. A run given no SQS/SNS adapter drives the real
+ones over an in-memory recording client, so a report's `messages` are
+the bodies those adapters sent: the inventory is the record of what was
+sent, not a second copy of the routing.
 """
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from enum import Enum
 
@@ -83,61 +85,146 @@ class ExportStatusService:
         return completion_fold(list(self.statuses.values()))
 
 
-def snapshot_sender_message(
-    correlation_id: str,
-    topic: str,
-    object_key: str,
-    *,
-    files_exported: int,
-    snapshot_type: str = "full",
-    export_date: str = "",
-) -> str:
-    """SQSMessagingService.notifySnapshotSender payload
-    (services.snapshot_sender_payload, kt:62-84): the per-prefix message,
-    or the files_exported=0 variant when nothing was written."""
-    from .services import snapshot_sender_no_files_payload, snapshot_sender_payload
-
-    if files_exported == 0:
-        payload = snapshot_sender_no_files_payload(
-            correlation_id=correlation_id,
-            topic_name=topic,
-            export_date=export_date,
-            reprocess_files=True,
-            shutdown_flag=True,
-            snapshot_type=snapshot_type,
-        )
-    else:
-        payload = snapshot_sender_payload(
-            correlation_id=correlation_id,
-            topic_name=topic,
-            export_date=export_date,
-            reprocess_files=True,
-            shutdown_flag=True,
-            s3_full_folder=object_key,
-            snapshot_type=snapshot_type,
-        )
-    return json.dumps(payload, separators=(",", ":"))
-
-
-def adg_trigger_message(object_key: str) -> str:
-    """SQS data-egress trigger (services.data_egress_payload,
-    SQSMessagingService.kt:87-99) — an S3-event-shaped envelope naming
-    the exported prefix."""
-    from .services import data_egress_payload
-
-    return json.dumps(data_egress_payload(object_key), separators=(",", ":"))
-
-
 @dataclass
 class RunReport:
     """What JobCompletionNotificationListener.afterJob (kt:47-141) leaves
-    behind: terminal status, file inventory, counters, message payloads."""
+    behind for one topic: terminal status, file inventory, counters, and
+    `messages`, the bodies after_job sent through its default SQS/SNS
+    adapters (none for a service whose adapter the caller injected).
+    `export_prefix` is the sink config's prefix the data-egress message
+    names."""
 
     topic: str
     status: CollectionStatus
     files: list = field(default_factory=list)  # per-file metadata Rows
     metrics: dict = field(default_factory=dict)
     messages: list[str] = field(default_factory=list)
+    export_prefix: str = ""
+
+
+class _SentBodies(list):
+    """The in-memory client behind after_job's default adapters: boto3's
+    sqs `send_message` and sns `publish` surfaces, keeping each message
+    body in send order."""
+
+    def send_message(self, *, MessageBody: str, **_) -> None:
+        self.append(MessageBody)
+
+    def publish(self, *, Message: str, **_) -> None:
+        self.append(Message)
+
+
+def after_job(
+    report: RunReport,
+    status_service,
+    messaging=None,
+    sns=None,
+    *,
+    product_status=None,
+    snapshot_type: str = "full",
+    export_date: str = "",
+    s3_prefix: str = "",
+    pdm_common_model_site_prefix: str = "",
+) -> list[str]:
+    """JobCompletionNotificationListener.afterJob (kt:47-141) for one
+    topic's report: the only place a downstream message is decided.
+
+    The topic's own sends come first: an export with files notifies the
+    snapshot sender once per file, then sends the data-egress message
+    naming `{export_prefix}/{topic}-` (kt:117-121); an export with no
+    files sends the no-files variant; a failed topic publishes its
+    topic-failed monitoring message. Then the shared status table is
+    folded (kt:33-58). A successful terminal fold publishes
+    export-completed, then completion monitoring; an unsuccessful one
+    publishes completion monitoring only. Either terminal fold sends the
+    incremental PDM egress message when a site prefix is configured
+    (kt:106-112) and sets the product status (kt:126-135). An in-progress
+    fold sends nothing, so only the last finisher routes the run's
+    terminal messages.
+
+    `messaging` / `sns` are services.SqsMessagingService / SnsService
+    (or fakes with their methods); `product_status` is
+    services.DynamoDbProductStatusService. A messaging or sns left None
+    is the real adapter over one in-memory recording client; the bodies
+    that client received are returned in send order."""
+    from .services import SnsService, SqsMessagingService
+
+    sent = _SentBodies()
+    run = dict(
+        correlation_id=status_service.correlation_id,
+        topic_name=report.topic,
+        snapshot_type=snapshot_type,
+        export_date=export_date,
+    )
+    if messaging is None:
+        queues = ("snapshot_sender_queue_url", "data_egress_queue_url")
+        messaging = SqsMessagingService(sent, **dict.fromkeys(queues, "inventory"), **run)
+    if sns is None:
+        arns = ("monitoring_topic_arn", "full_topic_arn", "incremental_topic_arn")
+        sns = SnsService(sent, s3_prefix=s3_prefix, **dict.fromkeys(arns, "inventory"), **run)
+
+    if report.status == CollectionStatus.EXPORTED and report.files:
+        for f in report.files:
+            messaging.notify_snapshot_sender(f.object_key)
+        messaging.send_data_egress_message(f"{report.export_prefix}/{report.topic}-")
+    elif report.status == CollectionStatus.EXPORTED:
+        messaging.notify_snapshot_sender_no_files_exported()
+    elif report.status == CollectionStatus.EXPORT_FAILED:
+        sns.send_topic_failed_monitoring_message()
+
+    completion = status_service.completion()
+    succeeded = completion == ExportCompletionStatus.COMPLETED_SUCCESSFULLY
+    if not succeeded and completion != ExportCompletionStatus.COMPLETED_UNSUCCESSFULLY:
+        return list(sent)
+    if succeeded:
+        sns.send_export_completed_successfully_message()
+    sns.send_completion_monitoring_message(completion)
+    if snapshot_type == "incremental" and pdm_common_model_site_prefix:
+        messaging.send_data_egress_message(pdm_common_model_site_prefix)
+    if product_status is not None:
+        if succeeded:
+            product_status.set_completed_status()
+        else:
+            product_status.set_failed_status()
+    return list(sent)
+
+
+def _export(
+    cells,
+    topic: str,
+    sink_cfg,
+    status_service: ExportStatusService,
+    *,
+    scan_time_range: tuple[int, int] | None = None,
+    blocked_topics: tuple[str, ...] = (),
+) -> RunReport:
+    """The export itself: blocked-topic gate -> one export pass -> status
+    writes. Sends nothing; after_job routes the messages."""
+    from .pipeline import BlockedTopicError, scan_cells
+    from .sinks.snapshot import export_envelopes
+
+    try:
+        cells = scan_cells(
+            cells, topic, scan_time_range=scan_time_range, blocked_topics=blocked_topics
+        )
+    except BlockedTopicError:
+        status_service.set_status(topic, CollectionStatus.BLOCKED_TOPIC)
+        return RunReport(topic, CollectionStatus.BLOCKED_TOPIC)
+
+    try:
+        files, counters = export_envelopes(cells, topic, sink_cfg)
+    except Exception:
+        status_service.set_status(topic, CollectionStatus.EXPORT_FAILED)
+        raise
+    status_service.increment_exported_count(topic, len(files))
+    status_service.set_status(topic, CollectionStatus.EXPORTED)
+    return RunReport(
+        topic,
+        CollectionStatus.EXPORTED,
+        files=files,
+        metrics={**counters, "files_exported": len(files)},
+        export_prefix=sink_cfg.export_prefix,
+    )
 
 
 def run_topic_export(
@@ -153,8 +240,8 @@ def run_topic_export(
 ) -> RunReport:
     """One topic end-to-end: blocked-topic gate -> one export pass
     parsing the envelopes and writing the encrypted snapshots +
-    manifests -> status increments -> terminal status -> message
-    payloads.
+    manifests -> status increments -> terminal status -> after_job,
+    whose sent bodies become the report's `messages`.
 
     The §3.1 lifecycle as driver code around ONE DataFrame action and
     two Python stages at most (a Python source's read, then the export
@@ -166,86 +253,23 @@ def run_topic_export(
     bytes_normalised come back in each partition's counter row with the
     file rows (no second scan — at 100 TB a metrics-only pass would cost
     as much as the export). Blocked topics short-circuit before any
-    job, exactly like the reference's pre-flight gate."""
-    from .pipeline import BlockedTopicError, scan_cells
-    from .sinks.snapshot import export_envelopes
-
-    try:
-        cells = scan_cells(
-            cells, topic, scan_time_range=scan_time_range, blocked_topics=blocked_topics
-        )
-    except BlockedTopicError:
-        status_service.set_status(topic, CollectionStatus.BLOCKED_TOPIC)
-        return RunReport(
-            topic,
-            CollectionStatus.BLOCKED_TOPIC,
-            messages=[
-                monitoring_message(
-                    status_service.correlation_id,
-                    status_service.completion(),
-                    snapshot_type,
-                    export_date,
-                )
-            ],
-        )
-
-    try:
-        files, counters = export_envelopes(cells, topic, sink_cfg)
-    except Exception:
-        status_service.set_status(topic, CollectionStatus.EXPORT_FAILED)
-        raise
-    status_service.increment_exported_count(topic, len(files))
-    status_service.set_status(topic, CollectionStatus.EXPORTED)
-
-    metrics = {**counters, "files_exported": len(files)}
-
-    messages = [
-        snapshot_sender_message(
-            status_service.correlation_id,
-            topic,
-            f.object_key,
-            files_exported=len(files),
-            snapshot_type=snapshot_type,
-            export_date=export_date,
-        )
-        for f in files
-    ]
-    if not files:
-        # the reference sends noFilesExportedMessage when an export
-        # succeeds with zero files (SQSMessagingService.kt:62-84) — the
-        # payload inventory must include it, mirroring run_fleet's
-        # notify_snapshot_sender_no_files_exported adapter branch
-        messages.append(
-            snapshot_sender_message(
-                status_service.correlation_id,
-                topic,
-                "",
-                files_exported=0,
-                snapshot_type=snapshot_type,
-                export_date=export_date,
-            )
-        )
-    if files:
-        # zero-file exports send the no-files snapshot message but NO
-        # data-egress trigger — the same condition run_fleet's adapter
-        # path applies; an ADG trigger naming key "" would start
-        # analytical-dataset generation on an empty prefix
-        messages.append(adg_trigger_message(files[-1].object_key))
-    messages.append(
-        monitoring_message(
-            status_service.correlation_id,
-            status_service.completion(),
-            snapshot_type,
-            export_date,
-        )
+    job, exactly like the reference's pre-flight gate. A failing export
+    marks the topic Export_Failed and raises."""
+    report = _export(
+        cells, topic, sink_cfg, status_service,
+        scan_time_range=scan_time_range, blocked_topics=blocked_topics,
     )
-    return RunReport(topic, CollectionStatus.EXPORTED, files=files, metrics=metrics, messages=messages)
+    report.messages = after_job(
+        report, status_service, snapshot_type=snapshot_type, export_date=export_date
+    )
+    return report
 
 
 @dataclass
 class FleetReport:
     """Outcome of a multi-topic run: per-topic reports, the cross-topic
-    completion fold, and the terminal messages the last finisher sent."""
+    completion fold, and `messages`, every body after_job sent through
+    its default adapters, in send order across the topics."""
 
     reports: dict[str, RunReport]
     completion: ExportCompletionStatus
@@ -269,7 +293,6 @@ def run_fleet(
     sns_for=None,
     push_gateway=None,
     product_status=None,
-    export_prefix: str = "",
     pdm_common_model_site_prefix: str = "",
 ) -> FleetReport:
     """SURVEY §3.3 fleet semantics: the reference runs ONE JVM per topic
@@ -277,28 +300,28 @@ def run_fleet(
     shared status table — every job's afterJob queries ALL rows for its
     correlation id (TableServiceImpl.kt:16-29) and folds them
     (DynamoDBExportStatusService.kt:30-46); the LAST finisher (the one
-    whose fold comes back COMPLETED_SUCCESSFULLY) triggers the terminal
-    export-completed + monitoring messages
+    whose fold comes back terminal) routes the terminal messages
     (JobCompletionNotificationListener.kt:47-141).
 
     Spark form: a driver loop over topics against one SparkSession —
     each topic's export is its own job (Spark schedules them over the
-    same executors), and the same external-state fold runs after each.
-    `status_service` is the shared table: the in-memory service here, or
-    services.DynamoDbExportStatusService per topic in production.
-    `cells_for(topic)` / `sink_cfg_for(topic)` supply each topic's input
-    frame and sink config. Table-unavailable topics mirror the
-    reference's pre-scan check (HBaseReader.kt table existence):
-    status-only, no job.
+    same executors), and after_job runs after each, unavailable and
+    failed topics included. `status_service` is the shared table: the
+    in-memory service here, or services.DynamoDbExportStatusService per
+    topic in production. `cells_for(topic)` / `sink_cfg_for(topic)`
+    supply each topic's input frame and sink config; the sink config's
+    `export_prefix` is the prefix the topic's data-egress message names.
+    Table-unavailable topics mirror the reference's pre-scan check
+    (HBaseReader.kt table existence): status-only, no job.
 
-    Optional service adapters (services.py — or fakes) make the terminal
-    routing REAL instead of payload-only: `messaging`
-    (SqsMessagingService) gets one notify_snapshot_sender per exported
-    file prefix (or the no-files variant), `sns` (SnsService) gets the
-    export-completed + completion-monitoring publishes from the last
-    finisher (and topic-failed messages as failures happen), and
-    `push_gateway` (PushGatewayService) gets push_final_metrics at the
-    end — JobCompletionNotificationListener.kt:47-141's routing."""
+    Optional service adapters (services.py — or fakes) receive
+    after_job's sends: `messaging` / `messaging_for(topic)`
+    (SqsMessagingService), `sns` / `sns_for(topic)` (SnsService) and
+    `product_status` (DynamoDbProductStatusService); `push_gateway`
+    (PushGatewayService) gets push_final_metrics at the end, whatever
+    the fold. A service left without an adapter is sent to through the
+    real adapter over an in-memory client, and the fleet's `messages`
+    are the bodies that client received."""
     reports: dict[str, RunReport] = {}
     for topic in topics:
         status_service.set_status(topic, CollectionStatus.EXPORTING)
@@ -317,26 +340,21 @@ def run_fleet(
             singleton.topic_name = t
         return singleton
 
-    messaging_t, sns_t = messaging, sns
     for topic in topics:
-        messaging_t = _adapter_for(topic, messaging_for, messaging)
-        sns_t = _adapter_for(topic, sns_for, sns)
         if topic in unavailable_topics:
             status_service.set_status(topic, CollectionStatus.TABLE_UNAVAILABLE)
-            reports[topic] = RunReport(topic, CollectionStatus.TABLE_UNAVAILABLE)
+            report = RunReport(topic, CollectionStatus.TABLE_UNAVAILABLE)
         else:
             try:
-                reports[topic] = run_topic_export(
+                report = _export(
                     cells_for(topic),
                     topic,
                     sink_cfg_for(topic),
                     status_service,
-                    snapshot_type=snapshot_type,
                     blocked_topics=blocked_topics,
-                    export_date=export_date,
                 )
             except Exception as e:
-                # run_topic_export sets EXPORT_FAILED only for sink-write
+                # _export sets EXPORT_FAILED only for sink-write
                 # failures; cells_for(topic) / plan construction can raise
                 # before any write, which would leave the topic Exporting
                 # and the completion fold IN_PROGRESS forever. Set it here
@@ -344,104 +362,22 @@ def run_fleet(
                 # like the reference marks failure on ANY job failure
                 # (JobCompletionNotificationListener.afterJob).
                 status_service.set_status(topic, CollectionStatus.EXPORT_FAILED)
-                reports[topic] = RunReport(
+                report = RunReport(
                     topic, CollectionStatus.EXPORT_FAILED, metrics={"error": str(e)}
                 )
-                if sns_t is not None:
-                    sns_t.send_topic_failed_monitoring_message()
-        # per-topic snapshot-sender notifications ride the topic loop,
-        # exactly like afterJob's per-file sends
-        if messaging_t is not None:
-            report = reports[topic]
-            if report.status == CollectionStatus.EXPORTED and report.files:
-                for f in report.files:
-                    messaging_t.notify_snapshot_sender(f.object_key)
-                # data-egress/RIS message names the topic's file prefix
-                # (JobCompletionNotificationListener.kt:117-121)
-                messaging_t.send_data_egress_message(f"{export_prefix}/{topic}-")
-            elif report.status == CollectionStatus.EXPORTED:
-                messaging_t.notify_snapshot_sender_no_files_exported()
-        # the reference's afterJob fold runs after EVERY topic; only the
-        # last finisher sees all-successful and routes terminal messages
-        completion = status_service.completion()
-        if completion == ExportCompletionStatus.COMPLETED_SUCCESSFULLY:
-            from .services import export_completed_payload
-
-            messages.append(
-                json.dumps(
-                    export_completed_payload(
-                        correlation_id=status_service.correlation_id,
-                        s3_prefix=s3_prefix,
-                        snapshot_type=snapshot_type,
-                        export_date=export_date,
-                    ),
-                    separators=(",", ":"),
-                )
-            )
-            messages.append(
-                monitoring_message(
-                    status_service.correlation_id, completion, snapshot_type, export_date
-                )
-            )
-            if sns_t is not None:
-                # the LAST finisher routes the terminal publishes with
-                # its own (current-topic) adapter, as that topic's JVM
-                # would in the reference
-                sns_t.send_export_completed_successfully_message()
-                sns_t.send_completion_monitoring_message(completion)
-    completion = status_service.completion()
-    terminal = completion in (
-        ExportCompletionStatus.COMPLETED_SUCCESSFULLY,
-        ExportCompletionStatus.COMPLETED_UNSUCCESSFULLY,
-    )
-    if completion != ExportCompletionStatus.COMPLETED_SUCCESSFULLY:
-        messages.append(
-            monitoring_message(
-                status_service.correlation_id, completion, snapshot_type, export_date
-            )
-        )
-        # monitoring publishes only on TERMINAL folds (kt:138-142);
-        # in-progress / not-completed runs stay silent
-        if sns_t is not None and terminal:
-            sns_t.send_completion_monitoring_message(completion)
-    # PDM common-model trigger: incremental runs with a configured site
-    # prefix message data egress on either terminal state (kt:106-112)
-    if (
-        messaging_t is not None
-        and terminal
-        and snapshot_type == "incremental"
-        and pdm_common_model_site_prefix
-    ):
-        messaging_t.send_data_egress_message(pdm_common_model_site_prefix)
-    # run-level product status row other pipeline stages poll (kt:126-135)
-    if product_status is not None and terminal:
-        if completion == ExportCompletionStatus.COMPLETED_SUCCESSFULLY:
-            product_status.set_completed_status()
-        else:
-            product_status.set_failed_status()
-    if push_gateway is not None:
-        push_gateway.push_final_metrics()
-    return FleetReport(reports, completion, messages)
-
-
-def monitoring_message(
-    correlation_id: str,
-    status: ExportCompletionStatus,
-    snapshot_type: str,
-    export_date: str = "",
-) -> str:
-    """SNS completion-monitoring payload — delegates to the
-    reference-exact builder (services.completion_monitoring_payload,
-    SnsServiceImpl.kt:99-135: severity Critical + type Information on
-    success, High + Warning otherwise, slack_username HTME)."""
-    from .services import completion_monitoring_payload
-
-    return json.dumps(
-        completion_monitoring_payload(
-            status,
-            correlation_id=correlation_id,
+        report.messages = after_job(
+            report,
+            status_service,
+            _adapter_for(topic, messaging_for, messaging),
+            _adapter_for(topic, sns_for, sns),
+            product_status=product_status,
             snapshot_type=snapshot_type,
             export_date=export_date,
-        ),
-        separators=(",", ":"),
-    )
+            s3_prefix=s3_prefix,
+            pdm_common_model_site_prefix=pdm_common_model_site_prefix,
+        )
+        reports[topic] = report
+        messages += report.messages
+    if push_gateway is not None:
+        push_gateway.push_final_metrics()
+    return FleetReport(reports, status_service.completion(), messages)

@@ -23,9 +23,10 @@ boto3 client, a prometheus pushgateway, or a test fake exposing the same
 methods. The AWS SDK / prometheus_client libraries are not required to
 import this module (this sandbox has neither); `boto3_client()` /
 `prometheus_pusher()` are the only functions that touch them, behind
-lazy imports with a clear error. The orchestration logic itself
-(completion fold, payload contents) lives here and in orchestration.py
-and is fully unit-tested with recorded request goldens.
+lazy imports with a clear error. The payload contents live here only,
+unit-tested with recorded request goldens; the completion fold and the
+routing of every message (orchestration.after_job) live in
+orchestration.py.
 
 Retries mirror the reference's @Retryable defaults (5 attempts,
 1 s delay, x2 backoff) with an injectable sleep.

@@ -17,10 +17,11 @@ from dwp_hbase_to_mongo_export_spark.orchestration import (
     ExportCompletionStatus as ECS,
     ExportStatusService,
     run_fleet,
+    run_topic_export,
 )
 from dwp_hbase_to_mongo_export_spark.sinks.snapshot import SnapshotSinkConfig
 from dwp_hbase_to_mongo_export_spark.sources.hbase_cells import fixture_cells
-from tests.test_services import FakePusher, FakeSns, FakeSqs
+from tests.test_services import FakeDynamo, FakePusher, FakeSns, FakeSqs
 
 DATA_KEY_B64 = "MDEyMzQ1Njc4OWFiY2RlZjAxMjM0NTY3ODlhYmNkZWY="
 
@@ -67,7 +68,7 @@ def fleet_run(spark, tmp_path):
         return SnapshotSinkConfig(
             output_dir=str(tmp_path / topic), topic=topic, compression="gz",
             data_key_b64=DATA_KEY_B64, encrypted_data_key_b64="e", kek_id="k",
-            deterministic_iv=True,
+            export_prefix="exports/2024-01-01", deterministic_iv=True,
         )
 
     svc_status = ExportStatusService(correlation_id="corr-fleet")
@@ -81,7 +82,7 @@ def fleet_run(spark, tmp_path):
         TOPICS, cells_for, cfg_for, svc_status,
         blocked_topics=(BLOCKED,), unavailable_topics=(UNAVAILABLE,),
         messaging_for=messaging_for, sns_for=sns_for, push_gateway=pg,
-        export_date="2024-01-01", export_prefix="exports/2024-01-01",
+        export_date="2024-01-01",
     )
     return fleet, svc_status, sqs_clients, sns_clients, pusher
 
@@ -119,7 +120,9 @@ def test_fleet_per_topic_sqs_routing(fleet_run):
     for c in fifo:
         assert c["MessageGroupId"] == OK.replace(".", "_")
         assert json.loads(c["MessageBody"])["topic_name"] == OK
-    assert f"{OK}-" in egress[0]["MessageBody"]
+    assert json.loads(egress[0]["MessageBody"]) == services_mod.data_egress_payload(
+        "exports/2024-01-01/db.ok.one-"
+    )
 
     empty_calls = sqs_clients[EMPTY].calls
     assert len(empty_calls) == 1 and empty_calls[0]["QueueUrl"] == "q1.fifo"
@@ -159,4 +162,150 @@ def test_fleet_per_topic_sns_routing(fleet_run):
         == 1
     )
     # final metrics still pushed (then deleted) despite the failure
+    assert len(pusher.pushes) == 1 and len(pusher.deletes) == 1
+
+
+class FakeQueues(FakeSqs, FakeSns):
+    """One recording client behind both the SQS and the SNS adapter, so
+    their sends keep one order."""
+
+
+@pytest.mark.parametrize("shape", ["topic", "fleet"])
+def test_inventory_equals_adapter_bodies(spark, tmp_path, shape):
+    """The same export run with no adapters and with recording adapters
+    injected: the report's message inventory holds exactly the bodies
+    the adapters were sent, in the same order. `topic` runs
+    run_topic_export without adapters against a one-topic run_fleet with
+    them; `fleet` runs an exported, a blocked and a failing topic."""
+
+    def cells_for(topic):
+        if topic == FAILING:
+            raise RuntimeError("scan planning blew up before any write")
+        return fixture_cells(spark, n=8, topic=topic).coalesce(1)
+
+    def cfg_for(root):
+        return lambda topic: SnapshotSinkConfig(
+            output_dir=str(tmp_path / root / topic), topic=topic, compression="gz",
+            data_key_b64=DATA_KEY_B64, encrypted_data_key_b64="e", kek_id="k",
+            export_prefix="exports/2024-01-01", deterministic_iv=True,
+        )
+
+    client = FakeQueues()
+    adapters = dict(
+        messaging=services_mod.SqsMessagingService(
+            client, topic_name="", snapshot_sender_queue_url="q1.fifo",
+            data_egress_queue_url="q2", correlation_id="corr-p",
+            export_date="2024-01-01", retry_sleep=lambda _: None,
+        ),
+        sns=services_mod.SnsService(
+            client, correlation_id="corr-p", monitoring_topic_arn="arn:mon",
+            full_topic_arn="arn:full", export_date="2024-01-01",
+            retry_sleep=lambda _: None,
+        ),
+    )
+    if shape == "topic":
+        report = run_topic_export(
+            cells_for(OK), OK, cfg_for("bare")(OK), ExportStatusService("corr-p"),
+            export_date="2024-01-01",
+        )
+        inventory = report.messages
+        run_fleet([OK], cells_for, cfg_for("adapted"), ExportStatusService("corr-p"),
+                  export_date="2024-01-01", **adapters)
+    else:
+        topics = [OK, BLOCKED, FAILING]
+        kw = dict(export_date="2024-01-01", blocked_topics=(BLOCKED,))
+        inventory = run_fleet(topics, cells_for, cfg_for("bare"), ExportStatusService("corr-p"), **kw).messages
+        run_fleet(topics, cells_for, cfg_for("adapted"), ExportStatusService("corr-p"), **kw, **adapters)
+    sent = [json.loads(c["MessageBody"] if "MessageBody" in c else c["Message"]) for c in client.calls]
+    assert [json.loads(m) for m in inventory] == sent
+    assert len(client.calls) >= 4
+
+
+def _status_only_fleet(topics, status=None, **kw):
+    """A fleet of blocked, unavailable and pre-write-failing topics: the
+    whole routing runs and no Spark job does."""
+
+    def cells_for(topic):
+        if topic == FAILING:
+            raise RuntimeError("scan planning blew up before any write")
+
+    return run_fleet(
+        topics, cells_for, lambda t: None, status or ExportStatusService("corr-t"),
+        blocked_topics=(BLOCKED,), unavailable_topics=(UNAVAILABLE,), **kw,
+    )
+
+
+@pytest.mark.parametrize(
+    "topics, completion, product",
+    [
+        ([BLOCKED, UNAVAILABLE], ECS.COMPLETED_SUCCESSFULLY, "COMPLETED"),
+        ([BLOCKED, FAILING], ECS.COMPLETED_UNSUCCESSFULLY, "FAILED"),
+    ],
+)
+def test_terminal_fold_sets_product_status_once(topics, completion, product):
+    dynamo = FakeDynamo()
+    fleet = _status_only_fleet(
+        topics, product_status=services_mod.DynamoDbProductStatusService(
+            dynamo, correlation_id="corr-t", retry_sleep=lambda _: None,
+        ),
+    )
+    assert fleet.completion == completion
+    assert [kw["ExpressionAttributeValues"][":x"]["S"] for _, kw in dynamo.calls] == [product]
+
+
+@pytest.mark.parametrize("snapshot_type", ["full", "incremental"])
+@pytest.mark.parametrize("site_prefix", ["", "pdm/site"])
+@pytest.mark.parametrize("topics", [[BLOCKED, UNAVAILABLE], [BLOCKED, FAILING]])
+def test_terminal_fold_sends_pdm_egress_once(snapshot_type, site_prefix, topics):
+    """The PDM common-model egress message goes out exactly once, on
+    either terminal fold, only for incremental runs with a site prefix
+    (kt:106-112); blocked, unavailable and failed topics send no egress
+    of their own."""
+    client = FakeSqs()
+    messaging = services_mod.SqsMessagingService(
+        client, topic_name="", snapshot_sender_queue_url="q1.fifo",
+        data_egress_queue_url="q2", correlation_id="corr-t", retry_sleep=lambda _: None,
+    )
+    _status_only_fleet(
+        topics, messaging=messaging, snapshot_type=snapshot_type,
+        pdm_common_model_site_prefix=site_prefix,
+    )
+    expected = [services_mod.data_egress_payload("pdm/site")]
+    if snapshot_type == "full" or not site_prefix:
+        expected = []
+    assert [json.loads(c["MessageBody"]) for c in client.calls] == expected
+
+
+def test_in_progress_fold_routes_nothing():
+    """A foreign topic still Exporting in the shared table keeps the fold
+    IN_PROGRESS: no monitoring, PDM or product-status call, no inventory
+    entry, and the push gateway still pushes."""
+    status = ExportStatusService("corr-t")
+    status.set_status("db.other.topic", CS.EXPORTING)
+    sqs, sns_client, dynamo, pusher = FakeSqs(), FakeSns(), FakeDynamo(), FakePusher()
+    fleet = _status_only_fleet(
+        [BLOCKED, UNAVAILABLE], status,
+        messaging=services_mod.SqsMessagingService(
+            sqs, topic_name="", snapshot_sender_queue_url="q1.fifo",
+            data_egress_queue_url="q2", correlation_id="corr-t", retry_sleep=lambda _: None,
+        ),
+        sns=services_mod.SnsService(
+            sns_client, correlation_id="corr-t", monitoring_topic_arn="arn:mon",
+            full_topic_arn="arn:full", incremental_topic_arn="arn:inc",
+            retry_sleep=lambda _: None,
+        ),
+        product_status=services_mod.DynamoDbProductStatusService(
+            dynamo, correlation_id="corr-t", retry_sleep=lambda _: None,
+        ),
+        push_gateway=services_mod.PushGatewayService(
+            pusher, correlation_id="corr-t", snapshot_type="incremental",
+            topic_name=BLOCKED, instance_name="i-1", export_date="2024-01-01",
+            sleep=lambda _: None,
+        ),
+        snapshot_type="incremental", pdm_common_model_site_prefix="pdm/site",
+    )
+    assert fleet.completion == ECS.IN_PROGRESS
+    assert sqs.calls == [] and sns_client.calls == [] and dynamo.calls == []
+    # the default (inventory) adapters record nothing on an in-progress fold either
+    assert _status_only_fleet([BLOCKED], status).messages == []
     assert len(pusher.pushes) == 1 and len(pusher.deletes) == 1

@@ -308,27 +308,6 @@ def test_pushgateway_delete_disabled():
     assert pusher.deletes == []
 
 
-def test_orchestration_messages_use_reference_shapes():
-    from dwp_hbase_to_mongo_export_spark.orchestration import (
-        adg_trigger_message,
-        snapshot_sender_message,
-    )
-
-    body = json.loads(
-        snapshot_sender_message("corr-1", "db.t", "prefix/f1", files_exported=2)
-    )
-    assert body["s3_full_folder"] == "prefix/f1"
-    assert "files_exported" not in body  # only the 0-files variant has it
-
-    body0 = json.loads(
-        snapshot_sender_message("corr-1", "db.t", "ignored", files_exported=0)
-    )
-    assert body0["files_exported"] == 0
-
-    egress = json.loads(adg_trigger_message("prefix/f1"))
-    assert egress == {"Records": [{"s3": {"object": {"key": "prefix/f1"}}}]}
-
-
 class FakeS3:
     def __init__(self):
         self.calls: list[dict] = []

@@ -154,8 +154,15 @@ def test_run_topic_export_end_to_end(spark, tmp_path):
     assert report.metrics["records_failed"] == 0
     assert report.metrics["files_exported"] == len(report.files)
     assert report.metrics["bytes_normalised"] > 0
-    # one snapshot-sender message per file + adg + monitoring
-    assert len(report.messages) == len(report.files) + 2
+    # one snapshot-sender message per file, the data-egress message,
+    # then export-completed and monitoring: a one-topic run is its own
+    # last finisher
+    bodies = [json.loads(m) for m in report.messages]
+    n = len(report.files)
+    assert len(bodies) == n + 3
+    assert [b["s3_full_folder"] for b in bodies[:n]] == [f.object_key for f in report.files]
+    assert bodies[n] == {"Records": [{"s3": {"object": {"key": "/db.database.collection-"}}}]}
+    assert bodies[n + 1]["overrides"] == {"Name": "analytical-dataset-generator-full"}
     mon = json.loads(report.messages[-1])
     assert mon["title_text"] == "Full - Export finished - success"
     assert (mon["severity"], mon["notification_type"]) == ("Critical", "Information")

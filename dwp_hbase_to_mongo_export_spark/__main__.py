@@ -74,6 +74,9 @@ def main(argv: list[str] | None = None) -> int:
         data_key_b64=DATA_KEY_B64,
         encrypted_data_key_b64=service.encrypt_data_key(MASTER_KEK_ID, DATA_KEY_B64),
         kek_id=MASTER_KEK_ID,
+        # the data-egress message names {export_prefix}/{topic}-: the
+        # prefix is where the files are written
+        export_prefix=args.output.rstrip("/"),
     )
     status_service = ExportStatusService(correlation_id=args.correlation_id)
     scan_range = None

@@ -1,9 +1,14 @@
-"""Shared-fixture durable-index cache placement + build serialization.
+"""Shared-fixture durable-store cache: placement, build serialization
+and the one reuse rule.
 
-The indexed queries (dedup_incremental_indexed, bm25_indexed) persist
-their corpus artifact once per fixture and key reuse on a source
-CONTENT fingerprint. Two hazards follow from caching under a fixed
-world-readable temp path (round-9 advice):
+The indexed queries (bm25_indexed, dedup_incremental_indexed,
+dedup_edit_indexed, dedup_spans_indexed[_normalised]) and the recovery
+drill persist their store once per fixture and reuse it only while the
+fingerprint stamped in its meta matches the source's CONTENT
+fingerprint (``cached_store``; the fingerprint must describe the
+artifact's content for cross-session reuse to be correct). Two hazards
+follow from caching under a fixed world-readable temp path (round-9
+advice):
 
 * **multi-user collision** — /tmp is shared, so two users running the
   suite over the same fixture basename would fight over one directory
@@ -28,15 +33,17 @@ from __future__ import annotations
 import contextlib
 import getpass
 import os
+import shutil
 import tempfile
+from typing import Callable
 
 
 def user_cache_dir(version_token: str, sf_dir: str) -> str:
     """Per-user durable-index cache directory for a fixture: the
     version token pins the artifact LAYOUT (bump on schema change), the
     user key prevents cross-user collisions on shared hosts, and the
-    fixture basename separates scale factors. Content staleness is the
-    caller's fingerprint check, not the path's concern."""
+    fixture basename separates scale factors. Content staleness is
+    ``cached_store``'s fingerprint check, not the path's concern."""
     return os.path.join(
         tempfile.gettempdir(),
         f"{version_token}_{getpass.getuser()}",
@@ -62,3 +69,30 @@ def build_lock(path: str):
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
+
+
+def cached_store(
+    spark,
+    sf_dir: str,
+    table: str,
+    token: str,
+    spec,
+    build: Callable[..., None],
+) -> str:
+    """The durable store for ``sf_dir``'s ``table`` under the version
+    ``token``: reused while ``spec``'s stamped fingerprint equals the
+    source's, else removed and rebuilt as ``build(table_df, path, fp)``.
+    A torn, build-pending, unreadable or unstamped artifact reads as no
+    fingerprint (storeprotocol.stored_fingerprint), so it rebuilds too.
+    The check and build run under ``build_lock``."""
+    from ..operators import storeprotocol
+    from ..sources.parquet import load_table
+    from .fingerprint import source_fingerprint
+
+    fp = source_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+    path = user_cache_dir(token, sf_dir)
+    with build_lock(path):
+        if storeprotocol.stored_fingerprint(spec, spark, path) != fp:
+            shutil.rmtree(path, ignore_errors=True)
+            build(load_table(spark, sf_dir, table), path, fp)
+    return path

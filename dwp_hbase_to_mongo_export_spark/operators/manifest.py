@@ -6,12 +6,13 @@ rendered as a pipe-delimited, CSV-escaped line at DomainClasses.kt:83-88:
 id|timestamp|db|collection|source|externalOuterSource|originalId|externalInnerSource
 
 Spark-first: a second projection off the main DataFrame — Catalyst reuses
-the upstream plan; writing happens in sinks/manifest_csv.py.
+the upstream plan; writing happens in sinks/manifest_csv.py. The export's
+per-file manifest lines are rendered by sinks/snapshot._RollingWriter.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_COLUMNS = [
@@ -37,19 +38,3 @@ def manifest_records(normalised: DataFrame, source: str = "EXPORT") -> DataFrame
         F.col("manifest_original_id").alias("originalId"),
         F.col("inner_type").alias("externalInnerSource"),
     )
-
-
-def _csv_escape(c: Column) -> Column:
-    """commons-text escapeCsv: quote only when the value contains a quote,
-    comma, CR or LF; embedded quotes doubled."""
-    needs = c.contains('"') | c.contains(",") | c.contains("\n") | c.contains("\r")
-    quoted = F.concat(F.lit('"'), F.replace(c, F.lit('"'), F.lit('""')), F.lit('"'))
-    return F.when(needs, quoted).otherwise(c)
-
-
-def manifest_lines(manifest: DataFrame) -> DataFrame:
-    """One pipe-delimited line per record (column `line`)."""
-    cols = [
-        _csv_escape(F.col(name).cast("string")) for name in MANIFEST_COLUMNS
-    ]
-    return manifest.select(F.concat_ws("|", *cols).alias("line"))

@@ -278,10 +278,10 @@ from .storeprotocol import (  # noqa: E402
     append,
     compact,
     fragmentation,
+    meta_frame,
     open_for_read,
     read_last_append,  # noqa: F401 — public: the store's idempotence record
     recover,
-    stored_fingerprint,
 )
 
 
@@ -339,6 +339,8 @@ PQ_SPEC = StoreSpec(
     purge=_purge_pq,
     untouched={"codes_purged": False},
 )
+# The IVF and PQ meta is one fingerprint row, written last by a build.
+_fingerprint_meta = meta_frame("fingerprint string")
 
 
 def save_ivf_index(
@@ -355,9 +357,10 @@ def save_ivf_index(
     FILE level, across sessions, with no warm cache required.
 
     ``fingerprint`` (functions/fingerprint.source_fingerprint of the
-    source corpus) is stamped into a 1-row meta relation so a consumer
-    keying reuse on the PATH can verify the source did not change
-    underneath it (load_ivf_index's expect_fingerprint)."""
+    source corpus) is stamped into a 1-row meta relation, written last
+    so that meta is the build's commit record: a consumer keying reuse
+    on the PATH reads it through storeprotocol.stored_fingerprint
+    (IVF_SPEC) and rebuilds when the source changed underneath it."""
     spark = index.sparkSession
     index.write.partitionBy("cluster").parquet(os.path.join(path, "postings"))
     spark.createDataFrame(
@@ -365,9 +368,9 @@ def save_ivf_index(
         "cent_id bigint, cv array<double>",
     ).write.parquet(os.path.join(path, "centroids"))
     if fingerprint is not None:
-        spark.createDataFrame(
-            [(fingerprint,)], "fingerprint string"
-        ).write.parquet(os.path.join(path, "meta"))
+        _fingerprint_meta(spark, {"fingerprint": fingerprint}).write.parquet(
+            os.path.join(path, "meta")
+        )
 
 
 def append_to_ivf_index(
@@ -450,26 +453,17 @@ def compact_ivf_postings(
     return compact(IVF_SPEC, spark, path, target_bytes)
 
 
-def load_ivf_index(spark, path: str, expect_fingerprint: str | None = None):
+def load_ivf_index(spark, path: str):
     """Load a save_ivf_index artifact: returns (index, cents) exactly
     as build_ivf_index does, ready for query_ivf — a fresh session
-    queries the index without ever touching the float corpus.
-
-    ``expect_fingerprint``: the CURRENT source's fingerprint; loading
-    raises when the artifact was stamped from different source content
-    (or carries no stamp to check) — the stale-artifact failure mode is
-    a silently wrong answer, so path-keyed reuse must verify content."""
+    queries the index without ever touching the float corpus. Refuses
+    a torn artifact (open_for_read). The stamp is not checked here:
+    path-keyed reuse checks it before loading
+    (functions/indexcache.cached_store, through
+    storeprotocol.stored_fingerprint)."""
     from .clustering import rows_to_centroids
 
     open_for_read(IVF_SPEC, path)
-    if expect_fingerprint is not None:
-        stored = stored_fingerprint(IVF_SPEC, spark, path)
-        if stored != expect_fingerprint:
-            raise ValueError(
-                f"{path}: stored source fingerprint {stored!r} does not "
-                f"match the current source {expect_fingerprint!r} — the "
-                "corpus changed under the artifact; rebuild the index"
-            )
     index = spark.read.parquet(os.path.join(path, "postings"))
     rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
     return index, rows_to_centroids(rows)
@@ -901,7 +895,9 @@ def build_pq_index(
     return codes, books
 
 
-def save_pq_index(codes: DataFrame, books, path: str) -> None:
+def save_pq_index(
+    codes: DataFrame, books, path: str, fingerprint: str | None = None
+) -> None:
     """Persist a built PQ index DURABLY: the encoded corpus — (id,
     codes array<bigint>), m small ints per vector — as parquet, plus
     the m codebooks as a tiny (subspace, code, cw) side relation. This
@@ -914,7 +910,11 @@ def save_pq_index(codes: DataFrame, books, path: str) -> None:
     tests/test_plans.py no-Python pin holds on the loaded index).
     Unlike the IVF postings there is no partition key: every ADC query
     scores every code row, so pruning has nothing to prune — a flat
-    parquet layout is the right one."""
+    parquet layout is the right one.
+
+    ``fingerprint`` is stamped into a 1-row meta relation written last,
+    exactly as save_ivf_index does: meta is the commit record, and
+    storeprotocol.stored_fingerprint (PQ_SPEC) reads it back."""
     spark = codes.sparkSession
     codes.write.parquet(os.path.join(path, "codes"))
     rows = [
@@ -925,6 +925,10 @@ def save_pq_index(codes: DataFrame, books, path: str) -> None:
     spark.createDataFrame(
         rows, "subspace int, code bigint, cw array<double>"
     ).write.parquet(os.path.join(path, "codebooks"))
+    if fingerprint is not None:
+        _fingerprint_meta(spark, {"fingerprint": fingerprint}).write.parquet(
+            os.path.join(path, "meta")
+        )
 
 
 def load_pq_index(spark, path: str):

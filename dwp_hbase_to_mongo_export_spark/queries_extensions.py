@@ -10,12 +10,24 @@ the full table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators import bpe, dedup, multimodal, similarity, textops
+from .functions import indexcache
+from .operators import (
+    bpe,
+    dedup,
+    dedupindex,
+    editdist,
+    editindex,
+    gramindex,
+    multimodal,
+    similarity,
+    spandedup,
+    storeprotocol,
+    textindex,
+    textops,
+)
 from .queries import query
 from .queries_clustering import _PQ_DSUB, _PQ_ITERS, _PQ_KC, _PQ_M, _pq_ctes
 from .sources.parquet import load_table
@@ -136,11 +148,9 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusive flock (functions/indexcache.py) so concurrent sessions
     over the same fixture serialize instead of racing a rebuild against
     a query (round-9 advice)."""
-    from .operators import dedupindex
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 9)
-    path = _cached_dedup_index(spark, sf_dir)
+    path = _store(spark, sf_dir, "dedup")
     out = dedupindex.query_dedup_index(spark, path, batch, threshold=0.25)
     return out.select(
         "doc_id", "dup_of", F.round("jaccard", 3).alias("jaccard")
@@ -315,8 +325,6 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback; every candidate is verified with Spark's BANDED
     levenshtein (O(k*n), JVM-side). Exact by theorem — the oracle is
     the brute-force join behind two provably lossless prefilters."""
-    from .operators import editdist
-
     docs = load_table(spark, sf_dir, "documents")
     return editdist.edit_distance_pairs(docs, k=_EDIT_K, q=4)
 
@@ -334,8 +342,6 @@ def dedup_edit_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     document with a SMALLER-id neighbour (direct dominance — the
     standard single-pass LSH-dedup policy; operators/components.py owns
     transitive-closure semantics when cluster identity is wanted)."""
-    from .operators import editdist
-
     docs = load_table(spark, sf_dir, "documents")
     kept = editdist.edit_distance_keep_first(docs, k=_EDIT_K, q=4)
     return kept.select("doc_id", "source", "n_chars")
@@ -357,8 +363,6 @@ def edit_distance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(source, source) near-dup governance for the edit-distance
     family — pair counts and distance stats with source pairs counted
     once (source_a <= source_b), the span_dedup_report sibling."""
-    from .operators import editdist
-
     docs = load_table(spark, sf_dir, "documents")
     return editdist.edit_distance_report(docs, k=_EDIT_K, q=4)
 
@@ -382,8 +386,6 @@ def dedup_edit_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the union, but a SIDE-AWARE candidate join (batch prefixes x
     corpus prefixes only), so a 1% batch pays cross-pair work, never
     the corpus x corpus screen."""
-    from .operators import editdist
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 9)
     corpus = docs.filter(F.col("doc_id") % 10 != 9)
@@ -416,29 +418,8 @@ def dedup_edit_normalised(spark: SparkSession, sf_dir: str) -> DataFrame:
     normaliser itself would hash-mismatch; the policy's differentiating
     cases (where normalised != strict answers) are pinned on hand-built
     corpora in tests/test_editdist.py."""
-    from .operators import editdist
-
     docs = load_table(spark, sf_dir, "documents")
     return editdist.edit_distance_pairs(docs, k=_EDIT_K, q=4, normalise=True)
-
-
-def _cached_edit_index(spark: SparkSession, sf_dir: str) -> str:
-    """dedup_edit_indexed's durable prefix store over the corpus slice
-    (doc_id % 10 != 9 — the other slice is the query batch),
-    fingerprint-gated and flock-serialized like the other five."""
-    from .functions import indexcache
-    from .functions.fingerprint import source_fingerprint
-    from .operators import editindex
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    path = indexcache.user_cache_dir("spark_graft_editindex_v1", sf_dir)
-    with indexcache.build_lock(path):
-        if editindex.stored_fingerprint(spark, path) != fp:
-            corpus = load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 10 != 9
-            )
-            editindex.build_edit_index(corpus, path, k=_EDIT_K, q=4, fingerprint=fp)
-    return path
 
 
 @query(
@@ -461,11 +442,9 @@ def dedup_edit_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     DPP-pruned verify read of candidate texts. Same exact result set as
     the index-free edit_screen_batch over the same split, so the two
     share dedup_edit_incremental's oracle."""
-    from .operators import editindex
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 9)
-    path = _cached_edit_index(spark, sf_dir)
+    path = _store(spark, sf_dir, "edit")
     return editindex.query_edit_index(spark, path, batch)
 
 
@@ -498,7 +477,6 @@ def dedup_edit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_edit_apply) under-merges chains a < b < c where a and c are
     individually beyond k but linked through b. Oracle recomputes the
     fixpoint with a recursive CTE over the same verified pair set."""
-    from .operators import editdist
     from .operators.components import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1903,9 +1881,7 @@ def bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_extensions.py). Cache dir user-keyed + check/build
     flock-serialized against concurrent sessions (round-9 advice; see
     functions/indexcache.py)."""
-    from .operators import textindex
-
-    path = _cached_text_index(spark, sf_dir)
+    path = _store(spark, sf_dir, "text")
     return textindex.query_text_index(
         spark, path, ["table", "scan", "merge"], top_n=10
     )
@@ -2523,107 +2499,90 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Durable-store caches shared by the indexed queries and the recovery drill
-# (round-9 advice: user-keyed dirs, build serialized under an exclusive
-# flock — see functions/indexcache.py).
+# Durable-store caches shared by the indexed queries and the recovery drill:
+# name -> (source table, version token, spec, build(table, path, fp)).
+# functions/indexcache.cached_store reuses a store while its stamped
+# fingerprint matches the source and rebuilds it otherwise. The version
+# token pins the artifact LAYOUT (bump it when the shape changes, so an
+# older layout is never silently reused); the edit, dedup and gram stores
+# index the corpus slice doc_id % 10 != 9, the other slice being the
+# query batch.
 # --------------------------------------------------------------------------
 
 
-def _cached_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """The bm25_indexed query's durable index for ``sf_dir``: built once
-    per source CONTENT fingerprint, reused across invocations/sessions."""
-    from .functions import indexcache
-    from .functions.fingerprint import source_fingerprint
-    from .operators import textindex
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    # version token: an index persisted by an OLDER code layout must
-    # never be silently reused — bump when the artifact shape changes
-    path = indexcache.user_cache_dir("spark_graft_textindex_v2", sf_dir)
-    with indexcache.build_lock(path):
-        if textindex.stored_fingerprint(spark, path) != fp:
-            docs = load_table(spark, sf_dir, "documents")
-            textindex.build_text_index(docs, path, fingerprint=fp)
-    return path
+def _corpus(docs: DataFrame) -> DataFrame:
+    return docs.filter(F.col("doc_id") % 10 != 9)
 
 
-def _cached_dedup_index(spark: SparkSession, sf_dir: str) -> str:
-    """dedup_incremental_indexed's durable signature index over the
-    corpus slice (doc_id % 10 != 9 — the other slice is the query
-    batch), fingerprint-gated like the text index."""
-    from .functions import indexcache
-    from .functions.fingerprint import source_fingerprint
-    from .operators import dedupindex
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    path = indexcache.user_cache_dir("spark_graft_dedupindex_v1", sf_dir)
-    with indexcache.build_lock(path):
-        if dedupindex.stored_fingerprint(spark, path) != fp:
-            corpus = load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 10 != 9
-            )
-            dedupindex.build_dedup_index(corpus, path, fingerprint=fp)
-    return path
+def _build_ivf(emb: DataFrame, path: str, fp: str) -> None:
+    # centroid count is capped by build_ivf_index's max_centroids, so the
+    # layout stays bounded under the scale sweep's replicated fixtures
+    index, cents = similarity.build_ivf_index(emb)
+    similarity.save_ivf_index(index, cents, path, fingerprint=fp)
 
 
-def _cached_ivf_store(spark: SparkSession, sf_dir: str) -> str:
-    """A durable IVF posting store over the full embeddings table,
-    fingerprint-stamped via the store's own meta relation. Centroid
-    count is capped by build_ivf_index's max_centroids, so the store's
-    layout stays bounded under the scale sweep's replicated fixtures."""
-    import shutil as _shutil
-
-    from .functions import indexcache
-    from .functions.fingerprint import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    path = indexcache.user_cache_dir("spark_graft_ivfstore_v1", sf_dir)
-    with indexcache.build_lock(path):
-        try:
-            similarity.load_ivf_index(spark, path, expect_fingerprint=fp)
-        except Exception:
-            _shutil.rmtree(path, ignore_errors=True)
-            emb = load_table(spark, sf_dir, "embeddings")
-            index, cents = similarity.build_ivf_index(emb)
-            similarity.save_ivf_index(index, cents, path, fingerprint=fp)
-    return path
+def _build_pq(emb: DataFrame, path: str, fp: str) -> None:
+    # codebooks fit on an id-bounded sample (constant work at every
+    # scale); the encode pass is the corpus-sized cost paid once per
+    # fingerprint
+    books = similarity.pq_train(
+        emb.filter(F.col("vec_id") < 5000), m=4, k_codes=8, iters=1
+    )
+    codes = similarity.pq_encode(emb, books)
+    similarity.save_pq_index(codes, books, path, fingerprint=fp)
 
 
-def _cached_pq_store(spark: SparkSession, sf_dir: str) -> str:
-    """A durable PQ codes store over the full embeddings table. The PQ
-    artifact has no meta relation, so the fingerprint commit record is
-    a sidecar file written AFTER a successful build (a crashed build
-    leaves no record and rebuilds). Codebooks are fit on an id-bounded
-    sample (constant work at every scale); the encode pass is the
-    corpus-sized build cost paid once per fingerprint."""
-    import shutil as _shutil
+_STORES = {
+    "text": (
+        "documents",
+        "spark_graft_textindex_v2",
+        textindex.SPEC,
+        lambda docs, path, fp: textindex.build_text_index(docs, path, fingerprint=fp),
+    ),
+    "dedup": (
+        "documents",
+        "spark_graft_dedupindex_v1",
+        dedupindex.SPEC,
+        lambda docs, path, fp: dedupindex.build_dedup_index(
+            _corpus(docs), path, fingerprint=fp
+        ),
+    ),
+    "edit": (
+        "documents",
+        "spark_graft_editindex_v1",
+        editindex.SPEC,
+        lambda docs, path, fp: editindex.build_edit_index(
+            _corpus(docs), path, k=_EDIT_K, q=4, fingerprint=fp
+        ),
+    ),
+    "gram": (
+        "documents",
+        "spark_graft_gramindex_v1",
+        gramindex.SPEC,
+        lambda docs, path, fp: gramindex.build_gram_index(
+            _corpus(docs), path, n=8, fingerprint=fp
+        ),
+    ),
+    # the normalisation policy is part of the artifact's identity (and
+    # stamped into meta), so the normalised store has its own token
+    "gram_norm": (
+        "documents",
+        "spark_graft_gramindex_norm_v1",
+        gramindex.SPEC,
+        lambda docs, path, fp: gramindex.build_gram_index(
+            _corpus(docs), path, n=8, fingerprint=fp, normalise=True
+        ),
+    ),
+    "ivf": ("embeddings", "spark_graft_ivfstore_v1", similarity.IVF_SPEC, _build_ivf),
+    "pq": ("embeddings", "spark_graft_pqstore_v1", similarity.PQ_SPEC, _build_pq),
+}
 
-    from .operators import storeprotocol
 
-    from .functions import indexcache
-    from .functions.fingerprint import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    path = indexcache.user_cache_dir("spark_graft_pqstore_v1", sf_dir)
-    with indexcache.build_lock(path):
-        fp_file = os.path.join(path, "_fingerprint")
-        stored = None
-        if os.path.exists(fp_file) and not os.path.exists(
-            os.path.join(path, storeprotocol._PENDING)
-        ):
-            with open(fp_file, encoding="utf-8") as f:
-                stored = f.read()
-        if stored != fp:
-            _shutil.rmtree(path, ignore_errors=True)
-            emb = load_table(spark, sf_dir, "embeddings")
-            books = similarity.pq_train(
-                emb.filter(F.col("vec_id") < 5000), m=4, k_codes=8, iters=1
-            )
-            codes = similarity.pq_encode(emb, books)
-            similarity.save_pq_index(codes, books, path)
-            with open(fp_file, "w", encoding="utf-8") as f:
-                f.write(fp)
-    return path
+def _store(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The path of ``sf_dir``'s durable store ``name``, built once per
+    source fingerprint and reused across invocations and sessions."""
+    table, token, spec, build = _STORES[name]
+    return indexcache.cached_store(spark, sf_dir, table, token, spec, build)
 
 
 from .queries import bench_only  # noqa: E402
@@ -2659,9 +2618,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     store."""
     import time as _time
 
-    from .functions import indexcache
-    from .operators import dedupindex, editindex, gramindex, storeprotocol, textindex
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     # absolute-constant batch: replica-0 ids only (< 3000 predates the
@@ -2677,15 +2633,15 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 10 == 9) & (F.col("vec_id") < 3000)
     ).select((F.col("vec_id") + _OFF).alias("vec_id"), "embedding")
 
-    def _drill(store, cached, spec, plan, recover, purged) -> tuple:
+    def _drill(store, plan, recover, purged) -> tuple:
         # stage the torn append exactly as a crash right after the store
         # insert leaves it — the protocol's own marker and ids record,
         # then the store's insert hook — and time the recovery
-        path = cached(spark, sf_dir)
+        path = _store(spark, sf_dir, store)
         with indexcache.build_lock(path):
             batch = plan(spark, path)
             try:
-                storeprotocol.begin(spec, path, batch)
+                storeprotocol.begin(_STORES[store][2], path, batch)
                 batch.insert()
             finally:
                 batch.release()
@@ -2697,8 +2653,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # all-bucket purge + per-bucket df recompute + meta restore
         (
             "text",
-            _cached_text_index,
-            textindex.SPEC,
             lambda sp, p: textindex._plan_append(sp, p, doc_delta),
             textindex.recover_text_index_append,
             lambda r: int(r["buckets_purged"]),
@@ -2706,8 +2660,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # all-band purge + set-bucket purge + meta restore
         (
             "dedup",
-            _cached_dedup_index,
-            dedupindex.SPEC,
             lambda sp, p: dedupindex._plan_append(sp, p, doc_delta),
             dedupindex.recover_dedup_index_append,
             lambda r: int(r["band_leaves_purged"]) + int(r["set_leaves_purged"]),
@@ -2715,8 +2667,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # purge prunes to the batch's recorded clusters
         (
             "ivf",
-            _cached_ivf_store,
-            similarity.IVF_SPEC,
             lambda sp, p: similarity._plan_ivf_append(sp, p, vec_delta),
             similarity.recover_ivf_index_append,
             lambda r: int(r["cluster_leaves_purged"]),
@@ -2724,8 +2674,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one anti-join rewrite of the flat codes store
         (
             "pq",
-            _cached_pq_store,
-            similarity.PQ_SPEC,
             lambda sp, p: similarity._plan_pq_append(sp, p, vec_delta),
             similarity.recover_pq_index_append,
             lambda r: int(bool(r["codes_purged"])),
@@ -2733,8 +2681,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # all-leaf gh purge + meta restore on the span family's store
         (
             "gram",
-            _cached_gram_index,
-            gramindex.SPEC,
             lambda sp, p: gramindex._plan_append(sp, p, doc_delta),
             gramindex.recover_gram_index_append,
             lambda r: int(r["leaves_purged"]),
@@ -2743,8 +2689,6 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # edit-distance family's frozen-order prefix store
         (
             "edit",
-            _cached_edit_index,
-            editindex.SPEC,
             lambda sp, p: editindex._plan_append(sp, p, doc_delta),
             editindex.recover_edit_index_append,
             lambda r: int(r["leaves_purged"]),
@@ -2811,8 +2755,6 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-substring dedup detection, word-8-gram granularity). The
     sub-document complement of the whole-record dedup family — see
     operators/spandedup.py for the 100 TB shuffle accounting."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     return spandedup.duplicate_spans(docs, "text", "doc_id", n=8, min_docs=2)
 
@@ -2849,8 +2791,6 @@ def dedup_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by two input documents loses all its occurrences (junction
     text around removed spans is not re-examined — see
     operators/spandedup.py)."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     return spandedup.strip_duplicate_spans(docs, "text", "doc_id", n=8, min_docs=2)
 
@@ -2920,40 +2860,12 @@ def dedup_spans_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     two batch docs; the corpus is never rewritten. The corpus tokenise
     pass is what a durable gram index amortises — this is the
     index-free form (see operators/spandedup.py)."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 9)
     corpus = docs.filter(F.col("doc_id") % 10 != 9)
     return spandedup.strip_spans_against_corpus(
         batch, corpus, "text", "doc_id", n=8, min_docs=2
     )
-
-
-def _cached_gram_index(
-    spark: SparkSession, sf_dir: str, normalise: bool = False
-) -> str:
-    """dedup_spans_indexed's durable gram store over the corpus slice
-    (doc_id % 10 != 9), fingerprint-gated and flock-serialized like the
-    other four stores. The normalised-policy store lives under its own
-    cache key — the policy is part of the artifact's identity (and
-    stamped into meta, so a cross-policy probe is impossible anyway)."""
-    from .functions import indexcache
-    from .functions.fingerprint import source_fingerprint
-    from .operators import gramindex
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    key = "spark_graft_gramindex_norm_v1" if normalise else "spark_graft_gramindex_v1"
-    path = indexcache.user_cache_dir(key, sf_dir)
-    with indexcache.build_lock(path):
-        if gramindex.stored_fingerprint(spark, path) != fp:
-            corpus = load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 10 != 9
-            )
-            gramindex.build_gram_index(
-                corpus, path, n=8, fingerprint=fp, normalise=normalise
-            )
-    return path
 
 
 @query("dedup_spans_indexed", oracle=_SPAN_INCR_ORACLE)
@@ -2964,11 +2876,9 @@ def dedup_spans_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch pays only batch-sized gram work plus an equi-join against the
     stored hashes; bit-identical to the index-free form, so both pin
     against the same oracle."""
-    from .operators import gramindex
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 9)
-    path = _cached_gram_index(spark, sf_dir)
+    path = _store(spark, sf_dir, "gram")
     return gramindex.strip_spans_with_index(spark, path, batch, min_docs=2)
 
 
@@ -3018,8 +2928,6 @@ def dedup_spans_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence (smallest doc_id) survives, every other occurrence is
     stripped — the policy pair to dedup_spans_apply's remove-all-copies
     (operators/spandedup.py::strip_duplicate_spans_keep_first)."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     return spandedup.strip_duplicate_spans_keep_first(
         docs, "text", "doc_id", n=8, min_docs=2
@@ -3069,8 +2977,6 @@ def span_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     choosing the span policy (remove-all vs keep-one) and thresholds.
     Aggregation-only plan: the covered-position relation reduces to one
     bigint per doc before the per-source rollup."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     staged = spandedup._cached_staged(docs, "text", "doc_id", 8)
     hits = staged.select(
@@ -3201,8 +3107,6 @@ def span_dedup_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a docstring caveat. Reading it next to span_dedup_report
     tells an ingest operator whether one pass suffices or the bounded
     fixpoint (dedup_spans_fixpoint) is worth its extra passes."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     stripped = spandedup.strip_duplicate_spans(docs, "text", "doc_id", 8, 2)
     rdocs = stripped.join(docs.select("doc_id", "source"), "doc_id").select(
@@ -3245,8 +3149,6 @@ def dedup_spans_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNROLLED strip — hash-equal by the operator's determinism contract
     (operators/spandedup.py::strip_duplicate_spans_fixpoint: the early
     exit fires only where a further pass is the identity)."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     return spandedup.strip_duplicate_spans_fixpoint(
         docs, "text", "doc_id", n=8, min_docs=2, max_passes=3
@@ -3304,8 +3206,6 @@ def dedup_spans_normalised(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions from the ORIGINAL text (word count is unchanged by
     normalisation, keeping the position mapping exact). Same plan
     shape as dedup_spans_apply plus one narrow per-row transform."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     return spandedup.strip_duplicate_spans(
         docs, "text", "doc_id", n=8, min_docs=2, normalise=True
@@ -3364,8 +3264,6 @@ def span_dedup_policy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered_ratio(normalised) >= covered_ratio(strict) — the delta is
     exactly the case/punctuation-variant boilerplate the strict policy
     misses."""
-    from .operators import spandedup
-
     docs = load_table(spark, sf_dir, "documents")
     total = docs.agg(
         F.sum(F.size(F.split(F.col("text"), " "))).cast("bigint").alias("words")
@@ -3404,9 +3302,7 @@ def dedup_spans_indexed_normalised(spark: SparkSession, sf_dir: str) -> DataFram
     the shared batch-vs-corpus template with only the gram expression
     swapped — the same one-oracle-two-plans discipline as the strict
     pair, completing the policy x index matrix."""
-    from .operators import gramindex
-
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 9)
-    path = _cached_gram_index(spark, sf_dir, normalise=True)
+    path = _store(spark, sf_dir, "gram_norm")
     return gramindex.strip_spans_with_index(spark, path, batch, min_docs=2)

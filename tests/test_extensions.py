@@ -401,9 +401,10 @@ def test_text_index_fingerprint_rejects_mutated_source(spark, sf_dir, tmp_path):
 
 
 def test_ivf_index_fingerprint_verified_on_load(spark, sf_dir, tmp_path):
-    """load_ivf_index(expect_fingerprint=...) raises on a mismatching
-    (or missing) stamp instead of serving an index built from different
-    source content."""
+    """save_ivf_index's fingerprint stamp reads back through
+    storeprotocol.stored_fingerprint(IVF_SPEC, ...) — the check
+    path-keyed reuse makes before loading — and reads as None on an
+    unstamped artifact; both artifacts load."""
     from dwp_hbase_to_mongo_export_spark.functions.fingerprint import (
         source_fingerprint,
     )
@@ -415,16 +416,38 @@ def test_ivf_index_fingerprint_verified_on_load(spark, sf_dir, tmp_path):
     fp = source_fingerprint(sf_dir + "/embeddings.parquet")
     path = str(tmp_path / "ivf")
     similarity.save_ivf_index(index, cents, path, fingerprint=fp)
-    loaded, _ = similarity.load_ivf_index(spark, path, expect_fingerprint=fp)
+    assert storeprotocol.stored_fingerprint(similarity.IVF_SPEC, spark, path) == fp
+    loaded, _ = similarity.load_ivf_index(spark, path)
     assert loaded.count() == index.count()
-    with pytest.raises(ValueError, match="fingerprint"):
-        similarity.load_ivf_index(spark, path, expect_fingerprint="different")
 
     nofp = str(tmp_path / "ivf2")
     similarity.save_ivf_index(index, cents, nofp)  # unstamped artifact
-    with pytest.raises(ValueError, match="fingerprint"):
-        similarity.load_ivf_index(spark, nofp, expect_fingerprint=fp)
-    similarity.load_ivf_index(spark, nofp)  # no expectation -> loads
+    assert storeprotocol.stored_fingerprint(similarity.IVF_SPEC, spark, nofp) is None
+    similarity.load_ivf_index(spark, nofp)
+
+
+def test_pq_index_fingerprint_stamped_in_meta(spark, sf_dir, tmp_path):
+    """save_pq_index stamps its fingerprint into meta like the IVF
+    store: storeprotocol.stored_fingerprint(PQ_SPEC, ...) reads it back,
+    and reads None on an unstamped artifact; both artifacts load."""
+    from dwp_hbase_to_mongo_export_spark.functions.fingerprint import (
+        source_fingerprint,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
+    books = similarity.pq_train(emb, m=4, k_codes=8, iters=1)
+    codes = similarity.pq_encode(emb, books)
+    fp = source_fingerprint(sf_dir + "/embeddings.parquet")
+    path = str(tmp_path / "pq")
+    similarity.save_pq_index(codes, books, path, fingerprint=fp)
+    assert storeprotocol.stored_fingerprint(similarity.PQ_SPEC, spark, path) == fp
+    loaded, _ = similarity.load_pq_index(spark, path)
+    assert loaded.count() == codes.count()
+
+    nofp = str(tmp_path / "pq2")
+    similarity.save_pq_index(codes, books, nofp)  # unstamped artifact
+    assert storeprotocol.stored_fingerprint(similarity.PQ_SPEC, spark, nofp) is None
+    similarity.load_pq_index(spark, nofp)
 
 
 def test_text_index_governance_detects_contract_violation(spark, sf_dir, tmp_path):

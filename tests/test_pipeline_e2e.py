@@ -183,3 +183,7 @@ def test_cli_main_exports_topic(spark, tmp_path):
     assert report["files"]
     for f in report["files"]:
         assert (tmp_path / "cli" / f).exists()
+    # the data-egress message names the prefix the files were written under
+    bodies = [json.loads(m) for m in report["messages"]]
+    egress = [b for b in bodies if "Records" in b]
+    assert egress == [{"Records": [{"s3": {"object": {"key": f"{out}/db.pipedb.pipecoll-"}}}]}]
